@@ -1,21 +1,22 @@
-"""Study-COUNT scale tier for the reference-parity CLI surface.
+"""Study-COUNT and matrix-WIDTH scale tiers for the reference CLI
+convert modes.
 
 Every query family has measured 10x/100x/1000x row-count vectors, but
-the reference's actual workload scales on a different axis: the NUMBER
-of studies (cmd/cli/main.go walks a directory of study dirs). This
-harness generates a synthetic study tree with N small studies (the
-axis is count, not per-study bytes) and times every CLI mode plus the
-single-job partitioned variant end-to-end:
+the reference's actual workload scales on two other axes: the NUMBER
+of studies (cmd/cli/main.go walks a directory of study dirs) and the
+WIDTH of each CNA matrix (one column per sample; real cBioPortal
+matrices carry hundreds to thousands). This harness generates a
+synthetic study tree per tier and times the convert modes end-to-end:
 
-    python bench_parity.py                 # N=100
-    python bench_parity.py 1000            # N=1000
-    python bench_parity.py 100 1000        # both tiers
+    python bench_parity.py                 # N=100 count tier
+    python bench_parity.py 100 1000 wide   # both count tiers + width
 
-Prints one JSON line per tier and merges all tiers into
-BENCH_parity.json. Study shape: 20 genes x 8 samples CNA + 12-row MAF
-per study — small enough that all measured cost is per-study overhead
-(driver loop, job scheduling, plan analysis), the thing this tier
-exists to expose.
+Count tier N: N studies of 20 genes x 8 samples CNA + a 12-row MAF —
+small enough that all measured cost is per-study overhead (job
+scheduling, plan analysis). Width tier ``wide``: 2 studies of 200
+genes x 10,000 samples CNA + a 2,000-row MAF — the cost a per-column
+plan would pay grows with the sample columns. Prints one JSON line per
+tier and merges all tiers into BENCH_parity.json.
 """
 
 from __future__ import annotations
@@ -45,11 +46,20 @@ VARIANT_CLASSES = (
 )
 
 
-def gen_study_tree(root: str, n_studies: int) -> None:
-    """N studies, each: meta+data CNA (20 genes x 8 samples), meta+data
-    MAF (12 rows), a case_lists/ decoy and a *seg* decoy (the discovery
-    filters must pay their cost at count scale too). Deterministic
-    content — value distribution does not matter on this axis."""
+WIDE_TIER = "wide"
+
+
+def gen_study_tree(
+    root: str,
+    n_studies: int,
+    n_genes: int = 20,
+    n_samples: int = 8,
+    maf_rows: int = 12,
+) -> None:
+    """N studies, each: meta+data CNA (genes x samples), meta+data MAF,
+    a case_lists/ decoy and a *seg* decoy (the discovery filters must
+    pay their cost at count scale too). Deterministic content — value
+    distribution does not matter on these axes."""
     for i in range(n_studies):
         study = f"study_{i:05d}"
         d = os.path.join(root, study)
@@ -60,11 +70,12 @@ def gen_study_tree(root: str, n_studies: int) -> None:
                 "stable_id: cna\n"
                 "data_filename: data_cna.txt\n"
             )
-        samples = [f"S{i:05d}_{j}" for j in range(8)]
+        samples = [f"S{i:05d}_{j}" for j in range(n_samples)]
         with open(os.path.join(d, "data_cna.txt"), "w") as fh:
             fh.write("Hugo_Symbol\tEntrez_Gene_Id\t" + "\t".join(samples) + "\n")
-            for g, (sym, ent) in enumerate(GENES):
-                vals = [str(((i + g + j) % 5) - 2) for j in range(8)]
+            for g in range(n_genes):
+                sym, ent = GENES[g % len(GENES)]
+                vals = [str(((i + g + j) % 5) - 2) for j in range(n_samples)]
                 fh.write(f"{sym}\t{ent}\t" + "\t".join(vals) + "\n")
         with open(os.path.join(d, "meta_mutations.txt"), "w") as fh:
             fh.write(
@@ -78,10 +89,10 @@ def gen_study_tree(root: str, n_studies: int) -> None:
                 "Hugo_Symbol\tEntrez_Gene_Id\tTumor_Sample_Barcode\t"
                 "Variant_Classification\tCenter\n"
             )
-            for r in range(12):
+            for r in range(maf_rows):
                 sym, ent = GENES[(i + r) % len(GENES)]
                 fh.write(
-                    f"{sym}\t{ent}\t{samples[r % 8]}\t"
+                    f"{sym}\t{ent}\t{samples[r % n_samples]}\t"
                     f"{VARIANT_CLASSES[(i + r) % 5]}\tC1\n"
                 )
         with open(os.path.join(d, "case_lists", "cases_all.txt"), "w") as fh:
@@ -90,11 +101,15 @@ def gen_study_tree(root: str, n_studies: int) -> None:
             fh.write("decoy\n")
 
 
-def run_tier(spark, n_studies: int) -> dict:
-    work = tempfile.mkdtemp(prefix=f"parity_{n_studies}_")
+def run_tier(spark, tier: str) -> dict:
+    if tier == WIDE_TIER:
+        n_studies, shape = 2, (200, 10_000, 2_000)
+    else:
+        n_studies, shape = int(tier), (20, 8, 12)
+    work = tempfile.mkdtemp(prefix=f"parity_{tier}_")
     studies = os.path.join(work, "studies")
     t0 = time.perf_counter()
-    gen_study_tree(studies, n_studies)
+    gen_study_tree(studies, n_studies, *shape)
     gen_sec = time.perf_counter() - t0
     timings: dict[str, float] = {}
 
@@ -102,86 +117,53 @@ def run_tier(spark, n_studies: int) -> dict:
         t = time.perf_counter()
         res = fn(*args, **kw)
         timings[name] = round(time.perf_counter() - t, 2)
-        print(
-            f"  [parity n={n_studies}] {name}: {timings[name]}s",
-            file=sys.stderr,
-        )
+        print(f"  [parity {tier}] {name}: {timings[name]}s", file=sys.stderr)
         return res
 
     out_cna = os.path.join(work, "out_cna")
     out_mut = os.path.join(work, "out_mut")
-    out_part = os.path.join(work, "out_part")
-    # sequential loop = the reference's own shape; measured only at
-    # the small tier (4.0s/study: at N=1000 that is ~67 min of pure
-    # driver-loop overhead — the number the mw8 column exists to fix)
-    if n_studies <= 100:
-        s = timed(
-            "convert_cna_with_derived_seq",
-            pipelines.convert_cna, spark, studies,
-            os.path.join(work, "out_cna_seq"), True,
-        )
-        assert len(s.processed) == n_studies, s.failed
-        s = timed(
-            "convert_mutations_seq",
-            pipelines.convert_mutations, spark, studies,
-            os.path.join(work, "out_mut_seq"),
-        )
-        assert len(s.processed) == n_studies, s.failed
     s = timed(
-        "convert_cna_with_derived_mw8",
+        "convert_cna_with_derived",
         pipelines.convert_cna, spark, studies, out_cna, True,
-        max_workers=8,
     )
     assert len(s.processed) == n_studies, s.failed
     s = timed(
-        "convert_mutations_mw8",
+        "convert_mutations",
         pipelines.convert_mutations, spark, studies, out_mut,
-        max_workers=8,
     )
     assert len(s.processed) == n_studies, s.failed
-    timed("combine_cna_with_derived", pipelines.combine_cna, spark, out_cna, True)
-    timed("combine_mutations", pipelines.combine_mutations, spark, out_mut)
-    n = timed(
-        "convert_cna_partitioned_with_derived",
-        pipelines.convert_cna_partitioned, spark, studies, out_part, True,
-    )
-    assert n == n_studies
-    n = timed(
-        "convert_mutations_partitioned",
-        pipelines.convert_mutations_partitioned, spark, studies,
-        os.path.join(work, "out_mpart"),
-    )
-    assert n == n_studies
-    # the single-job modes that KEEP the reference's per-study-file
-    # layout (round-9 verdict #2): partitionBy + driver rename
-    n = timed(
-        "convert_mutations_grouped",
-        pipelines.convert_mutations_grouped, spark, studies,
-        os.path.join(work, "out_mgrp"),
-    )
-    assert n == n_studies
-    # grouped + D4 isolation: the happy-path price is the probe's
-    # per-file count scans on top of the grouped job
-    s = timed(
-        "convert_mutations_grouped_salvage",
-        pipelines.convert_mutations_grouped_salvage, spark, studies,
-        os.path.join(work, "out_msal"),
-    )
-    assert len(s.processed) == n_studies, s.failed
-    n = timed(
-        "convert_cna_grouped_with_derived",
-        pipelines.convert_cna_grouped, spark, studies,
-        os.path.join(work, "out_cgrp"), True,
-    )
-    assert n == n_studies
+    if tier != WIDE_TIER:
+        timed(
+            "combine_cna_with_derived",
+            pipelines.combine_cna, spark, out_cna, True,
+        )
+        timed("combine_mutations", pipelines.combine_mutations, spark, out_mut)
+        # the single-job modes that fuse convert + combine
+        n = timed(
+            "convert_cna_partitioned_with_derived",
+            pipelines.convert_cna_partitioned, spark, studies,
+            os.path.join(work, "out_part"), True,
+        )
+        assert n == n_studies
+        n = timed(
+            "convert_mutations_partitioned",
+            pipelines.convert_mutations_partitioned, spark, studies,
+            os.path.join(work, "out_mpart"),
+        )
+        assert n == n_studies
     shutil.rmtree(work, ignore_errors=True)
     per_study = {
         k: round(v / n_studies, 4) for k, v in timings.items()
         if k.startswith("convert")
     }
+    genes, samples, maf_rows = shape
     return {
-        "metric": "parity_study_count_tier",
+        "metric": "parity_scale_tier",
+        "tier": tier,
         "n_studies": n_studies,
+        "cna_genes": genes,
+        "cna_samples": samples,
+        "maf_rows": maf_rows,
         "gen_sec": round(gen_sec, 2),
         "timings_sec": timings,
         "per_study_sec": per_study,
@@ -190,7 +172,7 @@ def run_tier(spark, n_studies: int) -> dict:
 
 
 def main() -> None:
-    tiers = [int(a) for a in sys.argv[1:]] or [100]
+    tiers = sys.argv[1:] or ["100"]
     spark = get_spark(app_name="bench-parity")
     results = []
     for n in tiers:
@@ -208,7 +190,7 @@ def main() -> None:
         except Exception:
             merged = {}
     for r in results:
-        merged[str(r["n_studies"])] = r
+        merged[r["tier"]] = r
     with open(path, "w") as fh:
         json.dump(merged, fh, indent=1)
 

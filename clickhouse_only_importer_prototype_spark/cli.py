@@ -15,7 +15,18 @@ import time
 from clickhouse_only_importer_prototype_spark.plans import pipelines
 from clickhouse_only_importer_prototype_spark.session import get_spark
 
+# older mode names -> the reference mode that now makes the same call
+ALIASES = {
+    "convert-mutations-grouped": "convert-mutations",
+    "convert-mutations-grouped-salvage": "convert-mutations",
+    "convert-cna-grouped": "convert-cna",
+    "convert-cna-grouped-with-derived": "convert-cna-with-derived",
+}
 MODES = (
+    # the reference's modes. convert-* read every input file in one scan
+    # and write each table once, into the reference's per-file layout
+    # (pipelines.convert_cna / convert_mutations); mutations keep
+    # per-file failure isolation, CNA aborts on the first failure
     "convert-cna",
     "convert-cna-with-derived",
     "convert-mutations",
@@ -28,16 +39,9 @@ MODES = (
     "convert-cna-partitioned",
     "convert-cna-partitioned-with-derived",
     "convert-mutations-partitioned",
-    # beyond the reference: single-job conversion that still writes the
-    # reference's per-study-file layout (partitionBy + driver rename;
-    # see pipelines.convert_mutations_grouped / convert_cna_grouped)
-    "convert-mutations-grouped",
-    # grouped write + the loop mode's per-file failure isolation
-    # (probe -> grouped over healthy files -> loop replay of the
-    # failure manifest; pipelines.convert_mutations_grouped_salvage)
-    "convert-mutations-grouped-salvage",
-    "convert-cna-grouped",
-    "convert-cna-grouped-with-derived",
+    # older names that once selected the single-scan plan (ALIASES);
+    # kept so existing scripts run
+    *ALIASES,
     # beyond the reference: emit the ClickHouse CREATE TABLE statements
     # for the five catalog tables (the DDL the JDBC sink's inserts or an
     # out-of-band parquet load assume on the server)
@@ -86,13 +90,6 @@ def main(argv: list[str] | None = None) -> int:
         "-describe", "--describe", action="store_true",
         help="query mode with -name list: include each query's"
         " one-line description",
-    )
-    parser.add_argument(
-        "-parallelism", "--parallelism", type=int, default=1,
-        help="convert modes: studies processed concurrently (driver"
-        " threads submitting independent Spark jobs; 1 = the"
-        " reference's sequential loop). Outputs are identical; see"
-        " plans/pipelines.py for the failure-semantics note",
     )
     parser.add_argument(
         "-oracle", "--oracle", action="store_true",
@@ -250,9 +247,10 @@ def main(argv: list[str] | None = None) -> int:
     logging.basicConfig(level=logging.INFO, format="%(levelname)s %(message)s")
     start = time.time()
     spark = get_spark(app_name=f"cips-{args.mode}")
+    mode = ALIASES.get(args.mode, args.mode)
     rc = 0
     try:
-        if args.mode in ("convert-cna", "convert-cna-with-derived"):
+        if mode in ("convert-cna", "convert-cna-with-derived"):
             # CNA mode aborts on first failure (cna/transformer.go:30-45):
             # report it as a nonzero exit, not a traceback
             try:
@@ -260,55 +258,37 @@ def main(argv: list[str] | None = None) -> int:
                     spark,
                     args.tsv_dir,
                     args.parquet_dir,
-                    with_derived=args.mode.endswith("with-derived"),
-                    max_workers=args.parallelism,
+                    with_derived=mode.endswith("with-derived"),
                 )
             except Exception as exc:  # noqa: BLE001
                 logging.error("convert-cna aborted: %s", exc)
                 rc = 1
-        elif args.mode.startswith("convert-cna-partitioned"):
+        elif mode.startswith("convert-cna-partitioned"):
             pipelines.convert_cna_partitioned(
                 spark,
                 args.tsv_dir,
                 args.parquet_dir,
-                with_derived=args.mode.endswith("with-derived"),
+                with_derived=mode.endswith("with-derived"),
             )
-        elif args.mode == "convert-mutations-partitioned":
+        elif mode == "convert-mutations-partitioned":
             pipelines.convert_mutations_partitioned(
                 spark, args.tsv_dir, args.parquet_dir
             )
-        elif args.mode == "convert-mutations-grouped":
-            pipelines.convert_mutations_grouped(
-                spark, args.tsv_dir, args.parquet_dir
-            )
-        elif args.mode == "convert-mutations-grouped-salvage":
-            summary = pipelines.convert_mutations_grouped_salvage(
-                spark, args.tsv_dir, args.parquet_dir
-            )
-            rc = 0 if summary.ok else 1
-        elif args.mode.startswith("convert-cna-grouped"):
-            pipelines.convert_cna_grouped(
-                spark,
-                args.tsv_dir,
-                args.parquet_dir,
-                with_derived=args.mode.endswith("with-derived"),
-            )
-        elif args.mode == "convert-mutations":
+        elif mode == "convert-mutations":
             summary = pipelines.convert_mutations(
-                spark, args.tsv_dir, args.parquet_dir,
-                max_workers=args.parallelism,
+                spark, args.tsv_dir, args.parquet_dir
             )
             rc = 0 if summary.ok else 1
-        elif args.mode in ("combine-cna", "combine-cna-with-derived"):
+        elif mode in ("combine-cna", "combine-cna-with-derived"):
             pipelines.combine_cna(
                 spark,
                 args.parquet_dir,
-                with_derived=args.mode.endswith("with-derived"),
+                with_derived=mode.endswith("with-derived"),
                 output=args.output,
             )
-        elif args.mode == "combine-mutations":
+        elif mode == "combine-mutations":
             pipelines.combine_mutations(spark, args.parquet_dir, output=args.output)
-        elif args.mode == "load-clickhouse":
+        elif mode == "load-clickhouse":
             import os as _os
 
             counts = pipelines.load_clickhouse(

@@ -5,18 +5,26 @@ convert-mutations, combine-cna, combine-cna-with-derived,
 combine-mutations.
 
 Dataflow parity (SURVEY §2.10):
-  * D1/D2 one-pass multi-sink fan-out: the reference pipes one TSV scan
-    into 2-3 concurrent parquet writers over Go channels. Spark
-    restatement: one cached DataFrame, 2-3 write actions — the cache
-    replaces the reference's re-use of the in-flight stream. The wide
-    CNA plans are shuffle-free, so even uncached the cost is a rescan,
-    not a recompute of anything expensive.
+  * D1/D2 one-pass multi-sink fan-out: the reference streams each TSV
+    row once, whatever the matrix width, into 2-3 concurrent parquet
+    writers over Go channels. Spark restatement: ONE multi-path scan
+    over every file of the run and ONE write per output table, into
+    the reference's per-file layout (each row carries its file's
+    output base; a partitioned write is renamed to the reference file
+    names). CNA rows are parsed positionally — ``split(value, '\\t')``
+    against a broadcast header manifest — so the plan does not grow
+    with the sample columns; genetic_profile_samples is header
+    metadata, written on the driver. CNA files a raw tab split would
+    parse differently from the csv reader (a quote char, a header line
+    missing or repeated) take the per-file csv writer instead.
   * D3 event-id threading across files: subsumed by the prefix-sum id
     assigner over all files at once (operators/mutation.py) — the
     sequential file loop disappears.
-  * D4 per-file error isolation: try/except per file with a failure
-    manifest (mutations tolerate failures, CNA aborts — matching
-    cna/transformer.go:30-45 vs mutation/transformer.go:37-73).
+  * D4 per-file error isolation: mutations probe every file, write the
+    healthy ones in the grouped job and replay the failures (every
+    file, if the grouped job itself fails) through the per-file writer,
+    reporting a failure manifest; CNA aborts on the first failure —
+    matching cna/transformer.go:30-45 vs mutation/transformer.go:37-73.
   * U1 combine: multi-path parquet read (union-all, duplicates kept)
     with one streaming write — the reference materializes each whole
     table in memory (cna/reader_parquet.go:60-64); Spark never does.
@@ -96,18 +104,30 @@ class RunSummary:
         return not self.failed
 
 
-def _pipeline_pool(max_workers: int):
-    """Thread pool for cross-study concurrency. Spark job submission
-    is thread-safe and the scheduler interleaves concurrent jobs
-    across executor slots; the per-study loop's cost is DRIVER-side
-    blocking on each write action (measured 4.0s/study sequential for
-    CNA-with-derived at the 20-study tier — 2 header reads + 3 write
-    jobs of per-job overhead, not data). Threads overlap those waits;
-    the GIL is irrelevant because the time is spent inside blocking
-    JVM calls."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    return ThreadPoolExecutor(max_workers=max_workers)
+def _write_cna_outputs(
+    spark: SparkSession, item, parquet_dir: str, with_derived: bool
+) -> None:
+    """The per-file CNA write: one csv read of the matrix (the csv
+    reader's quote semantics, one plan column per sample column), each
+    output written as ONE part file. convert_cna sends the files its
+    text scan cannot parse through here; the parity tests use it as the
+    reference layout."""
+    base = output_base(item.path, parquet_dir)
+    df = read_cna_matrix(spark, item.path)
+    if not df.columns:
+        raise ValueError(f"convert_cna: no header in {item.path}")
+    study, profile = item.cancer_study_id, item.genetic_profile_id
+    outputs = [
+        ("genetic_alterations", cna_ops.genetic_alterations(df, study, profile)),
+        (
+            "genetic_profile_samples",
+            cna_ops.genetic_profile_samples(spark, df, study, profile),
+        ),
+    ]
+    if with_derived:
+        outputs.append(("derived", cna_ops.cna_derived(df, study, profile)))
+    for suffix, out in outputs:
+        write_parquet(out, f"{base}_{suffix}.parquet", single_file=True)
 
 
 def convert_cna(
@@ -115,68 +135,98 @@ def convert_cna(
     tsv_dir: str,
     parquet_dir: str,
     with_derived: bool = False,
-    single_file: bool = True,
-    max_workers: int = 1,
 ) -> RunSummary:
-    """convert-cna[-with-derived] (cmd/cli/main.go:111-151).
+    """convert-cna[-with-derived] (cmd/cli/main.go:111-151) into the
+    reference's per-file layout ``<studyDir>_<stem>_{genetic_alterations,
+    genetic_profile_samples[,derived]}.parquet`` (cna/transformer.go:
+    266-297).
 
-    Per study file: one scan -> genetic_alterations +
-    genetic_profile_samples (+ derived). CNA mode aborts on first
-    failure like the reference (cna/transformer.go:30-45).
+    Every matrix is read by ONE multi-path text scan and parsed
+    positionally (_cna_single_job_scan), so the plan is the same size
+    at 8 or 10,000 sample columns. genetic_alterations and derived are
+    each written once for all files (_write_per_base).
+    genetic_profile_samples is header metadata with exactly one row per
+    file, written driver-side by pyarrow: a Spark job per 1-row frame
+    costs seconds each. Zero-data-row matrices get schema-only
+    alterations/derived parquet and their sample-list row
+    (cna/transformer.go:498-508).
 
-    ``max_workers`` > 1 runs studies concurrently (outputs are
-    independent per study, so results are identical to sequential;
-    pinned by tests). Abort-on-first-failure still holds: the first
-    study error cancels all not-yet-started studies and re-raises —
-    in-flight studies finish their current write, matching the
-    reference's already-written-files-stay posture.
-    """
+    Files the text scan cannot parse the csv way (a quote char, or a
+    header line that is missing or repeated) go through the per-file
+    csv writer (_write_cna_outputs) first. CNA posture: abort on first
+    failure (cna/transformer.go:30-45) — an empty file, a duplicate
+    output base or a failed write raises. Row parity with the per-file
+    writer is pinned by test."""
+    import pyarrow as pa
+    import pyarrow.parquet as pa_pq
+    from pyspark.sql import functions as F
+
     inputs = discover_cna_files(tsv_dir)
     logger.info("found %d CNA files", len(inputs))
-    summary = RunSummary()
     os.makedirs(parquet_dir, exist_ok=True)
-
-    def one(item) -> str:
-        base = output_base(item.path, parquet_dir)
-        df = read_cna_matrix(spark, item.path)
-        ga = cna_ops.genetic_alterations(
-            df, item.cancer_study_id, item.genetic_profile_id
+    _check_unique_bases("convert_cna", inputs)
+    scanned, csv_route, gps_rows, data = _cna_single_job_scan(spark, inputs)
+    for item in csv_route:
+        logger.info("converting %s with the per-file csv reader", item.path)
+        _write_cna_outputs(spark, item, parquet_dir, with_derived)
+    if not scanned:
+        return RunSummary(processed=[it.path for it in inputs])
+    sample_slice = F.slice(
+        F.col("__cells"), cna_ops.FIRST_SAMPLE_IDX + 1, F.col("__n")
+    )
+    gene = F.coalesce(F.col("__cells")[0], F.lit(""))
+    ga = data.select(
+        "__base",
+        F.col("__study").alias("CANCER_STUDY"),
+        F.col("__profile").alias("GENETIC_PROFILE"),
+        gene.alias("GENE_SYMBOL"),
+        F.array_join(sample_slice, ",").alias("VALUES"),
+    )
+    tables = [("genetic_alterations", ga, ["GENE_SYMBOL", "VALUES"])]
+    if with_derived:
+        exploded = data.select(
+            "__base",
+            "__study",
+            "__profile",
+            "__sample_ids",
+            gene.alias("__gene"),
+            F.posexplode(sample_slice).alias("__pos", "__alt"),
         )
-        gps = cna_ops.genetic_profile_samples(
-            spark, df, item.cancer_study_id, item.genetic_profile_id
+        derived = exploded.select(
+            "__base",
+            F.element_at(
+                F.col("__sample_ids"), F.col("__pos") + 1
+            ).alias("SAMPLE_ID"),
+            F.col("__study").alias("CANCER_STUDY"),
+            F.col("__gene").alias("GENE_SYMBOL"),
+            F.col("__profile").alias("GENETIC_PROFILE"),
+            F.col("__alt").alias("ALTERATION"),
         )
-        write_parquet(
-            ga, f"{base}_genetic_alterations.parquet", single_file=single_file
+        # ALTERATION in the sort key: a duplicated gene row with
+        # different values would otherwise tie on (gene, sample) and
+        # leave file byte-order run-dependent
+        tables.append(
+            ("derived", derived, ["GENE_SYMBOL", "SAMPLE_ID", "ALTERATION"])
         )
-        write_parquet(
-            gps, f"{base}_genetic_profile_samples.parquet", single_file=single_file
+    bases = [output_base(it.path, "") for it in scanned]
+    _write_per_base(spark, tables, bases, parquet_dir, ".grouped_staging_cna")
+    gps_schema = pa.schema(
+        [
+            pa.field(n, pa.string())
+            for n in ("CANCER_STUDY", "GENETIC_PROFILE", "ORDERED_SAMPLE_LIST")
+        ]
+    )
+    for base, row in zip(bases, gps_rows):
+        dest = os.path.join(
+            parquet_dir, f"{base}_genetic_profile_samples.parquet"
         )
-        if with_derived:
-            derived = cna_ops.cna_derived(
-                df, item.cancer_study_id, item.genetic_profile_id
-            )
-            write_parquet(
-                derived, f"{base}_derived.parquet", single_file=single_file
-            )
-        return item.path
-
-    if max_workers <= 1:
-        for item in inputs:
-            summary.processed.append(one(item))
-        return summary
-    from concurrent.futures import as_completed
-
-    with _pipeline_pool(max_workers) as pool:
-        futures = {pool.submit(one, item): item for item in inputs}
-        try:
-            for fut in as_completed(futures):
-                summary.processed.append(fut.result())
-        finally:
-            for fut in futures:
-                fut.cancel()
-    # deterministic report order regardless of completion order
-    summary.processed.sort()
-    return summary
+        shutil.rmtree(dest, ignore_errors=True)
+        os.makedirs(dest)
+        pa_pq.write_table(
+            pa.Table.from_pylist([dict(zip(gps_schema.names, row))], gps_schema),
+            os.path.join(dest, "part-00000.parquet"),
+        )
+    return RunSummary(processed=[it.path for it in inputs])
 
 
 def _write_mutation_outputs(
@@ -184,19 +234,16 @@ def _write_mutation_outputs(
     item,
     parquet_dir: str,
     start: int,
-    single_file: bool = True,
 ) -> int:
-    """The per-file mutation write shared by the sequential loop, the
-    parallel phase-B, and the salvage replay (one implementation so
-    id/cleanup/layout semantics cannot drift): read the MAF, assign
-    ids from ``start``, write both per-study outputs (ONE part file
-    each when ``single_file``). Returns the next free id (an empty
-    MAF keeps the counter unchanged — must not reset). On failure,
-    partial outputs are removed (a stale mutation_event parquet would
-    enter the combine glob with an id range another file may
-    legitimately hold) and the error re-raised; the cached frame is
-    unpersisted on EVERY path so a failed file never pins executor
-    storage for the session."""
+    """The per-file mutation write: read the MAF, assign ids from
+    ``start``, write both outputs as ONE part file each. convert_mutations
+    replays failed files through here; the parity tests use it as the
+    reference layout. Returns the next free id (an empty MAF keeps the
+    counter unchanged — must not reset). On failure, partial outputs
+    are removed (a stale mutation_event parquet would enter the combine
+    glob with an id range another file may legitimately hold) and the
+    error re-raised; the cached frame is unpersisted on EVERY path so a
+    failed file never pins executor storage for the session."""
     base = output_base(item.path, parquet_dir)
     out_paths = (f"{base}_mutation_event.parquet", f"{base}_mutation.parquet")
     try:
@@ -204,16 +251,14 @@ def _write_mutation_outputs(
         with_ids = mut_ops.with_sequential_ids(df, start=start).persist()
         try:
             write_parquet(
-                mut_ops.mutation_event(with_ids),
-                out_paths[0],
-                single_file=single_file,
+                mut_ops.mutation_event(with_ids), out_paths[0], single_file=True
             )
             write_parquet(
                 mut_ops.mutation(
                     with_ids, item.cancer_study_id, item.genetic_profile_id
                 ),
                 out_paths[1],
-                single_file=single_file,
+                single_file=True,
             )
             return mut_ops.next_event_id(with_ids, start=start)
         finally:
@@ -225,29 +270,24 @@ def _write_mutation_outputs(
 
 
 def _probe_maf_counts(
-    spark: SparkSession,
-    inputs: list,
-    max_workers: int,
-    failed: dict[str, str],
+    spark: SparkSession, inputs: list, failed: dict[str, str]
 ) -> dict[str, int]:
-    """Phase-A probe shared by convert_mutations(max_workers>1) and
-    the salvage mode: one column-pruned count scan per file via driver
-    threads. A file failing its read lands in ``failed`` and consumes
-    no ids — exactly the sequential loop's read-failure semantics."""
-    from concurrent.futures import as_completed
+    """Probe phase of convert_mutations: one column-pruned count scan
+    per file, on driver threads (the jobs are independent and their
+    cost is per-job scheduling, not data). It is the read the per-file
+    writer performs, so a probe failure IS a per-file read failure: the
+    file lands in ``failed`` and consumes no ids."""
+    from concurrent.futures import ThreadPoolExecutor
 
     counts: dict[str, int] = {}
-    with _pipeline_pool(max_workers) as pool:
-
-        def count_one(item) -> tuple[str, int]:
-            return item.path, read_maf(spark, item.path).count()
-
-        futures = {pool.submit(count_one, it): it for it in inputs}
-        for fut in as_completed(futures):
-            item = futures[fut]
+    with ThreadPoolExecutor(max_workers=8) as pool:
+        futures = [
+            (it, pool.submit(lambda p: read_maf(spark, p).count(), it.path))
+            for it in inputs
+        ]
+        for item, fut in futures:
             try:
-                path, n = fut.result()
-                counts[path] = n
+                counts[item.path] = fut.result()
             except Exception as exc:  # noqa: BLE001 — D4 isolation
                 logger.error("failed to read %s: %s", item.path, exc)
                 failed[item.path] = str(exc)
@@ -259,81 +299,64 @@ def convert_mutations(
     tsv_dir: str,
     parquet_dir: str,
     start_event_id: int = 0,
-    single_file: bool = True,
-    max_workers: int = 1,
 ) -> RunSummary:
-    """convert-mutations (cmd/cli/main.go:396-424).
+    """convert-mutations (cmd/cli/main.go:396-424) into the reference's
+    per-file layout ``<studyDir>_<stem>_mutation[_event].parquet``, with
+    per-file failure isolation (D4, mutation/transformer.go:37-73).
 
-    Event ids are dense and gapless across all files in sorted-path
-    order (prefix-sum assigner) — the reference's sequential id
-    threading without the sequential execution. Per-file failures are
-    tolerated and reported (mutation/transformer.go:37-73).
+    Event ids are dense and gapless across all files in discovery order
+    (prefix-sum assigner) — the reference's sequential id threading
+    without the sequential execution. Three phases:
 
-    ``max_workers`` > 1 switches to a two-phase prefix-sum: phase A
-    counts every file's rows concurrently (one column-pruned scan
-    each), the driver prefix-sums the counts in sorted-path order into
-    per-file start ids (id assignment identical to sequential — pinned
-    by tests), then phase B assigns ids and writes both outputs
-    concurrently. Failure semantics per phase: a file failing its READ
-    (phase A) consumes no ids, exactly like sequential; a file failing
-    its WRITE (phase B) has already reserved its id range, so later
-    files keep their (still unique, still sorted) ids and the range is
-    left unused — sequential mode would reuse it. Ids remain UNIQUE
-    and ordered in both modes; only gaplessness-after-mid-run-write-
-    failure differs, and the failure manifest records exactly which
-    files to replay.
-    """
+      1. **Probe** — _probe_maf_counts. Failing files go to the failure
+         manifest (``RunSummary.failed``) and consume no ids, as in a
+         per-file loop.
+      2. **Grouped write** — the healthy files as one plan
+         (_write_mutations_grouped): one scan per header group, one
+         shuffle and one write per table, whatever the file count.
+      3. **Replay** — each failed file retried through the per-file
+         writer (_write_mutation_outputs; partial outputs removed on
+         failure). A deterministic failure stays in the manifest; a
+         transient one recovers and takes ids PAST the healthy range
+         (unique and ordered, gapless within each phase) — splicing it
+         back into discovery order would rewrite every later file.
+
+    If the grouped write itself raises, every file is replayed through
+    the per-file writer in discovery order from ``start_event_id``, so a
+    file that poisons the grouped job costs only its own outputs and
+    the ids are those of a per-file loop. Duplicate output bases are
+    refused up front (a replayed file must never clobber a healthy
+    output). Returns the processed files and the failure manifest."""
     inputs = discover_mutation_files(tsv_dir)
     logger.info("found %d mutation files", len(inputs))
     summary = RunSummary()
     os.makedirs(parquet_dir, exist_ok=True)
-
-    def write_one(item, start: int) -> int | None:
-        """Assign ids from ``start``, write both outputs; returns the
-        next free id on success (None on failure — the caller decides
-        whether the range was reserved)."""
+    _check_unique_bases("convert_mutations", inputs)
+    counts = _probe_maf_counts(spark, inputs, summary.failed)
+    healthy = [it for it in inputs if it.path in counts]
+    replay = [it for it in inputs if it.path in summary.failed]
+    next_id = start_event_id + sum(counts.values())
+    if healthy:
         try:
-            nxt = _write_mutation_outputs(
-                spark, item, parquet_dir, start, single_file=single_file
+            _write_mutations_grouped(spark, healthy, parquet_dir, start_event_id)
+            summary.processed = [it.path for it in healthy]
+        except Exception:  # noqa: BLE001 — D4 isolation
+            logger.exception(
+                "grouped mutation write failed; replaying every file"
+                " through the per-file writer"
             )
-            summary.processed.append(item.path)
-            return nxt
-        except Exception as exc:  # noqa: BLE001 — D4 per-file isolation
+            replay, next_id = inputs, start_event_id
+            summary.failed.clear()
+    for item in replay:  # discovery order, deterministic replay ids
+        try:
+            next_id = _write_mutation_outputs(spark, item, parquet_dir, next_id)
+        except Exception as exc:  # noqa: BLE001 — D4 isolation
             logger.error("failed to process %s: %s", item.path, exc)
             summary.failed[item.path] = str(exc)
-            return None
-
-    if max_workers <= 1:
-        next_id = start_event_id
-        for item in inputs:
-            nxt = write_one(item, next_id)
-            if nxt is not None:  # a failed file consumes no ids
-                next_id = nxt
-    else:
-        from concurrent.futures import as_completed
-
-        # phase A: concurrent row counts (column-pruned scans);
-        # read errors recorded here consume no ids
-        counts = _probe_maf_counts(spark, inputs, max_workers, summary.failed)
-        # driver prefix-sum in sorted-path order (inputs are sorted by
-        # discovery) -> identical id assignment to the sequential loop
-        starts: dict[str, int] = {}
-        nid = start_event_id
-        for item in inputs:
-            if item.path in counts:
-                starts[item.path] = nid
-                nid += counts[item.path]
-        # phase B: concurrent assign + write with reserved id ranges
-        with _pipeline_pool(max_workers) as pool:
-            wfuts = [
-                pool.submit(write_one, it, starts[it.path])
-                for it in inputs
-                if it.path in starts
-            ]
-            for fut in as_completed(wfuts):
-                fut.result()  # write_one handles its own isolation
-        summary.processed.sort()
-
+            continue
+        summary.failed.pop(item.path, None)
+        summary.processed.append(item.path)
+    summary.processed.sort()
     if summary.failed:
         logger.error(
             "%d/%d mutation files failed: %s",
@@ -345,83 +368,84 @@ def convert_mutations(
 
 
 def _cna_single_job_scan(
-    spark: SparkSession, tsv_dir: str
-) -> tuple[list, list[tuple], DataFrame | None]:
-    """Shared scaffold of the single-job CNA modes: discovery, driver-
-    side header parse (manifest + per-study sample lists), ONE
-    multi-path ``spark.read.text`` scan, broadcast attribution join,
-    the header/quote guard aggregation, and positional cell parsing.
-    Returns ``(inputs, gps_rows, data)`` where ``gps_rows`` is aligned
-    with ``inputs`` (one (study, profile, ordered_sample_list) per
-    file) and ``data`` carries one row per data line with
-    __study/__profile/__base/__sample_ids/__n/__cells. See
-    convert_cna_partitioned for the full design rationale."""
+    spark: SparkSession, inputs: list
+) -> tuple[list, list, list[tuple], DataFrame | None]:
+    """Shared scaffold of the single-scan CNA plans: driver-side header
+    parse (manifest + per-study sample lists), ONE multi-path
+    ``spark.read.text`` scan, broadcast attribution join, a guard
+    aggregation, and positional cell parsing.
+
+    Returns ``(scanned, csv_route, gps_rows, data)``. ``data`` carries
+    one row per data line of the ``scanned`` files with
+    __study/__profile/__base/__sample_ids/__n/__cells; ``gps_rows`` is
+    aligned with ``scanned`` (one (study, profile, ordered_sample_list)
+    per file). ``csv_route`` are the files a raw ``split(value, '\\t')``
+    would parse differently from the csv reader: a quote char in any
+    line (the csv reader applies quote='"'), or a header line that is
+    unparseable or does not occur exactly once (header rows are removed
+    by byte-match, and the csv reader keeps a repeated header row as
+    data). Both lists keep discovery order. See convert_cna_partitioned
+    for the design rationale."""
     from pyspark.sql import functions as F
 
     from clickhouse_only_importer_prototype_spark.sources.tsv import (
         header_line_and_names,
     )
 
-    inputs = discover_cna_files(tsv_dir)
-    logger.info("found %d CNA files (single-job mode)", len(inputs))
-    if not inputs:
-        return [], [], None
-    manifest_rows = []
-    gps_rows = []
+    csv_paths: set[str] = set()
+    manifest: dict[str, tuple] = {}  # path -> manifest row
     for item in inputs:
         parsed = header_line_and_names(item.path)
-        if parsed is None:
-            raise ValueError(
-                f"single-job CNA mode: no parseable header in"
-                f" {item.path} (empty or quoted header)"
-            )
+        if parsed is None:  # quoted or empty header
+            csv_paths.add(item.path)
+            continue
         raw, names = parsed
         sample_ids = [
             f"{item.cancer_study_id}_{c}"
             for c in names[cna_ops.FIRST_SAMPLE_IDX:]
         ]
-        manifest_rows.append(
-            (
-                _spark_file_uri(item.path),
-                item.cancer_study_id,
-                item.genetic_profile_id,
-                os.path.basename(output_base(item.path, "")),
-                raw,
-                sample_ids,
-            )
+        manifest[item.path] = (
+            _spark_file_uri(item.path),
+            item.cancer_study_id,
+            item.genetic_profile_id,
+            output_base(item.path, ""),
+            raw,
+            sample_ids,
         )
-        gps_rows.append(
-            (
-                item.cancer_study_id,
-                item.genetic_profile_id,
-                ",".join(sample_ids),
-            )
-        )
+
+    def route(paths):
+        scanned = [it for it in inputs if it.path not in paths]
+        return scanned, [it for it in inputs if it.path in paths]
+
+    scanned, csv_route = route(csv_paths)
+    logger.info(
+        "single-scan CNA plan: %d files, %d via csv", len(scanned), len(csv_route)
+    )
+    if not scanned:
+        return [], csv_route, [], None
     mf = arrow_local_df(
         spark,
-        manifest_rows,
+        list(manifest.values()),
         "__file string, __study string, __profile string,"
         " __base string, __header string, __sample_ids array<string>",
     )
-    lines = spark.read.text([it.path for it in inputs]).select(
-        F.col("value"), F.input_file_name().alias("__file")
-    )
-    tagged = lines.join(F.broadcast(mf), "__file", "left")
-    missing = F.col("__study").isNull()
+
+    def tagged_scan(items):
+        lines = spark.read.text([it.path for it in items]).select(
+            F.col("value"), F.input_file_name().alias("__file")
+        )
+        return lines.join(F.broadcast(mf), "__file", "left")
+
+    tagged = tagged_scan(scanned)
     is_header = F.col("value") == F.col("__header")
-    # guard pass: every file must contribute exactly one header-match
-    # (and be present in the manifest) before anything is written, and
-    # no line may contain the csv quote char — this mode parses rows
-    # with a raw split(value, '\t'), which has NO quote semantics,
-    # while the per-study csv mode applies the default quote='"'; a
-    # quoted cell would silently diverge between the two modes, so it
-    # fails loud instead (the header itself is already quote-free:
-    # header_line_and_names rejects quoted headers up front)
-    bad = (
+    # guard pass, before anything is written: every scanned line must be
+    # attributed to a manifest file; per file, count header matches and
+    # lines containing the csv quote char
+    flagged = (
         tagged.groupBy("__file")
         .agg(
             F.sum(is_header.cast("int")).alias("n_hdr"),
-            F.max(missing.cast("int")).alias("n_miss"),
+            F.max(F.col("__study").isNull().cast("int")).alias("n_miss"),
             F.sum(F.col("value").contains('"').cast("int")).alias("n_quote"),
         )
         .where(
@@ -429,19 +453,29 @@ def _cna_single_job_scan(
             | (F.col("n_miss") > 0)
             | (F.col("n_quote") > 0)
         )
-        .limit(5)
         .collect()
     )
-    if bad:
+    unattributed = [r["__file"] for r in flagged if r["n_miss"]]
+    if unattributed:
         raise ValueError(
-            "single-job CNA mode: header/quote guard failed for "
-            + ", ".join(
-                f"{r['__file']} (header_matches={r['n_hdr']},"
-                f" quote_lines={r['n_quote']})"
-                for r in bad
-            )
-            + " — files with quoted cells need the per-study csv mode"
+            "single-scan CNA plan: scan file(s) missing from the header"
+            f" manifest: {unattributed[:5]}"
         )
+    if flagged:
+        uris = {r["__file"] for r in flagged}
+        csv_paths |= {
+            it.path for it in scanned if _spark_file_uri(it.path) in uris
+        }
+        scanned, csv_route = route(csv_paths)
+        if not scanned:
+            return [], csv_route, [], None
+        tagged = tagged_scan(scanned)
+    gps_rows = [
+        (study, profile, ",".join(samples))
+        for _, study, profile, _, _, samples in (
+            manifest[it.path] for it in scanned
+        )
+    ]
     n_samples = F.size("__sample_ids")
     parts = F.split(F.col("value"), "\t")
     # pad to header width: the csv path yields NULL (-> '') for short
@@ -467,7 +501,7 @@ def _cna_single_job_scan(
         n_samples.alias("__n"),
         padded.alias("__cells"),
     )
-    return inputs, gps_rows, data
+    return scanned, csv_route, gps_rows, data
 
 
 def convert_cna_partitioned(
@@ -485,8 +519,8 @@ def convert_cna_partitioned(
     one csv plan per study and unioned 1000 branches per table — each
     branch is its own scan node and codegen unit, so the write stages
     carried megabyte task binaries and 3x1000 codegen compilations;
-    measured 533.9s for 1000 small studies, SLOWER than the
-    max_workers=8 driver loop (229s). A CNA matrix's header is
+    measured 533.9s for 1000 small studies, SLOWER than a per-study
+    driver loop on 8 threads (229s). A CNA matrix's header is
     per-study (sample columns differ), so same-header csv batching
     (the mutations mode's trick, 29.6s at 1000 studies) cannot apply —
     but the TRANSFORMS are positional, so the header never needs to
@@ -507,10 +541,11 @@ def convert_cna_partitioned(
 
     Header-row removal is by byte-match against the file's raw header
     line (a line-oriented scan has no 'first line of its file' marker
-    at task level); a guard aggregation counts header matches per file
-    first and raises if any file has != 1 — a data row forged to
-    byte-equal the header fails LOUD, never silently drops (the csv
-    path would keep such a row; divergence documented here).
+    at task level); a guard aggregation counts header matches and
+    quote chars per file first. A file the raw tab split would parse
+    differently from the csv reader (quotes, a header line missing or
+    repeated) raises here — convert_cna sends such files through the
+    per-file csv writer instead.
 
     Returns the number of study files planned. CNA posture: abort on
     first failure (unreadable/headerless file raises).
@@ -521,7 +556,17 @@ def convert_cna_partitioned(
         GENETIC_PROFILE_SAMPLES_SCHEMA,
     )
 
-    inputs, gps_rows, data = _cna_single_job_scan(spark, tsv_dir)
+    inputs, csv_route, gps_rows, data = _cna_single_job_scan(
+        spark, discover_cna_files(tsv_dir)
+    )
+    if csv_route:
+        raise ValueError(
+            "convert_cna_partitioned: quoted cells or a missing/repeated"
+            " header line in "
+            + ", ".join(it.path for it in csv_route[:5])
+            + " — a raw tab split has no csv quote semantics; convert"
+            " these with convert_cna"
+        )
     if not inputs:
         return 0
     # partition by AUXILIARY copies of the keys: empty-string values
@@ -600,132 +645,83 @@ def convert_cna_partitioned(
     return len(inputs)
 
 
-def convert_cna_grouped(
+def _write_mutations_grouped(
     spark: SparkSession,
-    tsv_dir: str,
+    inputs: list,
     parquet_dir: str,
-    with_derived: bool = False,
-) -> int:
-    """Single-job CNA conversion that writes the REFERENCE's
-    per-study-file layout (``<studyDir>_<stem>_{genetic_alterations,
-    genetic_profile_samples[,derived]}.parquet`` —
-    cna/transformer.go:266-297): the CNA twin of
-    convert_mutations_grouped (round-9 verdict #2).
-
-    Same plan as convert_cna_partitioned (ONE text scan, positional
-    parse, broadcast header manifest), but alterations/derived are
-    hive-partitioned by the per-file output base and promoted to the
-    reference filenames by a driver rename pass — one shuffle + one
-    write stage per table regardless of study count, vs the loop
-    mode's 3 write jobs per study. genetic_profile_samples is pure
-    header metadata with EXACTLY one row per file: all N files are
-    written driver-side via pyarrow (milliseconds each; a Spark job
-    per 1-row frame is the ~5s local-relation tax times N — the
-    32,000-task write stage round 9 killed, in a different costume).
-
-    Zero-data-row matrices produce schema-only alterations/derived
-    parquet (like the loop mode's empty Spark write); their sample
-    list row still exists (header metadata needs no data rows —
-    cna/transformer.go:498-508). Duplicate output bases refused.
-    Layout + row parity vs the loop mode pinned by test. CNA posture:
-    abort on first failure. Returns the number of files planned."""
-    import shutil
-
-    import pyarrow as pa
-    import pyarrow.parquet as pa_pq
+    start_event_id: int,
+) -> None:
+    """Grouped write of convert_mutations: ``inputs`` as one plan
+    (_mutations_single_job_frames: header-group scans, discovery-order
+    ids, broadcast attribution), each table written once into the
+    per-file layout (_write_per_base). Files with zero data rows get
+    schema-only outputs, as the per-file writer's empty write would.
+    All-or-nothing: convert_mutations owns per-file isolation."""
     from pyspark.sql import functions as F
 
-    inputs, gps_rows, data = _cna_single_job_scan(spark, tsv_dir)
-    if not inputs:
-        return 0
-    bases = _check_unique_bases("convert_cna_grouped", inputs)
-    os.makedirs(parquet_dir, exist_ok=True)
-    staging = os.path.join(parquet_dir, ".grouped_staging_cna")
-    shutil.rmtree(staging, ignore_errors=True)
-    nparts = max(
-        1, min(len(inputs), spark.sparkContext.defaultParallelism * 4)
+    joined_frames = _mutations_single_job_frames(spark, inputs, start_event_id)
+    ev_all = _balanced_union(
+        [mut_ops.mutation_event(j, keep=("__base",)) for j in joined_frames]
     )
-    sample_slice = F.slice(
-        F.col("__cells"), cna_ops.FIRST_SAMPLE_IDX + 1, F.col("__n")
-    )
-    ga = data.select(
-        "__base",
-        F.col("__study").alias("CANCER_STUDY"),
-        F.col("__profile").alias("GENETIC_PROFILE"),
-        F.coalesce(F.col("__cells")[0], F.lit("")).alias("GENE_SYMBOL"),
-        F.array_join(sample_slice, ",").alias("VALUES"),
-    )
-    tables = [("genetic_alterations", ga, ["GENE_SYMBOL", "VALUES"])]
-    if with_derived:
-        exploded = data.select(
-            "__base",
-            "__study",
-            "__profile",
-            "__sample_ids",
-            F.coalesce(F.col("__cells")[0], F.lit("")).alias("__gene"),
-            F.posexplode(sample_slice).alias("__pos", "__alt"),
-        )
-        derived = exploded.select(
-            "__base",
-            F.element_at(
-                F.col("__sample_ids"), F.col("__pos") + 1
-            ).alias("SAMPLE_ID"),
-            F.col("__study").alias("CANCER_STUDY"),
-            F.col("__gene").alias("GENE_SYMBOL"),
-            F.col("__profile").alias("GENETIC_PROFILE"),
-            F.col("__alt").alias("ALTERATION"),
-        )
-        # ALTERATION in the sort key: a duplicated gene row with
-        # different values would otherwise tie on (gene, sample) and
-        # leave file byte-order run-dependent
-        tables.append(
-            ("derived", derived, ["GENE_SYMBOL", "SAMPLE_ID", "ALTERATION"])
-        )
-    for suffix, df, sort_cols in tables:
-        stage_dir = os.path.join(staging, suffix)
-        (
-            df.repartition(nparts, F.col("__base"))
-            .sortWithinPartitions("__base", *sort_cols)
-            .write.mode("overwrite")
-            .partitionBy("__base")
-            .parquet(stage_dir)
-        )
-        _promote_partition_dirs(
-            stage_dir,
-            parquet_dir,
-            bases,
-            suffix,
-            _arrow_schema_without_base(df),
-        )
-    shutil.rmtree(staging, ignore_errors=True)
-    gps_schema = pa.schema(
+    mut_all = _balanced_union(
         [
-            pa.field(n, pa.string())
-            for n in (
-                "CANCER_STUDY",
-                "GENETIC_PROFILE",
-                "ORDERED_SAMPLE_LIST",
+            mut_ops.mutation(
+                j, F.col("__study"), F.col("__profile"), keep=("__base",)
             )
+            for j in joined_frames
         ]
     )
-    for base, (study, profile, osl) in zip(bases, gps_rows):
-        dest = os.path.join(
-            parquet_dir, f"{base}_genetic_profile_samples.parquet"
-        )
-        shutil.rmtree(dest, ignore_errors=True)
-        os.makedirs(dest, exist_ok=True)
-        pa_pq.write_table(
-            pa.table(
-                {
-                    "CANCER_STUDY": [study],
-                    "GENETIC_PROFILE": [profile],
-                    "ORDERED_SAMPLE_LIST": [osl],
-                },
-                schema=gps_schema,
-            ),
-            os.path.join(dest, "part-00000.parquet"),
-        )
-    return len(inputs)
+    _write_per_base(
+        spark,
+        [
+            ("mutation_event", ev_all, [mut_ops.EVENT_ID]),
+            ("mutation", mut_all, [mut_ops.EVENT_ID]),
+        ],
+        [output_base(it.path, "") for it in inputs],
+        parquet_dir,
+        ".grouped_staging",
+    )
+
+
+def _write_per_base(
+    spark: SparkSession,
+    tables: list[tuple[str, DataFrame, list[str]]],
+    bases: list[str],
+    parquet_dir: str,
+    staging_name: str,
+) -> None:
+    """Write each ``(suffix, df, sort_cols)`` table ONCE into the
+    reference's per-file layout ``<base>_<suffix>.parquet``; ``df``
+    carries each row's output base in ``__base``. ``repartition(n,
+    __base)`` confines each file's rows to one task, so every output is
+    one part file like the per-file writer's ``coalesce(1)``;
+    ``sortWithinPartitions`` makes file content order deterministic. A
+    staged ``partitionBy(__base)`` write plus a driver rename pass
+    (_promote_partition_dirs) lands the reference names: one shuffle
+    and one write stage per table, whatever the file count. The staging
+    dir is removed on every path."""
+    staging = os.path.join(parquet_dir, staging_name)
+    shutil.rmtree(staging, ignore_errors=True)
+    nparts = max(1, min(len(bases), spark.sparkContext.defaultParallelism * 4))
+    try:
+        for suffix, df, sort_cols in tables:
+            stage_dir = os.path.join(staging, suffix)
+            write_parquet(
+                df.repartition(nparts, "__base").sortWithinPartitions(
+                    "__base", *sort_cols
+                ),
+                stage_dir,
+                partition_by=["__base"],
+            )
+            _promote_partition_dirs(
+                stage_dir,
+                parquet_dir,
+                bases,
+                suffix,
+                _arrow_schema_without_base(df),
+            )
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
 
 
 def _maf_header_sig(path: str) -> str:
@@ -753,44 +749,32 @@ def _balanced_union(dfs: list[DataFrame]) -> DataFrame:
 
 
 def _mutations_single_job_frames(
-    spark: SparkSession,
-    tsv_dir: str,
-    start_event_id: int,
-    inputs: list | None = None,
-) -> tuple[list, list[DataFrame]]:
-    """Shared scaffold of the single-job mutations modes: discovery,
-    header-signature grouping (Spark's multi-path csv scan applies the
+    spark: SparkSession, inputs: list, start_event_id: int
+) -> list[DataFrame]:
+    """Shared scaffold of the single-job mutations plans over ``inputs``
+    (non-empty, discovery order): header-signature grouping (Spark's multi-path csv scan applies the
     first file's header to every file, so only same-header files may
     share a scan), corpus-wide sequential ids in DISCOVERY order
     (with_sequential_ids_multi + URI->rank map), and per-file
     study/profile/output-base attribution joined from a broadcast
-    manifest keyed by the scan's file URI. Returns ``(inputs,
-    joined_frames)``; each joined frame carries the MAF columns +
-    MUTATION_EVENT_ID + __file/__study/__profile/__base. A scan file
-    missing from the manifest raises mid-plan (fail loud, never
-    silently unattributed).
-
-    ``inputs`` overrides discovery with a pre-filtered list (the
-    salvage mode hands in only its probe-healthy files; id assignment
-    then skips failed files exactly like the loop, where a failed
-    read consumes no ids)."""
+    manifest keyed by the scan's file URI. Returns one joined frame per
+    header group, carrying the MAF columns + MUTATION_EVENT_ID +
+    __file/__study/__profile/__base. A scan file missing from the
+    manifest raises mid-plan (fail loud, never silently unattributed).
+    A file left out of ``inputs`` consumes no ids, as a failed read
+    does in a per-file loop."""
     from pyspark.sql import functions as F
 
-    if inputs is None:
-        inputs = discover_mutation_files(tsv_dir)
-    logger.info("found %d mutation files (single-job mode)", len(inputs))
-    if not inputs:
-        return [], []
     groups: dict[str, list] = {}
     for item in inputs:
         groups.setdefault(_maf_header_sig(item.path), []).append(item)
     frames = [
         read_maf(spark, [it.path for it in g]) for g in groups.values()
     ]
-    # global id order = DISCOVERY order (what the sequential loop
+    # global id order = DISCOVERY order (what a per-file loop
     # iterates), carried by a URI->rank map: sorting the scan's
     # percent-encoded URIs lexicographically could permute exotic
-    # filenames ('a b' -> 'a%20b') relative to the loop's raw paths
+    # filenames ('a b' -> 'a%20b') relative to the raw paths
     file_order = {
         _spark_file_uri(it.path): i for i, it in enumerate(inputs)
     }
@@ -802,7 +786,7 @@ def _mutations_single_job_frames(
             _spark_file_uri(it.path),
             it.cancer_study_id,
             it.genetic_profile_id,
-            os.path.basename(output_base(it.path, "")),
+            output_base(it.path, ""),
         )
         for g in groups.values()
         for it in g
@@ -831,7 +815,7 @@ def _mutations_single_job_frames(
             ).otherwise(F.col("__study")),
         )
         joined_frames.append(joined)
-    return inputs, joined_frames
+    return joined_frames
 
 
 def convert_mutations_partitioned(
@@ -843,9 +827,9 @@ def convert_mutations_partitioned(
     """Single-job mutations conversion for many-study corpora — the
     D3 dataflow at its 100 TB shape (compare convert_cna_partitioned).
 
-    The per-study mode is a driver loop: 2 write actions + 1 count per
-    file (measured 2.2s/study sequential, 0.8s/study at max_workers=8
-    — a scheduling floor, not data cost). Here files GROUP by header
+    A per-study driver loop pays 2 write actions + 1 count per file
+    (measured 2.2s/study sequential, 0.8s/study on 8 threads — a
+    scheduling floor, not data cost). Here files GROUP by header
     signature (one driver-side first-line read each; Spark's
     multi-path csv scan applies the first file's header to all files,
     so only same-header files may share a scan), ids are assigned by
@@ -861,17 +845,17 @@ def convert_mutations_partitioned(
     away via the GENETIC_PROFILE_ID hive partition on mutation.
 
     Failure posture: all-or-nothing per run (one Spark job per table),
-    vs the loop modes' per-file isolation — at this shape, replays are
+    vs convert_mutations' per-file isolation — at this shape, replays are
     cheaper than partial-output bookkeeping. Returns the number of
     files planned.
     """
     from pyspark.sql import functions as F
 
-    inputs, joined_frames = _mutations_single_job_frames(
-        spark, tsv_dir, start_event_id
-    )
+    inputs = discover_mutation_files(tsv_dir)
+    logger.info("found %d mutation files (partitioned)", len(inputs))
     if not inputs:
         return 0
+    joined_frames = _mutations_single_job_frames(spark, inputs, start_event_id)
     ev_parts, mut_parts = [], []
     for joined in joined_frames:
         ev_parts.append(mut_ops.mutation_event(joined))
@@ -901,13 +885,13 @@ def convert_mutations_partitioned(
     return len(inputs)
 
 
-def _check_unique_bases(mode: str, inputs: list) -> list[str]:
-    """Per-file output bases for the grouped modes; raises up front if
-    two inputs collide onto one ``<studyDir>_<stem>`` (the loop mode
+def _check_unique_bases(mode: str, inputs: list) -> None:
+    """Per-file output bases of the per-file layout; raises up front if
+    two inputs collide onto one ``<studyDir>_<stem>`` (a per-file loop
     would silently let the later write clobber the earlier one)."""
     from collections import Counter
 
-    bases = [os.path.basename(output_base(it.path, "")) for it in inputs]
+    bases = [output_base(it.path, "") for it in inputs]
     dup = {b for b, n in Counter(bases).items() if n > 1}
     if dup:
         raise ValueError(
@@ -915,7 +899,6 @@ def _check_unique_bases(mode: str, inputs: list) -> list[str]:
             f" {sorted(dup)[:5]} — the per-study layout cannot"
             " represent both"
         )
-    return bases
 
 
 def _promote_partition_dirs(
@@ -925,7 +908,7 @@ def _promote_partition_dirs(
     suffix: str,
     empty_schema,
 ) -> None:
-    """Driver-side rename pass of the grouped modes: move each
+    """Driver-side rename pass of _write_per_base: move each
     ``__base=<v>`` partition dir of a staged partitionBy write to the
     reference's ``<base>_<suffix>.parquet`` name. Dir names carry
     Spark's %XX partition-value escaping (urllib unquote reverses).
@@ -941,7 +924,6 @@ def _promote_partition_dirs(
     that shape ever materializes, thread-pool the renames (they are
     independent same-filesystem moves) or commit the mapping to a
     catalog instead of materializing reference filenames."""
-    import shutil
     from urllib.parse import unquote
 
     import pyarrow.parquet as pa_pq
@@ -964,7 +946,7 @@ def _promote_partition_dirs(
             )
     if found:
         raise RuntimeError(
-            "grouped mode: staging produced partition dirs with no"
+            "per-file layout: staging produced partition dirs with no"
             f" matching input: {sorted(found)[:5]}"
         )
 
@@ -988,186 +970,6 @@ def _arrow_schema_without_base(df: DataFrame):
     )
 
 
-def convert_mutations_grouped(
-    spark: SparkSession,
-    tsv_dir: str,
-    parquet_dir: str,
-    start_event_id: int = 0,
-    inputs: list | None = None,
-) -> int:
-    """Single-job mutations conversion that writes the REFERENCE's
-    per-study-file output layout (``<studyDir>_<stem>_mutation[_event]
-    .parquet`` — cna/transformer.go:266-297 naming applied by the
-    mutation CLI): the scale answer to the per-study loop's measured
-    DAGScheduler floor (round-9 verdict #2).
-
-    The loop mode pays ~12 scheduler stages PER FILE (rank counts +
-    window + 2 coalesce(1) writes + next-id agg), ~0.9s/study at
-    N=1,000 — pure per-job overhead, not data cost. Here the whole
-    corpus runs as the partitioned mode's plan (shared scaffold:
-    discovery-order ids, broadcast attribution) but each table is
-    written ONCE, hive-partitioned by a synthetic per-file key
-    (``__base`` = the reference's output stem), then a driver-side
-    rename pass moves each partition dir to its reference filename.
-    ``repartition(n, __base)`` confines every file's rows to one task
-    => exactly one part file per output, like the loop's
-    ``single_file=True``; ``sortWithinPartitions(__base, id)`` makes
-    file content order deterministic. Total Spark work: one scan +
-    one shuffle + one write stage per table, independent of study
-    count.
-
-    Inputs whose MAF has zero data rows produce no partition dir;
-    their outputs are written as schema-only parquet driver-side via
-    pyarrow (milliseconds; the Python local-relation write path costs
-    ~5s per tiny frame on this runtime — the round-8 finding), so the
-    output SET matches the loop mode exactly. Two distinct inputs
-    colliding onto one output base (same ``<studyDir>_<stem>`` under
-    different parents) raise up front — the loop mode would silently
-    let the later write clobber the earlier one.
-
-    Row-level parity with the loop mode is pinned by test (ids, rows,
-    one file per output, empty-input outputs). Failure posture:
-    all-or-nothing per run, like the partitioned mode — use
-    convert_mutations_grouped_salvage for the loop mode's per-file
-    isolation (D4) at grouped cost. ``inputs`` overrides discovery
-    (the salvage wrapper passes its probe-healthy subset). Returns the
-    number of files planned."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    inputs, joined_frames = _mutations_single_job_frames(
-        spark, tsv_dir, start_event_id, inputs=inputs
-    )
-    if not inputs:
-        return 0
-    bases = _check_unique_bases("convert_mutations_grouped", inputs)
-    ev_all = _balanced_union(
-        [mut_ops.mutation_event(j, keep=("__base",)) for j in joined_frames]
-    )
-    mut_all = _balanced_union(
-        [
-            mut_ops.mutation(
-                j, F.col("__study"), F.col("__profile"), keep=("__base",)
-            )
-            for j in joined_frames
-        ]
-    )
-    os.makedirs(parquet_dir, exist_ok=True)
-    staging = os.path.join(parquet_dir, ".grouped_staging")
-    shutil.rmtree(staging, ignore_errors=True)
-    nparts = max(
-        1, min(len(inputs), spark.sparkContext.defaultParallelism * 4)
-    )
-    for suffix, df in (
-        ("mutation_event", ev_all),
-        ("mutation", mut_all),
-    ):
-        stage_dir = os.path.join(staging, suffix)
-        (
-            df.repartition(nparts, F.col("__base"))
-            .sortWithinPartitions("__base", mut_ops.EVENT_ID)
-            .write.mode("overwrite")
-            .partitionBy("__base")
-            .parquet(stage_dir)
-        )
-        _promote_partition_dirs(
-            stage_dir,
-            parquet_dir,
-            bases,
-            suffix,
-            _arrow_schema_without_base(df),
-        )
-    shutil.rmtree(staging, ignore_errors=True)
-    return len(inputs)
-
-
-def convert_mutations_grouped_salvage(
-    spark: SparkSession,
-    tsv_dir: str,
-    parquet_dir: str,
-    start_event_id: int = 0,
-    max_workers: int = 8,
-) -> RunSummary:
-    """convert_mutations_grouped with the loop mode's per-file failure
-    isolation (D4, mutation/transformer.go:37-73) — round-10 verdict
-    #3: the grouped single-job write is all-or-nothing, so one corrupt
-    MAF used to cost the whole corpus a replay.
-
-    Three phases:
-
-      1. **Probe** — one column-pruned count scan per file (thread
-         pool; the exact read the loop mode performs, so a probe
-         failure IS a loop-mode read failure). Failing files go to the
-         failure manifest (``RunSummary.failed``) and consume no ids —
-         identical to the loop, so phase 2's ids stay byte-equal to a
-         loop run over the same tree.
-      2. **Grouped write** — convert_mutations_grouped over only the
-         healthy files: one scan + one shuffle + one write per table,
-         the corrupt file excluded instead of poisoning the job.
-         Duplicate output bases are checked over ALL inputs up front
-         (a replayed file must never clobber a healthy output).
-      3. **Salvage replay** — each failed file retried through the
-         LOOP path (read -> ids -> both writes, partial outputs
-         removed on failure). A deterministic corruption fails again
-         and stays in the manifest; a transient failure recovers. A
-         replayed success takes ids PAST the healthy range (unique,
-         ordered, gapless within each phase) — splicing it back into
-         discovery order would require rewriting every later file,
-         which is the all-or-nothing posture this mode exists to
-         avoid; documented, and the manifest names exactly which files
-         took late ids.
-
-    Cost on the happy path: the probe's count scans (the same phase-A
-    scans convert_mutations max_workers>1 already pays) on top of the
-    grouped job. Returns the loop modes' RunSummary (processed +
-    failure manifest)."""
-    inputs = discover_mutation_files(tsv_dir)
-    logger.info("found %d mutation files (grouped-salvage)", len(inputs))
-    summary = RunSummary()
-    if not inputs:
-        return summary
-    _check_unique_bases("convert_mutations_grouped_salvage", inputs)
-    os.makedirs(parquet_dir, exist_ok=True)
-
-    counts = _probe_maf_counts(spark, inputs, max_workers, summary.failed)
-    healthy = [it for it in inputs if it.path in counts]
-    if healthy:
-        convert_mutations_grouped(
-            spark, tsv_dir, parquet_dir, start_event_id, inputs=healthy
-        )
-        summary.processed = [it.path for it in healthy]
-
-    # salvage replay of the manifest through the loop path (the SHARED
-    # per-file writer, so layout/id/cleanup semantics are the loop's
-    # by construction — incl. single_file=True), fresh ids past the
-    # healthy range
-    next_id = start_event_id + sum(counts.values())
-    for item in inputs:  # discovery order, deterministic replay ids
-        if item.path not in summary.failed:
-            continue
-        try:
-            next_id = _write_mutation_outputs(
-                spark, item, parquet_dir, next_id
-            )
-            del summary.failed[item.path]
-            summary.processed.append(item.path)
-            logger.info("salvaged %s (next id now %d)", item.path, next_id)
-        except Exception as exc:  # noqa: BLE001 — D4 isolation
-            logger.error("salvage replay failed for %s: %s", item.path, exc)
-            summary.failed[item.path] = str(exc)
-
-    summary.processed.sort()
-    if summary.failed:
-        logger.error(
-            "%d/%d mutation files failed (manifest): %s",
-            len(summary.failed),
-            len(inputs),
-            sorted(summary.failed),
-        )
-    return summary
-
-
 def load_clickhouse(
     spark: SparkSession,
     parquet_dir: str,
@@ -1188,9 +990,9 @@ def load_clickhouse(
     explicitly if that is the intent.
 
     Both naming forms present for one kind is REFUSED up front (same
-    posture as the grouped modes' duplicate-base check): per-study
+    posture as the convert modes' duplicate-base check): per-study
     ``*_<kind>.parquet`` files next to a bare ``<kind>.parquet`` means
-    a loop/grouped run and a partitioned (fused-combined) run wrote
+    a convert run and a partitioned (fused-combined) run wrote
     into the same -parquet-dir — loading the union would silently
     double every row of that kind (round-10 advice).
 

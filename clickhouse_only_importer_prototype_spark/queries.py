@@ -4499,7 +4499,7 @@ def clickhouse_http_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def grouped_salvage_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D3/D4 driver gate for convert_mutations_grouped_salvage
+    """D3/D4 driver gate for convert_mutations' grouped salvage path
     (plans/pipelines.py — round-10 verdict #3): the probe -> grouped
     single-job write -> rename machinery driven end-to-end inside the
     query, same harness posture as clickhouse_http_roundtrip (the
@@ -4525,7 +4525,7 @@ def grouped_salvage_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile as _tempfile
 
     from clickhouse_only_importer_prototype_spark.plans.pipelines import (
-        convert_mutations_grouped_salvage,
+        convert_mutations,
     )
 
     rows = (
@@ -4559,7 +4559,7 @@ def grouped_salvage_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                         f"S{r['o_orderkey']}_{r['o_orderpriority']}\n"
                     )
         out = _os.path.join(work, "out")
-        summary = convert_mutations_grouped_salvage(spark, tsv_dir, out)
+        summary = convert_mutations(spark, tsv_dir, out)
         n = len(rows)
         outputs_complete = len(summary.processed) == 3 and not summary.failed
         id_stats = None

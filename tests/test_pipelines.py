@@ -5,6 +5,9 @@ reads of the written parquet.
 
 from __future__ import annotations
 
+import glob
+import os
+
 import duckdb
 import pytest
 
@@ -55,6 +58,52 @@ def _read(path):
     return duckdb.sql(
         f"select * from read_parquet('{path}/*.parquet')"
     ).df()
+
+
+def _per_file_cna(spark, tree, out, with_derived=True):
+    """Reference layout: the per-file csv writer over every matrix."""
+    for item in pipelines.discover_cna_files(str(tree)):
+        pipelines._write_cna_outputs(spark, item, str(out), with_derived)
+
+
+def _per_file_mutations(spark, tree, out):
+    """Reference layout: the per-file writer over every MAF, ids
+    threaded in discovery order; a failing file consumes no ids.
+    Returns the failed paths."""
+    next_id, failed = 0, []
+    for item in pipelines.discover_mutation_files(str(tree)):
+        try:
+            next_id = pipelines._write_mutation_outputs(
+                spark, item, str(out), next_id
+            )
+        except Exception:  # noqa: BLE001
+            failed.append(item.path)
+    return failed
+
+
+def _assert_same_outputs(ref, got):
+    """Same output file set; per file the same columns and rows.
+    Returns the file names."""
+    names = sorted(os.listdir(ref))
+    assert sorted(n for n in os.listdir(got) if not n.startswith(".")) == names
+    for n in names:
+        a, b = _read(ref / n), _read(got / n)
+        assert list(a.columns) == list(b.columns), n
+        assert sorted(a.itertuples(index=False)) == sorted(
+            b.itertuples(index=False)
+        ), n
+    return names
+
+
+def _forbid_per_file_writers(monkeypatch):
+    """Fail any call of a per-file writer: a parity run must take the
+    single-scan path, not converge through the per-file fallback."""
+
+    def forbidden(*args, **kwargs):
+        raise AssertionError("per-file writer called")
+
+    monkeypatch.setattr(pipelines, "_write_cna_outputs", forbidden)
+    monkeypatch.setattr(pipelines, "_write_mutation_outputs", forbidden)
 
 
 def test_convert_cna_with_derived(spark, study_tree, tmp_path):
@@ -194,100 +243,6 @@ def test_cli_query_oracle_mode(spark, sf_dir, capsys):
         )
 
 
-def test_convert_cna_parallel_equals_sequential(spark, study_tree, tmp_path):
-    """max_workers>1 only changes SCHEDULING (concurrent independent
-    per-study jobs); the written file set and every table's contents
-    must be identical to the sequential loop."""
-    import os
-
-    seq, par = tmp_path / "seq", tmp_path / "par"
-    pipelines.convert_cna(spark, str(study_tree), str(seq), with_derived=True)
-    s = pipelines.convert_cna(
-        spark, str(study_tree), str(par), with_derived=True, max_workers=4
-    )
-    assert s.ok and len(s.processed) == 2
-    names = sorted(n for n in os.listdir(seq) if n.endswith(".parquet"))
-    assert sorted(n for n in os.listdir(par) if n.endswith(".parquet")) == names
-    for n in names:
-        a = _read(seq / n)
-        b = _read(par / n)
-        key = list(a.columns)
-        assert sorted(map(tuple, a[key].values.tolist())) == sorted(
-            map(tuple, b[key].values.tolist())
-        ), n
-
-
-def test_convert_mutations_parallel_ids_identical(spark, study_tree, tmp_path):
-    """The two-phase prefix-sum (count all files -> driver prefix-sum
-    -> concurrent writes) must assign EXACTLY the ids the sequential
-    loop assigns: dense, gapless, sorted-path order."""
-    import os
-
-    seq, par = tmp_path / "mseq", tmp_path / "mpar"
-    pipelines.convert_mutations(spark, str(study_tree), str(seq))
-    s = pipelines.convert_mutations(
-        spark, str(study_tree), str(par), max_workers=4
-    )
-    assert s.ok
-    names = sorted(n for n in os.listdir(seq) if n.endswith(".parquet"))
-    assert sorted(n for n in os.listdir(par) if n.endswith(".parquet")) == names
-    for n in names:
-        a = _read(seq / n).sort_values("MUTATION_EVENT_ID")
-        b = _read(par / n).sort_values("MUTATION_EVENT_ID")
-        assert a.values.tolist() == b.values.tolist(), n
-
-
-def test_convert_mutations_parallel_read_failure_consumes_no_ids(
-    spark, tmp_path, monkeypatch
-):
-    """D4 isolation in parallel mode: a file that fails its READ
-    (phase A) consumes no ids — later files' ids shift down exactly as
-    in the sequential loop — and lands in the failure manifest. The
-    failure is injected at the reader seam (PERMISSIVE CSV makes
-    content-level read failures unreachable by construction, so the
-    isolation logic itself is what needs the pin)."""
-    root = tmp_path / "studies"
-    for name, rows in (
-        ("s_aa", ["TP53\t7157\t1\tSA"]),
-        ("s_bb", ["BRAF\t673\t3\tSB"]),
-        ("s_cc", ["EGFR\t1956\t5\tSC", "KRAS\t3845\t9\tSC"]),
-    ):
-        d = root / name
-        d.mkdir(parents=True)
-        (d / "meta_mutations.txt").write_text(
-            f"cancer_study_identifier: {name}\nstable_id: mutations\n"
-            "data_filename: data_mutations.txt\n"
-        )
-        (d / "data_mutations.txt").write_text(
-            "Hugo_Symbol\tEntrez_Gene_Id\tStart_Position\t"
-            "Tumor_Sample_Barcode\n" + "\n".join(rows) + "\n"
-        )
-
-    real_read = pipelines.read_maf
-
-    def flaky_read(spark_, path):
-        if "s_bb" in path:
-            raise RuntimeError("injected read failure")
-        return real_read(spark_, path)
-
-    monkeypatch.setattr(pipelines, "read_maf", flaky_read)
-    out = tmp_path / "mout"
-    s = pipelines.convert_mutations(
-        spark, str(root), str(out), max_workers=4
-    )
-    assert len(s.processed) == 2 and len(s.failed) == 1
-    assert "s_bb" in next(iter(s.failed))
-    ev_a = _read(out / "s_aa_data_mutations_mutation_event.parquet")
-    ev_c = _read(out / "s_cc_data_mutations_mutation_event.parquet")
-    # s_bb consumed nothing: s_cc follows s_aa directly
-    assert sorted(ev_a.MUTATION_EVENT_ID) == [0]
-    assert sorted(ev_c.MUTATION_EVENT_ID) == [1, 2]
-    # no partial outputs for the failed study
-    import os
-
-    assert not any("s_bb" in n for n in os.listdir(out))
-
-
 def _three_study_mutation_tree(tmp_path):
     """s_aa (1 row), s_bb (1 row), s_cc (2 rows) — the D4 fixture the
     read-failure tests share; s_bb is the injection target."""
@@ -313,16 +268,14 @@ def _three_study_mutation_tree(tmp_path):
 def test_convert_mutations_grouped_salvage_isolates_corrupt_file(
     spark, tmp_path, monkeypatch
 ):
-    """Round-10 verdict #3: the grouped single-job mode is
-    all-or-nothing; the salvage wrapper restores D4 per-file isolation.
-    One MAF fails its read deterministically (injected at the read_maf
-    seam — PERMISSIVE CSV makes content-level failures unreachable):
-    the grouped run still completes every healthy file, the manifest
-    names the failure, and the output converges to parity with the
-    loop run over the same tree (same file set, same ids, same rows —
+    """Round-10 verdict #3: the grouped single-job write is
+    all-or-nothing; convert_mutations' probe restores D4 per-file
+    isolation. One MAF fails its read deterministically (injected at the
+    read_maf seam — PERMISSIVE CSV makes content-level failures
+    unreachable): the grouped run still completes every healthy file,
+    the manifest names the failure, and the output equals the per-file
+    writer's over the same tree (same file set, same ids, same rows —
     the failed file consumed no ids in both)."""
-    import os
-
     root = _three_study_mutation_tree(tmp_path)
     real_read = pipelines.read_maf
 
@@ -332,33 +285,22 @@ def test_convert_mutations_grouped_salvage_isolates_corrupt_file(
         return real_read(spark_, path)
 
     monkeypatch.setattr(pipelines, "read_maf", corrupt_read)
-    out_loop, out_salv = tmp_path / "oloop", tmp_path / "osalv"
-    loop = pipelines.convert_mutations(spark, str(root), str(out_loop))
-    salv = pipelines.convert_mutations_grouped_salvage(
-        spark, str(root), str(out_salv)
-    )
-    assert not loop.ok and not salv.ok
-    assert sorted(salv.processed) == sorted(loop.processed)
+    out_ref, out_salv = tmp_path / "oref", tmp_path / "osalv"
+    ref_failed = _per_file_mutations(spark, root, out_ref)
+    salv = pipelines.convert_mutations(spark, str(root), str(out_salv))
+    assert not salv.ok and sorted(salv.failed) == ref_failed
     assert len(salv.processed) == 2
     (bad,) = salv.failed
     assert "s_bb" in bad and "injected corruption" in salv.failed[bad]
-    names = sorted(n for n in os.listdir(out_loop) if n.endswith(".parquet"))
-    got = sorted(n for n in os.listdir(out_salv) if n.endswith(".parquet"))
-    assert got == names and not any("s_bb" in n for n in names)
-    for n in names:
-        a = _read(out_loop / n)
-        b = _read(out_salv / n)
-        if "MUTATION_EVENT_ID" in a.columns:
-            a = a.sort_values("MUTATION_EVENT_ID")
-            b = b.sort_values("MUTATION_EVENT_ID")
-        assert a.values.tolist() == b.values.tolist(), n
+    names = _assert_same_outputs(out_ref, out_salv)
+    assert len(names) == 4 and not any("s_bb" in n for n in names)
 
 
 def test_convert_mutations_grouped_salvage_replays_transient_failure(
     spark, tmp_path, monkeypatch
 ):
     """A file that fails only its PROBE (transient) is salvaged by the
-    loop-path replay: the run converges to ok, and the replayed file
+    per-file replay: the run converges to ok, and the replayed file
     takes ids past the healthy range (documented late-id contract —
     unique and ordered, gapless within each phase)."""
     root = _three_study_mutation_tree(tmp_path)
@@ -373,9 +315,7 @@ def test_convert_mutations_grouped_salvage_replays_transient_failure(
 
     monkeypatch.setattr(pipelines, "read_maf", flaky_once)
     out = tmp_path / "osalv2"
-    s = pipelines.convert_mutations_grouped_salvage(
-        spark, str(root), str(out)
-    )
+    s = pipelines.convert_mutations(spark, str(root), str(out))
     assert s.ok and len(s.processed) == 3 and not s.failed
     ev_a = _read(out / "s_aa_data_mutations_mutation_event.parquet")
     ev_b = _read(out / "s_bb_data_mutations_mutation_event.parquet")
@@ -385,14 +325,52 @@ def test_convert_mutations_grouped_salvage_replays_transient_failure(
     assert sorted(ev_a.MUTATION_EVENT_ID) == [0]
     assert sorted(ev_c.MUTATION_EVENT_ID) == [1, 2]
     assert sorted(ev_b.MUTATION_EVENT_ID) == [3]
-    # the replay goes through the SHARED per-file writer, so the
-    # salvaged output keeps the loop's one-part-file layout
-    import glob as _glob
-
-    parts = _glob.glob(
+    # the replay goes through the per-file writer, so the salvaged
+    # output keeps its one-part-file layout
+    parts = glob.glob(
         str(out / "s_bb_data_mutations_mutation_event.parquet" / "*.parquet")
     )
     assert len(parts) == 1, parts
+
+
+@pytest.mark.parametrize("fault", ["staged_write", "poisoned_file"])
+def test_convert_mutations_grouped_failure_replays_per_file(
+    spark, tmp_path, monkeypatch, fault
+):
+    """If the grouped write itself raises (not a probe read failure),
+    every file is replayed through the per-file writer in discovery
+    order, so the ids are a per-file loop's and a bad file costs only
+    its own outputs. ``staged_write``: the staged write of the second
+    table raises after the first was promoted. ``poisoned_file``: s_bb
+    passes its probe, then fails every later read, so it breaks the
+    grouped plan and its own replay."""
+    root = _three_study_mutation_tree(tmp_path)
+    real_read, real_write = pipelines.read_maf, pipelines.write_parquet
+    probed = []
+
+    def read(spark_, path):
+        if fault == "poisoned_file" and "s_bb" in str(path):
+            if probed:
+                raise RuntimeError("injected corruption")
+            probed.append(path)
+        return real_read(spark_, path)
+
+    def write(df, path, **kwargs):
+        staged = ".grouped_staging" in path
+        if fault == "staged_write" and staged and path.endswith("mutation"):
+            raise RuntimeError("injected grouped write failure")
+        return real_write(df, path, **kwargs)
+
+    monkeypatch.setattr(pipelines, "read_maf", read)
+    monkeypatch.setattr(pipelines, "write_parquet", write)
+    out, ref = tmp_path / "out", tmp_path / "ref"
+    s = pipelines.convert_mutations(spark, str(root), str(out))
+    ref_failed = _per_file_mutations(spark, root, ref)
+    assert sorted(s.failed) == ref_failed
+    assert len(ref_failed) == (fault == "poisoned_file")
+    assert len(s.processed) == 3 - len(ref_failed)
+    _assert_same_outputs(ref, out)
+    assert not (out / ".grouped_staging").exists()
 
 
 def test_convert_mutations_partitioned_matches_per_study(
@@ -490,7 +468,6 @@ def test_convert_mutations_partitioned_exotic_names_via_symlink(
     input_file_name() does not (verified empirically), so a symlinked
     tsv_dir made every scan tag miss the broadcast manifest.
     """
-    import os
 
     real_root = tmp_path / "real_studies"
     d = real_root / "s_exotic"
@@ -568,16 +545,15 @@ def test_convert_cna_partitioned_quote_guard(spark, tmp_path):
         )
 
 
-def test_convert_mutations_grouped_matches_loop_layout(spark, tmp_path):
-    """Round-9 verdict #2: the grouped single-job mode must reproduce
-    the per-study loop's OUTPUT LAYOUT exactly — same file names, same
-    rows per file, identical ids, one part file per output — while
-    running one write job per table instead of ~12 stages per file.
-    Includes a zero-data-row MAF (schema-only output both modes) and
-    two header groups (ids interleave)."""
-    import glob
-    import os
-
+def test_convert_mutations_grouped_matches_loop_layout(
+    spark, tmp_path, monkeypatch
+):
+    """Round-9 verdict #2: convert_mutations' grouped single-job write
+    must reproduce the per-file writer's OUTPUT LAYOUT exactly — same
+    file names, same rows per file, identical ids, one part file per
+    output — while running one write job per table instead of ~12
+    stages per file. Includes a zero-data-row MAF (schema-only output
+    both ways) and two header groups (ids interleave)."""
     root = tmp_path / "studies_g"
     mafs = {
         "g_01": (
@@ -613,32 +589,14 @@ def test_convert_mutations_grouped_matches_loop_layout(spark, tmp_path):
 
     loop_out = tmp_path / "loop_g"
     grouped_out = tmp_path / "grouped_g"
-    assert pipelines.convert_mutations(spark, str(root), str(loop_out)).ok
-    n = pipelines.convert_mutations_grouped(
-        spark, str(root), str(grouped_out)
-    )
-    assert n == 4
+    assert _per_file_mutations(spark, root, loop_out) == []
+    _forbid_per_file_writers(monkeypatch)
+    s = pipelines.convert_mutations(spark, str(root), str(grouped_out))
+    assert s.ok and len(s.processed) == 4
     assert not (grouped_out / ".grouped_staging").exists()
-
-    loop_files = sorted(os.listdir(loop_out))
-    grouped_files = sorted(
-        f for f in os.listdir(grouped_out) if not f.startswith(".")
-    )
-    assert loop_files == grouped_files  # identical output layout
-
-    for fname in loop_files:
+    for fname in _assert_same_outputs(loop_out, grouped_out):
         parts = glob.glob(str(grouped_out / fname / "*.parquet"))
         assert len(parts) == 1, f"{fname}: expected 1 part file"
-        a = duckdb.sql(
-            f"select * from read_parquet('{loop_out / fname}/*.parquet')"
-        ).df()
-        b = duckdb.sql(
-            f"select * from read_parquet('{grouped_out / fname}/*.parquet')"
-        ).df()
-        assert list(a.columns) == list(b.columns), fname
-        sa = sorted(map(tuple, a.itertuples(index=False)))
-        sb = sorted(map(tuple, b.itertuples(index=False)))
-        assert sa == sb, fname
     # corpus-wide id check: dense, gapless, discovery order
     ids = sorted(
         duckdb.sql(
@@ -649,46 +607,75 @@ def test_convert_mutations_grouped_matches_loop_layout(spark, tmp_path):
     assert ids == [0, 1, 2, 3]
 
 
-def test_convert_cna_grouped_matches_loop_layout(spark, study_tree, tmp_path):
-    """CNA twin of the grouped-mode parity pin: identical output
-    layout and rows to the per-study loop, one part file per
-    Spark-written output, genetic_profile_samples written driver-side
-    (pyarrow) with its 1-row invariant intact."""
-    import glob
-    import os
-
+def test_convert_cna_grouped_matches_loop_layout(
+    spark, study_tree, tmp_path, monkeypatch
+):
+    """convert_cna's single scan writes the per-file csv writer's output
+    layout and rows exactly, one part file per Spark-written output,
+    genetic_profile_samples written driver-side (pyarrow) with its
+    1-row invariant intact."""
     loop_out = tmp_path / "loop_c"
     grouped_out = tmp_path / "grouped_c"
-    assert pipelines.convert_cna(
-        spark, str(study_tree), str(loop_out), with_derived=True
-    ).ok
-    n = pipelines.convert_cna_grouped(
+    _per_file_cna(spark, study_tree, loop_out)
+    _forbid_per_file_writers(monkeypatch)
+    s = pipelines.convert_cna(
         spark, str(study_tree), str(grouped_out), with_derived=True
     )
-    assert n == 2
-    loop_files = sorted(os.listdir(loop_out))
-    grouped_files = sorted(
-        f for f in os.listdir(grouped_out) if not f.startswith(".")
-    )
-    assert loop_files == grouped_files
-    for fname in loop_files:
-        a = duckdb.sql(
-            f"select * from read_parquet('{loop_out / fname}/*.parquet')"
-        ).df()
-        b = duckdb.sql(
-            f"select * from read_parquet('{grouped_out / fname}/*.parquet')"
-        ).df()
-        assert list(a.columns) == list(b.columns), fname
-        assert sorted(map(tuple, a.itertuples(index=False))) == sorted(
-            map(tuple, b.itertuples(index=False))
-        ), fname
+    assert s.ok and len(s.processed) == 2
+    for fname in _assert_same_outputs(loop_out, grouped_out):
         if "genetic_alterations" in fname or "derived" in fname:
             parts = glob.glob(str(grouped_out / fname / "*.parquet"))
             assert len(parts) == 1, fname
-    gps = duckdb.sql(
-        "select * from read_parquet("
-        f"'{grouped_out}/study_a_data_cna_genetic_profile_samples"
-        ".parquet/*.parquet')"
-    ).df()
+    gps = _read(grouped_out / "study_a_data_cna_genetic_profile_samples.parquet")
     assert len(gps) == 1  # 1-row invariant (cna/transformer.go:553-560)
     assert gps.ORDERED_SAMPLE_LIST[0] == "study_a_S1,study_a_S2,study_a_S3"
+
+
+def test_cli_convert_cna_routes_quoted_files_to_csv_reader(
+    spark, tmp_path, monkeypatch
+):
+    """Files a raw tab split would parse differently from the csv
+    reader — quoted cells, a quoted header, a data row equal to the
+    header — convert through the per-file csv writer, the rest through
+    the single scan. The CLI run exits 0 and every output equals the
+    per-file writer's."""
+    from clickhouse_only_importer_prototype_spark import cli
+
+    root = tmp_path / "studies_q"
+    matrices = {
+        "s_plain": "Hugo_Symbol\tEntrez_Gene_Id\tS1\tS2\n"
+        "TP53\t7157\t0\t-1\nKRAS\t3845\t1\t2\n",
+        # a quoted tab is one csv field, two text-split fields
+        "s_qcell": "Hugo_Symbol\tEntrez_Gene_Id\tS1\tS2\n"
+        'TP53\t7157\t"0"\t"a\tb"\nEGFR\t1956\t1\t"-2"\n',
+        "s_qhead": '"Hugo_Symbol"\tEntrez_Gene_Id\t"S1"\nBRCA1\t672\t2\n',
+        "s_rehdr": "Hugo_Symbol\tEntrez_Gene_Id\tS1\n"
+        "Hugo_Symbol\tEntrez_Gene_Id\tS1\nALK\t238\t0\n",
+    }
+    for name, body in matrices.items():
+        d = root / name
+        d.mkdir(parents=True)
+        (d / "meta_cna.txt").write_text(
+            f"cancer_study_identifier: {name}\nstable_id: gistic\n"
+            "data_filename: data_cna.txt\n"
+        )
+        (d / "data_cna.txt").write_text(body)
+    ref, out = tmp_path / "ref_q", tmp_path / "out_q"
+    _per_file_cna(spark, root, ref)
+    routed = []
+    real = pipelines._write_cna_outputs
+
+    def spy(spark_, item, *args):
+        routed.append(os.path.basename(os.path.dirname(item.path)))
+        return real(spark_, item, *args)
+
+    monkeypatch.setattr(pipelines, "_write_cna_outputs", spy)
+    rc = cli.main(
+        ["-mode", "convert-cna-with-derived", "-tsv-dir", str(root),
+         "-parquet-dir", str(out)]
+    )
+    assert rc == 0
+    assert routed == ["s_qcell", "s_qhead", "s_rehdr"]
+    assert len(_assert_same_outputs(ref, out)) == 12
+    ga = _read(out / "s_qcell_data_cna_genetic_alterations.parquet")
+    assert sorted(ga.VALUES) == ["0,a\tb", "1,-2"]
