@@ -1,26 +1,34 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths, matching the 100 TB playbook:
-  * Brute-force cosine top-k — the correctness baseline. Broadcast the
-    (small) query set against the corpus scan: one pass, no shuffle of
-    the corpus, a per-query top-k window on the (queries × corpus)
-    product. Dot products run JVM-side via ``aggregate``/``zip_with``
-    over double arrays — deterministic left-to-right accumulation that
-    DuckDB's list_inner_product reproduces exactly.
-  * LSH-bucketed ANN (signed random projections) — the scale path.
-    Plane matrix is derived deterministically from a seed (driver-side
-    numpy, broadcast as literals); bucket signature per table via
-    arrow-vectorized pandas UDF (numpy matmul); candidates = bucket
-    collisions in any table, re-ranked exactly. Corpus shuffles once
-    per table on bucket id; no O(n²) stage anywhere.
+Brute-force cosine top-k is the correctness baseline: the (small) query
+set is broadcast against the corpus scan — one pass, no corpus shuffle,
+a per-query top-k window. Every top-k score is ``_cos_1e6``: JVM-side
+``dot``/``norm`` over double arrays, a deterministic left-to-right
+accumulation that DuckDB's list_inner_product reproduces exactly.
 
-Two trained variants extend the surface: IVF (spherical k-means
-centroids + nprobe candidate lists) and PQ (per-subspace codebooks,
-ADC candidate scan over codes only + exact shortlist rescore — the
-compressed-storage path). SRP-LSH remains the no-training-pass option.
+Four approximate variants rescore their candidates with the same
+expression: SRP-LSH (seeded planes, no training; candidates collide in
+a bucket of any table), IVF (spherical k-means cells, nprobe lists), PQ
+(per-subspace codebooks; an ADC scan over codes only picks a shortlist
+— the compressed-storage path) and IVF-PQ (cells prune, codes rank).
+Trainers collect a deterministic xxhash sliver to the driver; the numpy
+kernels (SRP buckets, IVF probes, PQ codes) run in Arrow UDFs.
+
+``cosine_topk_all_variants`` gives the ANN audits all five top-ks from
+one Python pass over the corpus (the JVM rescore join reads it again):
+one collect of the widest training sliver (the IVF sliver nests in the
+PQ one), one of the query block, and ONE mapInPandas pass running the
+same kernels. The shortlist, rescore and top-k windows stay in the JVM
+because numpy's blocked sums would not reproduce the ``dot``/``norm``
+bits, so the exact variant's (query x corpus) pairs also cross Arrow
+and the rescore join. Measured only on the 500-vector catalog
+embeddings: 7 warm Spark jobs per audit, against 31 for the five
+per-variant chains.
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 import pandas as pd
@@ -49,6 +57,53 @@ def norm(a: Column) -> Column:
 def _as_double(col: str | Column) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return c.cast("array<double>")
+
+
+def _vecs(df: DataFrame, id_col: str, vec_col: str, side: str) -> DataFrame:
+    """(query_id, qv) for side 'q', (neighbor_id, cv) for side 'c'."""
+    ids = {"q": "query_id", "c": "neighbor_id"}[side]
+    return df.select(F.col(id_col).alias(ids), _as_double(vec_col).alias(f"{side}v"))
+
+
+def _cos_1e6(a: Column | str = "qv", b: Column | str = "cv") -> Column:
+    """floor(cos(a, b) * 1e6) as int64 over array<double> columns — the
+    one scoring expression of every top-k here, so exact and rescored
+    scores are bit-identical."""
+    a, b = (F.col(x) if isinstance(x, str) else x for x in (a, b))
+    cos = dot(a, b) / (norm(a) * norm(b))
+    return F.floor(cos * F.lit(1000000.0)).cast("long").alias("cos_1e6")
+
+
+def _topk(scored: DataFrame, k: int, keys: tuple[str, ...] = ()) -> DataFrame:
+    """Per-query top-k window over (keys..., query_id, neighbor_id,
+    cos_1e6); ties break on neighbor id."""
+    w = Window.partitionBy(*keys, "query_id").orderBy(
+        F.col("cos_1e6").desc(), F.col("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
+        .where(F.col("rank") <= k)
+        .select(*keys, "query_id", "neighbor_id", "rank", "cos_1e6")
+    )
+
+
+def _rescore_topk(
+    cands: DataFrame,
+    queries: DataFrame,
+    corpus: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    keys: tuple[str, ...] = (),
+) -> DataFrame:
+    """Exact cosine rescore of (keys..., query_id, neighbor_id)
+    candidates against the raw vectors, then the top-k window."""
+    scored = (
+        cands.join(F.broadcast(_vecs(queries, id_col, vec_col, "q")), "query_id")
+        .join(_vecs(corpus, id_col, vec_col, "c"), "neighbor_id")
+        .select(*keys, "query_id", "neighbor_id", _cos_1e6())
+    )
+    return _topk(scored, k, keys)
 
 
 def _check_prebuilt_dim(prebuilt, dim: int) -> None:
@@ -118,32 +173,14 @@ def cosine_topk_bruteforce(
     Scores are emitted as int64 micro-units (floor(cos * 1e6)) so the
     DuckDB oracle hashes identically; ties break on neighbor id.
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cv")
-    )
-    cos = dot(F.col("qv"), F.col("cv")) / (
-        norm(F.col("qv")) * norm(F.col("cv"))
-    )
+    q = _vecs(queries, id_col, vec_col, "q")
     scored = (
-        c.join(F.broadcast(q))
+        _vecs(corpus, id_col, vec_col, "c")
+        .join(F.broadcast(q))
         .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.floor(cos * F.lit(1000000.0)).cast("long").alias("cos_1e6"),
-        )
+        .select("query_id", "neighbor_id", _cos_1e6())
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_1e6").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_1e6")
-    )
+    return _topk(scored, k)
 
 
 def srp_planes(dim: int, n_planes: int, table: int, seed: int = DEFAULT_SEED) -> np.ndarray:
@@ -152,25 +189,30 @@ def srp_planes(dim: int, n_planes: int, table: int, seed: int = DEFAULT_SEED) ->
     return rng.standard_normal((n_planes, dim)).astype(np.float64)
 
 
-def _srp_all_buckets_udf(planes: np.ndarray):
-    """One UDF computing every table's bucket in a single matmul.
-
-    ``planes`` is (tables, n_planes, dim); the batch matmul against the
-    flattened (tables*n_planes, dim) matrix touches each vector once —
-    one Arrow round-trip per batch instead of one per table.
-    """
+def _srp_kernel(planes: np.ndarray):
+    """(batch, dim) matrix -> (batch, tables) int64 buckets. ``planes``
+    is (tables, n_planes, dim): one matmul against the flattened
+    (tables*n_planes, dim) matrix covers every table."""
     n_tables, n_planes, _ = planes.shape
     flat = planes.reshape(n_tables * n_planes, -1)
     weights = 1 << np.arange(n_planes, dtype=np.int64)
 
-    @pandas_udf(ArrayType(LongType()))
-    def buckets(vecs: pd.Series) -> pd.Series:
-        mat = np.stack(vecs.to_numpy())
+    def buckets(mat: np.ndarray) -> np.ndarray:
         bits = (mat @ flat.T > 0).reshape(len(mat), n_tables, n_planes)
-        vals = bits.astype(np.int64) @ weights  # (batch, tables)
-        return pd.Series(list(vals))
+        return bits.astype(np.int64) @ weights
 
     return buckets
+
+
+def _kernel_udf(kernel):
+    """A (batch, dim) float64 -> (batch, w) int64 numpy kernel as an
+    array<long> pandas UDF: one kernel call per Arrow batch."""
+
+    @pandas_udf(ArrayType(LongType()))
+    def udf(vecs: pd.Series) -> pd.Series:
+        return pd.Series(list(kernel(np.array(vecs.tolist(), dtype=np.float64))))
+
+    return udf
 
 
 def srp_buckets(
@@ -190,7 +232,7 @@ def srp_buckets(
     planes = np.stack(
         [srp_planes(dim, n_planes, t, seed) for t in range(n_tables)]
     )
-    udf = _srp_all_buckets_udf(planes)
+    udf = _kernel_udf(_srp_kernel(planes))
     return df.select(
         F.col(id_col).alias("vec_id"), udf(F.col(vec_col)).alias("__bs")
     ).select("vec_id", F.posexplode("__bs").alias("table", "bucket"))
@@ -230,30 +272,7 @@ def cosine_topk_lsh(
         )
         .distinct()
     )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cv")
-    )
-    cos = dot(F.col("qv"), F.col("cv")) / (norm(F.col("qv")) * norm(F.col("cv")))
-    scored = (
-        cands.join(F.broadcast(q), "query_id")
-        .join(c, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.floor(cos * F.lit(1000000.0)).cast("long").alias("cos_1e6"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_1e6").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_1e6")
-    )
+    return _rescore_topk(cands, queries, corpus, k, id_col, vec_col)
 
 
 def _normalize_rows(mat: np.ndarray) -> np.ndarray:
@@ -262,19 +281,51 @@ def _normalize_rows(mat: np.ndarray) -> np.ndarray:
     return mat / norms
 
 
-def _ivf_probe_udf(centroids: np.ndarray, nprobe: int):
-    """array<long> of the nprobe nearest centroid ids per vector (one
-    matmul per arrow batch). centroids must be row-normalized."""
+def _sq_dists(x: np.ndarray, c: np.ndarray) -> np.ndarray:
+    """Squared L2 distances (rows of x) x (rows of c)."""
+    return (x * x).sum(axis=1, keepdims=True) - 2.0 * (x @ c.T) + (c * c).sum(axis=1)
 
-    @pandas_udf(ArrayType(LongType()))
-    def probes(vecs: pd.Series) -> pd.Series:
-        mat = _normalize_rows(np.stack(vecs.to_numpy()).astype(np.float64))
-        sims = mat @ centroids.T  # (batch, C)
+
+def _ivf_probe_kernel(centroids: np.ndarray, nprobe: int):
+    """(batch, dim) matrix -> (batch, nprobe) ids of the nearest
+    centroids (one matmul). centroids must be row-normalized."""
+
+    def probes(mat: np.ndarray) -> np.ndarray:
+        sims = _normalize_rows(mat) @ centroids.T
         # stable sort on -sim => ties break on centroid id, deterministic
         order = np.argsort(-sims, axis=1, kind="stable")
-        return pd.Series(list(order[:, :nprobe].astype(np.int64)))
+        return order[:, :nprobe].astype(np.int64)
 
     return probes
+
+
+def _ivf_probe_udf(centroids: np.ndarray, nprobe: int):
+    return _kernel_udf(_ivf_probe_kernel(centroids, nprobe))
+
+
+def _sliver_bound(n: int, target: int) -> int:
+    """xxhash threshold keeping ~``target`` of ``n`` rows (see
+    ``_train_rows``); ``1 << 30`` keeps every row."""
+    return int((1.0 if n <= target else target / n) * (1 << 30))
+
+
+def _sliver_key(seed: int, id_col: str) -> Column:
+    return F.pmod(F.xxhash64(F.lit(seed + 1), F.col(id_col)), F.lit(1 << 30))
+
+
+def _train_rows(
+    df: DataFrame, seed: int, id_col: str, vec_col: str, bound: int
+) -> DataFrame:
+    """The trainers' deterministic sliver: rows whose ``_sliver_key`` is
+    below ``bound`` (stable across partitionings and retries, unlike
+    ``df.sample``), as (i, v, h) with ``h`` the init-order hash."""
+    if bound < 1 << 30:
+        df = df.where(_sliver_key(seed, id_col) < bound)
+    return df.select(
+        F.col(id_col).alias("i"),
+        _as_double(vec_col).alias("v"),
+        F.xxhash64(F.lit(seed), F.col(id_col)).alias("h"),
+    )
 
 
 def ivf_train_centroids(
@@ -293,11 +344,8 @@ def ivf_train_centroids(
 
     ``n_rows``: exact row count of ``df``, when the caller already
     knows it (e.g. from the parquet footer of an unfiltered table
-    scan) — skips the count job. Used ONLY for training-sliver sizing
-    and the driver/distributed Lloyd crossover; a wrong value changes
-    the training sliver and therefore the centroids, so callers must
-    pass the exact count or nothing (r12, guide §1.2 step 1: the count
-    job was pure fixed overhead on every ANN query).
+    scan) — skips the count job. It sizes the training sliver, so a
+    wrong value changes the centroids: pass the exact count or nothing.
 
     Init is a deterministic pseudo-random sample (the n_centroids rows
     with smallest xxhash64(seed, id) — no RNG state, stable across
@@ -324,16 +372,8 @@ def ivf_train_centroids(
     target = n_centroids * train_points_per_centroid
     if train_fraction is None:
         train_fraction = 1.0 if n <= target else target / n
-    if train_fraction < 1.0:
-        bound = int(train_fraction * (1 << 30))
-        df = df.where(
-            F.pmod(F.xxhash64(F.lit(seed + 1), F.col(id_col)), F.lit(1 << 30))
-            < bound
-        )
-    train = df.select(
-        F.col(id_col).alias("i"),
-        _as_double(vec_col).alias("v"),
-        F.xxhash64(F.lit(seed), F.col(id_col)).alias("h"),
+    train = _train_rows(
+        df, seed, id_col, vec_col, int(train_fraction * (1 << 30))
     )
     n_train_est = int(train_fraction * n)
     if n_train_est <= max(4 * target, 65536):
@@ -353,8 +393,7 @@ def _lloyd_driver(
     collect: the same shape as Misra-Gries rescoring. Versus running
     each Lloyd pass as Spark jobs this removes ~3 jobs/iteration of
     pure fixed overhead (pandas-UDF stage launch + shuffle of C x dim
-    cells) — at bench scale that overhead WAS the training time
-    (round-4 verdict #4: 7.4x regression, root-caused to exactly this).
+    cells) — at bench scale that overhead WAS the training time.
     Rows are sorted by id for a partitioning-independent sum order.
     """
     if len(rows) < n_centroids:
@@ -443,11 +482,6 @@ def cosine_topk_ivf(
 ) -> DataFrame:
     """Approximate cosine top-k via an IVF (inverted-file) index.
 
-    ``corpus_rows``: exact row count of ``corpus`` when the caller
-    already knows it (parquet footer of an unfiltered scan) — forwarded
-    to the trainer so the sizing count job is skipped (see
-    ``ivf_train_centroids``).
-
     The corpus partitions into n_centroids Voronoi cells (one cluster
     id per vector — the 'inverted lists'); each query probes its nprobe
     nearest cells and reranks exactly within them. Versus SRP-LSH this
@@ -466,14 +500,10 @@ def cosine_topk_ivf(
     exactly; pinned by tests/test_ann_index.py).
 
     ``cents`` (consulted only when ``prebuilt`` is None) injects
-    pre-trained coarse centroids: callers evaluating several variants
-    over the SAME corpus with the SAME training params (n_centroids,
-    iters, seed, train_fraction) train once via ``ivf_train_centroids``
-    and share the array — training is deterministic, so the result is
-    bit-identical to retraining here (pinned by
-    tests/test_similarity_shared_training.py); r12 optimization, guide
-    §2.4: the duplicate count+collect training jobs are removed
-    outright."""
+    centroids trained by ``ivf_train_centroids`` with the same params;
+    training is deterministic, so the result is bit-identical to
+    retraining here (pinned by tests/test_similarity_shared_training.py).
+    ``corpus_rows``: the trainer's ``n_rows``."""
     if prebuilt is not None:
         _check_prebuilt_dim(prebuilt, dim)
         if prebuilt.centroids is None:
@@ -495,10 +525,7 @@ def cosine_topk_ivf(
         needed = sorted({cell for r in probed for cell in r["cs"]})
         if needed:
             cells = cells.where(F.col("cluster").isin(needed))
-        c = corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            _as_double(vec_col).alias("cv"),
-        ).join(cells, "neighbor_id")
+        c = _vecs(corpus, id_col, vec_col, "c").join(cells, "neighbor_id")
     else:
         if cents is None:
             cents = ivf_train_centroids(
@@ -517,24 +544,12 @@ def cosine_topk_ivf(
         _as_double(vec_col).alias("qv"),
         F.explode(probe(F.col(vec_col))).alias("cluster"),
     )
-    cos = dot(F.col("qv"), F.col("cv")) / (norm(F.col("qv")) * norm(F.col("cv")))
     scored = (
         c.join(F.broadcast(q), "cluster")
         .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.floor(cos * F.lit(1000000.0)).cast("long").alias("cos_1e6"),
-        )
+        .select("query_id", "neighbor_id", _cos_1e6())
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_1e6").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_1e6")
-    )
+    return _topk(scored, k)
 
 
 #: Minimum exact-duplicate fraction at which the embedding
@@ -777,32 +792,142 @@ def topk_recall(
     variant: str,
     floor_per_1000: int,
 ) -> DataFrame:
-    """In-engine recall audit of an approximate top-k against the exact
-    one: one row (variant, truth_pairs, meets_floor).
+    """``topk_recall_by_variant`` of one approximate top-k against the
+    exact one: one row (variant, truth_pairs, meets_floor)."""
+    cols = ("query_id", "neighbor_id")
+    return topk_recall_by_variant(
+        _stack(truth, approx, variant, cols), {variant: floor_per_1000}
+    )
+
+
+def topk_ranking_quality(
+    truth: DataFrame,
+    approx: DataFrame,
+    variant: str,
+    k: int,
+    mrr_floor_per_1000: int,
+    ndcg_floor_per_1000: int,
+) -> DataFrame:
+    """``topk_ranking_quality_by_variant`` of one approximate top-k
+    against the exact one: one row (variant, n_queries,
+    meets_mrr_floor, meets_ndcg_floor)."""
+    cols = ("query_id", "neighbor_id", "rank")
+    return topk_ranking_quality_by_variant(
+        _stack(truth, approx, variant, cols),
+        k,
+        {variant: (mrr_floor_per_1000, ndcg_floor_per_1000)},
+    )
+
+
+def _stack(truth: DataFrame, approx: DataFrame, variant: str, cols) -> DataFrame:
+    """truth + approx as one long frame, truth labelled 'exact'."""
+    return truth.select(F.lit("exact").alias("variant"), *cols).unionByName(
+        approx.select(F.lit(variant).alias("variant"), *cols)
+    )
+
+
+def topk_recall_by_variant(
+    long: DataFrame, floors_per_1000: dict[str, int]
+) -> DataFrame:
+    """In-engine recall audit of each listed variant of a long
+    (variant, query_id, neighbor_id, ...) top-k frame against its
+    'exact' rows: one row (variant, truth_pairs, meets_floor) per
+    variant, in ``floors_per_1000`` order.
 
     ``meets_floor`` folds the approximate side's recall into a value
     that is STABLE across scale factors (the exact recall number is
     corpus-dependent; whether it clears a pinned floor is not), so the
     audit is oracle-able: a SQL twin recomputes ``truth_pairs`` from
     the deterministic brute-force contract (k rows per query) and
-    expects ``meets_floor`` true. Recall regression in the LSH/IVF
-    path then fails the hard correctness gate, not just a local test.
+    expects ``meets_floor`` true. Recall regression in any approximate
+    variant then fails the hard correctness gate, not just a local test.
     """
-    t = truth.select("query_id", "neighbor_id")
-    hits = t.join(
-        approx.select("query_id", "neighbor_id"),
-        ["query_id", "neighbor_id"],
-        "left_semi",
-    ).agg(F.count("*").alias("hits"))
-    total = t.agg(F.count("*").alias("total"))
-    return hits.crossJoin(total).select(
-        F.lit(variant).alias("variant"),
-        F.col("total").cast("long").alias("truth_pairs"),
+    agg = _variant_sums(long, floors_per_1000)
+    return _variant_rows(agg, floors_per_1000, lambda i, floor: [
+        F.col("pairs").cast("long").alias("truth_pairs"),
         (
-            F.floor(F.lit(1000.0) * F.col("hits") / F.col("total"))
-            >= F.lit(floor_per_1000)
+            F.floor(F.lit(1000.0) * F.col(f"hits{i}") / F.col("pairs"))
+            >= F.lit(floor)
         ).alias("meets_floor"),
+    ])
+
+
+def topk_ranking_quality_by_variant(
+    long: DataFrame, k: int, floors_per_1000: dict[str, tuple[int, int]]
+) -> DataFrame:
+    """Rank-AWARE audit of each listed variant of a long (variant,
+    query_id, neighbor_id, rank, ...) top-k frame against its 'exact'
+    rows: one row (variant, n_queries, meets_mrr_floor,
+    meets_ndcg_floor) per variant, floors given as (mrr, ndcg) per 1000.
+    Complements the recall audit (set overlap): MRR scores WHERE the
+    first true neighbor lands in the approximate ranking, binary-
+    relevance NDCG@k scores the whole list's ordering; a query with no
+    hit in a variant scores 0 there.
+
+    Exactness: reciprocal ranks and DCG discounts are integer
+    constants (floor(1e6/rank), floor(1e6/log2(i+1)) literals), means
+    are integer divisions — so the floor comparisons are drift-free
+    and, like the recall audit, oracle-able as pinned booleans that
+    fail the hard gate if ranking quality regresses.
+    """
+    agg = _variant_sums(long, floors_per_1000, k)
+    return _variant_rows(agg, floors_per_1000, lambda i, floors: [
+        F.col("nq").cast("long").alias("n_queries"),
+        (F.expr(f"div(rr{i}, nq)") >= F.lit(floors[0] * 1000)).alias(
+            "meets_mrr_floor"
+        ),
+        (F.expr(f"div(ndcg{i}, nq)") >= F.lit(floors[1] * 1000)).alias(
+            "meets_ndcg_floor"
+        ),
+    ])
+
+
+def _variant_sums(long: DataFrame, variants, k: int | None = None) -> DataFrame:
+    """One aggregation over the rows of a long top-k frame whose pair is
+    among its query's 'exact' rows: exact pairs and queries (pairs, nq),
+    then per listed variant i its hits (hits{i}) and, given ``k``, its
+    sums of per-query reciprocal rank and NDCG (rr{i}, ndcg{i}, 1e6
+    units). Membership is a per-query window: a semi join against a
+    filtered copy would fork the plan and run its candidate pass twice."""
+    truth = F.collect_set(
+        F.when(F.col("variant") == "exact", F.col("neighbor_id"))
+    ).over(Window.partitionBy("query_id"))
+    hits = long.withColumn("__truth", truth).where(
+        F.array_contains("__truth", F.col("neighbor_id"))
     )
+    per_q = hits.groupBy("variant", "query_id")
+    sums = ["hits"]
+    if k is None:
+        per_q = per_q.agg(F.count("*").alias("hits"))
+    else:
+        weights = [int(1_000_000 // math.log2(i + 1)) for i in range(1, k + 1)]
+        w_arr = F.array([F.lit(w) for w in weights])
+        per_q = per_q.agg(
+            F.count("*").alias("hits"),
+            F.expr("div(1000000, min(rank))").alias("rr"),
+            F.sum(F.element_at(w_arr, F.col("rank").cast("int"))).alias("dcg"),
+        ).withColumn("ndcg", F.expr(f"div(dcg * 1000000, {sum(weights)})"))
+        sums += ["rr", "ndcg"]
+    is_v = lambda v: F.col("variant") == v  # noqa: E731
+    return per_q.agg(
+        F.sum(F.when(is_v("exact"), F.col("hits"))).alias("pairs"),
+        F.count(F.when(is_v("exact"), 1)).alias("nq"),
+        *[
+            F.coalesce(F.sum(F.when(is_v(v), F.col(c))), F.lit(0)).alias(f"{c}{i}")
+            for i, v in enumerate(variants)
+            for c in sums
+        ],
+    )
+
+
+def _variant_rows(agg: DataFrame, floors: dict, row) -> DataFrame:
+    """One output row per listed variant from the one-row aggregate
+    ``agg``; ``row(i, floor)`` gives the i-th variant's columns."""
+    structs = [
+        F.struct(F.lit(v).alias("variant"), *row(i, floor))
+        for i, (v, floor) in enumerate(floors.items())
+    ]
+    return agg.select(F.inline(F.array(*structs)))
 
 
 def kmeans_assign_int(
@@ -1063,66 +1188,6 @@ def grouped_neardup_pairs(
     )
 
 
-def topk_ranking_quality(
-    truth: DataFrame,
-    approx: DataFrame,
-    variant: str,
-    k: int,
-    mrr_floor_per_1000: int,
-    ndcg_floor_per_1000: int,
-) -> DataFrame:
-    """Rank-AWARE audit of an approximate top-k against the exact one:
-    one row (variant, n_queries, meets_mrr_floor, meets_ndcg_floor).
-    Complements ``topk_recall`` (set overlap): MRR scores WHERE the
-    first true neighbor lands in the approximate ranking, binary-
-    relevance NDCG@k scores the whole list's ordering.
-
-    Exactness: reciprocal ranks and DCG discounts are integer
-    constants (floor(1e6/rank), floor(1e6/log2(i+1)) literals), means
-    are integer divisions — so the floor comparisons are drift-free
-    and, like the recall audit, oracle-able as pinned booleans that
-    fail the hard gate if ranking quality regresses.
-
-    Scale: hits = one broadcastable semi join on (nq x k) frames;
-    everything downstream is query-keyed aggregation over nq rows.
-    """
-    import math
-
-    weights = [int(1_000_000 // math.log2(i + 1)) for i in range(1, k + 1)]
-    idcg = sum(weights)
-    w_arr = F.array([F.lit(w) for w in weights])
-
-    t = truth.select("query_id", "neighbor_id")
-    qs = t.select("query_id").distinct()
-    hits = approx.select("query_id", "neighbor_id", "rank").join(
-        t, ["query_id", "neighbor_id"], "left_semi"
-    )
-    per_q = hits.groupBy("query_id").agg(
-        F.min("rank").alias("first_rank"),
-        F.sum(F.element_at(w_arr, F.col("rank").cast("int"))).alias("dcg"),
-    )
-    scored = qs.join(per_q, "query_id", "left").select(
-        F.coalesce(F.expr("div(1000000, first_rank)"), F.lit(0)).alias("rr"),
-        F.coalesce(
-            F.expr(f"div(dcg * 1000000, {idcg})"), F.lit(0)
-        ).alias("ndcg"),
-    )
-    return scored.agg(
-        F.count("*").alias("nq"),
-        F.sum("rr").alias("srr"),
-        F.sum("ndcg").alias("sndcg"),
-    ).select(
-        F.lit(variant).alias("variant"),
-        F.col("nq").cast("long").alias("n_queries"),
-        (
-            F.expr("div(srr, nq)") >= F.lit(mrr_floor_per_1000 * 1000)
-        ).alias("meets_mrr_floor"),
-        (
-            F.expr("div(sndcg, nq)") >= F.lit(ndcg_floor_per_1000 * 1000)
-        ).alias("meets_ndcg_floor"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Product quantization (PQ) — the byte-coded embedding path. At 100 TB
 # the raw float corpus does not fit hot storage: PQ stores ~m bytes per
@@ -1143,11 +1208,7 @@ def _plain_lloyd(mat: np.ndarray, k: int, iters: int) -> np.ndarray:
     argsort tie-break; empty clusters keep their centroid."""
     cents = mat[:k].copy()
     for _ in range(iters):
-        d2 = (
-            (mat * mat).sum(axis=1, keepdims=True)
-            - 2.0 * (mat @ cents.T)
-            + (cents * cents).sum(axis=1)
-        )
+        d2 = _sq_dists(mat, cents)
         clusters = np.argsort(d2, axis=1, kind="stable")[:, 0]
         new = cents.copy()
         for c in range(k):
@@ -1180,28 +1241,20 @@ def pq_train_codebooks(
     collected driver-side — bounded at n_codes x train_points_per_
     centroid rows (~1 MB at the defaults) regardless of corpus size;
     the full corpus is only ever touched by the one encode pass."""
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
     # n_rows: caller-known exact count (same contract and rationale as
     # ivf_train_centroids.n_rows)
     n = df.count() if n_rows is None else n_rows
-    target = n_codes * train_points_per_centroid
-    frac = 1.0 if n <= target else target / n
-    src = df
-    if frac < 1.0:
-        bound = int(frac * (1 << 30))
-        src = df.where(
-            F.pmod(F.xxhash64(F.lit(seed + 1), F.col(id_col)), F.lit(1 << 30))
-            < bound
-        )
-    rows = (
-        src.select(
-            F.col(id_col).alias("i"),
-            _as_double(vec_col).alias("v"),
-            F.xxhash64(F.lit(seed), F.col(id_col)).alias("h"),
-        )
-        .collect()
-    )
+    bound = _sliver_bound(n, n_codes * train_points_per_centroid)
+    rows = _train_rows(df, seed, id_col, vec_col, bound).collect()
+    return _pq_codebooks(rows, dim, m, n_codes, iters)
+
+
+def _pq_codebooks(
+    rows: list, dim: int, m: int, n_codes: int, iters: int
+) -> np.ndarray:
+    """``pq_train_codebooks`` over an already collected sliver."""
+    if dim % m:
+        raise ValueError(f"dim {dim} not divisible by m {m}")
     if len(rows) < n_codes:
         raise ValueError(
             f"need >= {n_codes} training vectors, got {len(rows)}"
@@ -1221,33 +1274,30 @@ def pq_train_codebooks(
     )
 
 
-def _pq_encode_udf(codebooks: np.ndarray):
-    """Arrow-batched encoder: nearest codebook entry per subspace over
-    the normalized vector -> array<long>. Ties take the lowest code id
-    (stable argsort), so codes are deterministic across partitionings.
-    The ONE encode implementation — pq_encode, cosine_topk_ivfpq, and
-    ann_index build/append all call this, so stored and in-session
-    codes are bit-identical by construction."""
+def _pq_encode_kernel(codebooks: np.ndarray):
+    """(batch, dim) float64 matrix -> (batch, m) codes: the nearest
+    codebook entry per subspace of the normalized vector. Ties take the
+    lowest code id (stable argsort), so codes are deterministic across
+    partitionings. The ONE encode implementation — pq_encode,
+    cosine_topk_ivfpq, the variant evaluator and ann_index build/append
+    all call it, so stored and in-session codes are bit-identical by
+    construction."""
     m, n_codes, dsub = codebooks.shape
     cb = codebooks.copy()
 
-    @pandas_udf(ArrayType(LongType()))
-    def encode(vecs: pd.Series) -> pd.Series:
-        mat = _normalize_rows(
-            np.array(vecs.tolist(), dtype=np.float64)
-        )
+    def encode(mat: np.ndarray) -> np.ndarray:
+        mat = _normalize_rows(mat)
         out = np.empty((len(mat), m), dtype=np.int64)
         for j in range(m):
-            sub = mat[:, j * dsub : (j + 1) * dsub]
-            d2 = (
-                (sub * sub).sum(axis=1, keepdims=True)
-                - 2.0 * (sub @ cb[j].T)
-                + (cb[j] * cb[j]).sum(axis=1)
-            )
+            d2 = _sq_dists(mat[:, j * dsub : (j + 1) * dsub], cb[j])
             out[:, j] = np.argsort(d2, axis=1, kind="stable")[:, 0]
-        return pd.Series(list(out))
+        return out
 
     return encode
+
+
+def _pq_encode_udf(codebooks: np.ndarray):
+    return _kernel_udf(_pq_encode_kernel(codebooks))
 
 
 def pq_encode(
@@ -1262,6 +1312,120 @@ def pq_encode(
     return df.select(
         F.col(id_col).alias("vec_id_pq"), encode(_as_double(vec_col)).alias("codes")
     )
+
+
+def _collect_queries(
+    queries: DataFrame, id_col: str, vec_col: str, *extra: Column
+) -> tuple[np.ndarray, np.ndarray, list]:
+    """The query block on the driver, sorted by id: (ids, raw float64
+    vectors, the rows with any ``extra`` columns)."""
+    rows = sorted(
+        queries.select(
+            F.col(id_col).alias("qid"), _as_double(vec_col).alias("qv"), *extra
+        ).collect(),
+        key=lambda r: r["qid"],
+    )
+    qids = np.array([r["qid"] for r in rows], dtype=np.int64)
+    return qids, np.array([r["qv"] for r in rows], dtype=np.float64), rows
+
+
+def _adc_lut(qmat: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
+    """LUT[q, j, c] = ||q_subj - codebook[j][c]||^2 for normalized
+    queries; the ADC distance of a coded vector for query q is
+    sum_j LUT[q, j, code_j]."""
+    m, n_codes, dsub = codebooks.shape
+    lut = np.empty((len(qmat), m, n_codes), dtype=np.float64)
+    for j in range(m):
+        lut[:, j, :] = _sq_dists(qmat[:, j * dsub : (j + 1) * dsub], codebooks[j])
+    return lut
+
+
+def _adc_local_shortlist(
+    ids: np.ndarray,
+    codes: np.ndarray,
+    lut: np.ndarray,
+    qids: np.ndarray,
+    shortlist: int,
+    cells: np.ndarray | None = None,
+    qcells=None,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """One batch's (query_id, neighbor_id, adc_1e6) top-``shortlist``
+    rows per query by ADC distance, self-matches excluded, restricted
+    to each query's ``qcells`` (queries x nprobe) when given. Exact for
+    the global shortlist: every global top row is in its batch's one."""
+    dist = np.zeros((len(qids), len(ids)), dtype=np.float64)
+    for j in range(lut.shape[1]):  # fixed subspace order: deterministic
+        dist += lut[:, j, codes[:, j]]
+    # quantized BEFORE the local cut: local and global selection must
+    # sort on the IDENTICAL key (quantized dist, id)
+    dq = np.floor(dist * 1e6).astype(np.int64)
+    keep = ids[None, :] != qids[:, None]
+    if qcells is not None:
+        keep &= (cells[None, :, None] == np.asarray(qcells)[:, None, :]).any(2)
+    # per query: kept rows first, then by (adc, id)
+    order = np.lexsort((np.broadcast_to(ids, dq.shape), dq, ~keep), axis=1)
+    qi, ri = np.indices(order.shape)[0][:, :shortlist], order[:, :shortlist]
+    sel = keep[qi, ri]
+    return qids[qi[sel]], ids[ri[sel]], dq[qi, ri][sel]
+
+
+_ADC_SCHEMA = "query_id long, neighbor_id long, adc_1e6 long"
+
+
+def _shortlist(
+    partial: DataFrame, shortlist: int | Column, keys: tuple[str, ...] = ()
+) -> DataFrame:
+    """Per-query global shortlist of ADC candidates: the
+    ``shortlist`` smallest (adc_1e6, neighbor_id)."""
+    w = Window.partitionBy(*keys, "query_id").orderBy(
+        F.col("adc_1e6").asc(), F.col("neighbor_id")
+    )
+    return (
+        partial.withColumn("r", F.row_number().over(w))
+        .where(F.col("r") <= shortlist)
+        .select(*keys, "query_id", "neighbor_id")
+    )
+
+
+def _adc_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    codes: DataFrame,
+    codebooks: np.ndarray,
+    k: int,
+    shortlist: int,
+    id_col: str,
+    vec_col: str,
+    probe=None,
+    prune: bool = False,
+) -> DataFrame:
+    """The PQ variants' serving tail over a (vec_id_pq[, cluster],
+    codes) frame. ``probe`` (an IVF probe UDF) restricts candidates to
+    each query's probed cells; ``prune`` also filters ``codes`` on them."""
+    extra = () if probe is None else (probe(F.col(vec_col)).alias("cells"),)
+    qids, qv, qrows = _collect_queries(queries, id_col, vec_col, *extra)
+    qcells = None if probe is None else [r["cells"] for r in qrows]
+    if prune and qcells:
+        # on the cluster-partitioned artifact codes table this isin()
+        # is a PartitionFilter: the ADC stage reads nprobe/n_centroids
+        # of the FILES, not just of the rows
+        codes = codes.where(F.col("cluster").isin(sorted(set().union(*qcells))))
+    lut = _adc_lut(_normalize_rows(qv), codebooks)
+
+    def partial(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            cells = None if qcells is None else pdf["cluster"].to_numpy(np.int64)
+            q, n, d = _adc_local_shortlist(
+                pdf["vec_id_pq"].to_numpy(dtype=np.int64),
+                np.array(pdf["codes"].tolist(), dtype=np.int64),
+                lut, qids, shortlist, cells, qcells,
+            )
+            yield pd.DataFrame({"query_id": q, "neighbor_id": n, "adc_1e6": d})
+
+    cands = _shortlist(codes.mapInPandas(partial, _ADC_SCHEMA), shortlist)
+    return _rescore_topk(cands, queries, corpus, k, id_col, vec_col)
 
 
 def cosine_topk_pq(
@@ -1303,7 +1467,6 @@ def cosine_topk_pq(
         if prebuilt.codebooks is None:
             raise ValueError(f"index kind {prebuilt.kind!r} has no codebooks")
         codebooks = prebuilt.codebooks
-        m, n_codes = codebooks.shape[0], codebooks.shape[1]
         codes = prebuilt.codes(corpus.sparkSession).select(
             F.col("vec_id").alias("vec_id_pq"), "codes"
         )
@@ -1313,98 +1476,8 @@ def cosine_topk_pq(
             n_rows=corpus_rows,
         )
         codes = pq_encode(corpus, codebooks, id_col, vec_col)
-    dsub = dim // m
-    qrows = sorted(
-        queries.select(
-            F.col(id_col).alias("qid"), _as_double(vec_col).alias("qv")
-        ).collect(),
-        key=lambda r: r["qid"],
-    )
-    qids = np.array([r["qid"] for r in qrows], dtype=np.int64)
-    qmat = _normalize_rows(
-        np.array([r["qv"] for r in qrows], dtype=np.float64)
-    )
-    # LUT[q, j, c] = ||q_subj - codebook[j][c]||^2 ; ADC distance of a
-    # coded vector for query q = sum_j LUT[q, j, code_j]
-    nq = len(qids)
-    lut = np.empty((nq, m, n_codes), dtype=np.float64)
-    for j in range(m):
-        qs = qmat[:, j * dsub : (j + 1) * dsub]
-        lut[:, j, :] = (
-            (qs * qs).sum(axis=1, keepdims=True)
-            - 2.0 * (qs @ codebooks[j].T)
-            + (codebooks[j] * codebooks[j]).sum(axis=1)
-        )
-
-    out_schema = "query_id long, neighbor_id long, adc_1e6 long"
-
-    def adc_partial(batches):
-        for pdf in batches:
-            ids = pdf["vec_id_pq"].to_numpy(dtype=np.int64)
-            codes_mat = np.array(pdf["codes"].tolist(), dtype=np.int64)
-            # dist[q, row] = sum over subspaces of LUT lookups
-            dist = np.zeros((nq, len(ids)), dtype=np.float64)
-            for j in range(m):
-                dist += lut[:, j, codes_mat[:, j]]
-            res = []
-            for qi in range(nq):
-                drow = dist[qi]
-                mask = ids != qids[qi]  # self-match excluded
-                cand_ids = ids[mask]
-                # quantize BEFORE the local selection so the local
-                # top-shortlist and the global window sort on the
-                # IDENTICAL key (quantized dist, id) — full-precision
-                # local + quantized global could disagree at the cut
-                # boundary under a different corpus partitioning
-                cand_q = np.floor(drow[mask] * 1e6).astype(np.int64)
-                order = np.lexsort((cand_ids, cand_q))[:shortlist]
-                res.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qids[qi],
-                            "neighbor_id": cand_ids[order],
-                            "adc_1e6": cand_q[order],
-                        }
-                    )
-                )
-            if res:
-                yield pd.concat(res, ignore_index=True)
-
-    partial = codes.mapInPandas(adc_partial, out_schema)
-    w_short = Window.partitionBy("query_id").orderBy(
-        F.col("adc_1e6").asc(), F.col("neighbor_id")
-    )
-    short = (
-        partial.withColumn("r", F.row_number().over(w_short))
-        .where(F.col("r") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
-    # exact cosine rescore of the shortlist only
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cv")
-    )
-    cos = dot(F.col("qv"), F.col("cv")) / (
-        norm(F.col("qv")) * norm(F.col("cv"))
-    )
-    scored = (
-        short.join(F.broadcast(q), "query_id")
-        .join(c, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.floor(cos * F.lit(1000000.0)).cast("long").alias("cos_1e6"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_1e6").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_1e6")
+    return _adc_topk(
+        corpus, queries, codes, codebooks, k, shortlist, id_col, vec_col
     )
 
 
@@ -1435,12 +1508,9 @@ def cosine_topk_ivfpq(
     join is co-located, and raw vectors are fetched for shortlist ids
     only.
 
-    Cells come from ivf_train_centroids (sliver-trained, bounded
-    driver state), codebooks from pq_train_codebooks (same sizing
-    rule). Output shape: (query_id, neighbor_id, rank, cos_1e6),
-    identical to the sibling ANN variants. Deterministic: both
-    trainers key on value hashes, ADC sums run in fixed subspace
-    order, all tie-breaks on ids.
+    Cells come from ivf_train_centroids, codebooks from
+    pq_train_codebooks; both key on value hashes, so results are
+    deterministic. Output shape as the sibling ANN variants.
 
     ``prebuilt`` (an ``ann_index.AnnIndex`` of kind 'ivfpq') is the
     full train-once / serve-many posture: centroids + codebooks load
@@ -1450,11 +1520,8 @@ def cosine_topk_ivfpq(
     Bit-identical to in-session with matching params (pinned by
     tests/test_ann_index.py).
 
-    ``cents`` (consulted only when ``prebuilt`` is None): shared
-    pre-trained coarse centroids — see ``cosine_topk_ivf``. The ivf
-    and ivfpq variants use IDENTICAL coarse-training params by
-    default, so a caller evaluating both trains the coarse k-means
-    once (r12, guide §2.4)."""
+    ``cents`` / ``corpus_rows``: as in ``cosine_topk_ivf``; the ivf and
+    ivfpq defaults train identical coarse centroids."""
     if prebuilt is not None:
         _check_prebuilt_dim(prebuilt, dim)
         if prebuilt.centroids is None or prebuilt.codebooks is None:
@@ -1463,7 +1530,6 @@ def cosine_topk_ivfpq(
             )
         cents = prebuilt.centroids
         codebooks = prebuilt.codebooks
-        m, n_codes = codebooks.shape[0], codebooks.shape[1]
         codes = prebuilt.codes(corpus.sparkSession).select(
             F.col("vec_id").alias("vec_id_pq"), "cluster", "codes"
         )
@@ -1488,109 +1554,88 @@ def cosine_topk_ivfpq(
             assign(F.col(vec_col))[0].alias("cluster"),
             encode(_as_double(vec_col)).alias("codes"),
         )
-    dsub = dim // m
-    probe = _ivf_probe_udf(cents, nprobe)
-    qrows = sorted(
-        queries.select(
-            F.col(id_col).alias("qid"),
-            _as_double(vec_col).alias("qv"),
-            probe(F.col(vec_col)).alias("cells"),
-        ).collect(),
-        key=lambda r: r["qid"],
+    return _adc_topk(
+        corpus, queries, codes, codebooks, k, shortlist, id_col, vec_col,
+        probe=_ivf_probe_udf(cents, nprobe), prune=prebuilt is not None,
     )
-    qids = np.array([r["qid"] for r in qrows], dtype=np.int64)
-    qmat = _normalize_rows(
-        np.array([r["qv"] for r in qrows], dtype=np.float64)
+
+
+# The configuration cosine_topk_all_variants evaluates: IVF and IVF-PQ
+# cells / probes / Lloyd iterations, SRP-LSH planes x tables, PQ
+# subspaces x codes / codebook iterations, and the ADC shortlist.
+AUDIT_CELLS, AUDIT_NPROBE, AUDIT_ITERS = 16, 4, 2
+AUDIT_PLANES, AUDIT_TABLES = 4, 16
+AUDIT_M, AUDIT_CODES, AUDIT_PQ_ITERS = 8, 32, 3
+AUDIT_SHORTLIST = 200
+
+
+def cosine_topk_all_variants(
+    corpus: DataFrame,
+    queries: DataFrame,
+    dim: int,
+    k: int = 5,
+    corpus_rows: int | None = None,
+) -> DataFrame:
+    """(variant, query_id, neighbor_id, rank, cos_1e6) for variant in
+    exact / ivf / lsh / pq / ivfpq over (vec_id, embedding) frames, from
+    one Python pass over the corpus (see the module docstring). Each
+    variant's rows equal, bit for bit, those of its own function run
+    with the AUDIT_* configuration and DEFAULT_SEED; ``cosine_topk_pq``
+    trains with AUDIT_PQ_ITERS, ``cosine_topk_ivfpq`` with AUDIT_ITERS."""
+    n = corpus.count() if corpus_rows is None else corpus_rows
+    bounds = [_sliver_bound(n, c * 256) for c in (AUDIT_CELLS, AUDIT_CODES)]
+    # the slivers nest (same key, two bounds): collect the wider once
+    sliver = _train_rows(corpus, DEFAULT_SEED, "vec_id", "embedding", max(bounds))
+    rows = sliver.withColumn("p", _sliver_key(DEFAULT_SEED, "i")).collect()
+    ivf_rows, pq_rows = ([r for r in rows if r["p"] < b] for b in bounds)
+    cents = _lloyd_driver(ivf_rows, dim, AUDIT_CELLS, AUDIT_ITERS)
+    assign = _ivf_probe_kernel(cents, 1)
+    buckets = _srp_kernel(
+        np.stack([srp_planes(dim, AUDIT_PLANES, t) for t in range(AUDIT_TABLES)])
     )
-    qcells = [set(r["cells"]) for r in qrows]
-    if prebuilt is not None and qcells:
-        # static partition prune: the artifact's codes table is hive-
-        # partitioned by cluster (ann_index._write_codes), and the
-        # union of probed cells is known driver-side BEFORE the scan
-        # plans — an isin() filter here becomes a PartitionFilter, so
-        # the ADC stage reads nprobe/n_centroids of the FILES, not
-        # just of the rows (the inverted-list I/O win at 100 TB)
-        codes = codes.where(
-            F.col("cluster").isin(sorted(set().union(*qcells)))
-        )
-    nq = len(qids)
-    lut = np.empty((nq, m, n_codes), dtype=np.float64)
-    for j in range(m):
-        qs = qmat[:, j * dsub : (j + 1) * dsub]
-        lut[:, j, :] = (
-            (qs * qs).sum(axis=1, keepdims=True)
-            - 2.0 * (qs @ codebooks[j].T)
-            + (codebooks[j] * codebooks[j]).sum(axis=1)
-        )
+    qids, qv, _ = _collect_queries(queries, "vec_id", "embedding")
+    qprobes, qbuckets = _ivf_probe_kernel(cents, AUDIT_NPROBE)(qv), buckets(qv)
+    adc = []  # (variant, encoder, LUT, probed cells per query or None)
+    for name, its, qcells in (
+        ("pq", AUDIT_PQ_ITERS, None), ("ivfpq", AUDIT_ITERS, qprobes)
+    ):
+        codebooks = _pq_codebooks(pq_rows, dim, AUDIT_M, AUDIT_CODES, its)
+        lut = _adc_lut(_normalize_rows(qv), codebooks)
+        adc.append((name, _pq_encode_kernel(codebooks), lut, qcells))
 
-    out_schema = "query_id long, neighbor_id long, adc_1e6 long"
-
-    def adc_partial(batches):
+    def scan(batches):
         for pdf in batches:
-            ids = pdf["vec_id_pq"].to_numpy(dtype=np.int64)
-            cells = pdf["cluster"].to_numpy(dtype=np.int64)
-            codes_mat = np.array(pdf["codes"].tolist(), dtype=np.int64)
-            dist = np.zeros((nq, len(ids)), dtype=np.float64)
-            for j in range(m):
-                dist += lut[:, j, codes_mat[:, j]]
-            res = []
-            for qi in range(nq):
-                # inverted-list prune: only this query's probed cells
-                mask = (ids != qids[qi]) & np.isin(
-                    cells, list(qcells[qi])
+            if not len(pdf):
+                continue
+            ids = pdf["neighbor_id"].to_numpy(dtype=np.int64)
+            mat = np.array(pdf["cv"].tolist(), dtype=np.float64)
+            cells = assign(mat)[:, 0]
+            other = ids[None, :] != qids[:, None]  # (queries, batch)
+            ivf = (cells[None, :, None] == qprobes[:, None, :]).any(2)
+            lsh = (buckets(mat)[None] == qbuckets[:, None]).any(2)
+            out = []
+            for name, hit in (("exact", other), ("ivf", other & ivf), ("lsh", other & lsh)):
+                qi, ri = np.nonzero(hit)
+                out.append(pd.DataFrame(
+                    {"variant": name, "query_id": qids[qi], "neighbor_id": ids[ri]}
+                ))
+            for name, encode, lut, qcells in adc:
+                q, nb, d = _adc_local_shortlist(
+                    ids, encode(mat), lut, qids, AUDIT_SHORTLIST, cells, qcells
                 )
-                cand_ids = ids[mask]
-                if not len(cand_ids):
-                    continue
-                # quantized key for BOTH local and global selection
-                # (see cosine_topk_pq: boundary ties must not depend
-                # on corpus partitioning)
-                cand_q = np.floor(dist[qi][mask] * 1e6).astype(np.int64)
-                order = np.lexsort((cand_ids, cand_q))[:shortlist]
-                res.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qids[qi],
-                            "neighbor_id": cand_ids[order],
-                            "adc_1e6": cand_q[order],
-                        }
-                    )
-                )
-            if res:
-                yield pd.concat(res, ignore_index=True)
+                out.append(pd.DataFrame(
+                    {"variant": name, "query_id": q, "neighbor_id": nb, "adc_1e6": d}
+                ))
+            # adc_1e6 is NaN (-> null) outside the ADC variants
+            yield pd.concat(out, ignore_index=True)
 
-    partial = codes.mapInPandas(adc_partial, out_schema)
-    w_short = Window.partitionBy("query_id").orderBy(
-        F.col("adc_1e6").asc(), F.col("neighbor_id")
+    c = _vecs(corpus, "vec_id", "embedding", "c")
+    cands = c.mapInPandas(scan, "variant string, " + _ADC_SCHEMA).repartition(
+        "query_id"
     )
-    short = (
-        partial.withColumn("r", F.row_number().over(w_short))
-        .where(F.col("r") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cv")
-    )
-    cos = dot(F.col("qv"), F.col("cv")) / (
-        norm(F.col("qv")) * norm(F.col("cv"))
-    )
-    scored = (
-        short.join(F.broadcast(q), "query_id")
-        .join(c, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.floor(cos * F.lit(1000000.0)).cast("long").alias("cos_1e6"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_1e6").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_1e6")
+    # the shortlist cut applies to the ADC variants only
+    keep = F.when(F.col("adc_1e6").isNull(), F.col("r")).otherwise(AUDIT_SHORTLIST)
+    return _rescore_topk(
+        _shortlist(cands, keep, ("variant",)), queries, corpus, k, "vec_id",
+        "embedding", ("variant",),
     )

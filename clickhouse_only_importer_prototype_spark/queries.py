@@ -4050,52 +4050,36 @@ def ann_cosine_topk_pq_prebuilt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ann_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall audit of both approximate ANN variants against the
-    oracled brute-force top-k (operators/similarity.topk_recall).
+    """Recall audit of the four approximate ANN variants (ivf, lsh, pq,
+    ivfpq) against the oracled brute-force top-k
+    (operators/similarity.topk_recall_by_variant over ``_ann_variants``).
 
     The approximate side is engine-only forever (no SQL twin), but its
     RECALL against the deterministic brute force is computable
-    in-engine and stable as a floor check: IVF >= 0.5, SRP-LSH >= 0.7
-    (measured 0.56-0.60 / 0.90-0.98 at sf0.01-sf0.1; both floors hold
-    with margin). The oracle recomputes truth_pairs (k rows per query
-    — the brute-force contract) and pins meets_floor TRUE, so recall
-    drift below the floor hash-mismatches the hard gate."""
+    in-engine and stable as a floor check: IVF >= 0.5, SRP-LSH >= 0.7,
+    PQ >= 0.6, IVF-PQ >= 0.45 (measured 0.56-0.60 / 0.90-0.98 /
+    0.90-1.0 / 0.54-0.58 at sf0.01-sf0.1; IVF-PQ tracks the coarse
+    prune, like IVF). The oracle recomputes truth_pairs (k rows per
+    query — the brute-force contract) and pins meets_floor TRUE, so
+    recall drift below a floor hash-mismatches the hard gate."""
+    return sim_ops.topk_recall_by_variant(
+        _ann_variants(spark, sf_dir),
+        {"ivf": 500, "lsh": 700, "pq": 600, "ivfpq": 450},
+    )
+
+
+def _ann_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every ANN variant's top-5 for the vec_id < 10 query block, from
+    one Python pass over the corpus (sim_ops.cosine_topk_all_variants);
+    each variant equals its ann_cosine_topk* row. The footer-exact row
+    count skips the trainers' sizing count job."""
     emb = load(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") < 10)
-    # tiny (n_queries x k rows) but referenced by both variants' semi
-    # joins and the totals — persist so brute force runs once
-    truth = sim_ops.cosine_topk_bruteforce(emb, q, k=5).persist()
-    # ivf and ivfpq share IDENTICAL coarse-training params (n_centroids
-    # 16, iters 2, default seed), so train the seeded k-means ONCE and
-    # inject it — deterministic training makes the shared array
-    # bit-identical to per-variant retraining (r12, guide §2.4; pinned
-    # by tests/test_similarity_shared_training.py). Footer-exact row
-    # counts kill the trainers' sizing count jobs (guide §1.2).
-    nrows = _footer_rows(sf_dir, "embeddings")
-    cents = sim_ops.ivf_train_centroids(
-        emb, dim=64, n_centroids=16, iters=2, n_rows=nrows
-    )
-    ivf = sim_ops.cosine_topk_ivf(
-        emb, q, dim=64, k=5, n_centroids=16, nprobe=4, cents=cents
-    )
-    lsh = sim_ops.cosine_topk_lsh(
-        emb, q, dim=64, k=5, n_planes=4, n_tables=16
-    )
-    pq = sim_ops.cosine_topk_pq(
-        emb, q, dim=64, k=5, m=8, n_codes=32, shortlist=200,
-        corpus_rows=nrows,
-    )
-    ivfpq = sim_ops.cosine_topk_ivfpq(
-        emb, q, dim=64, k=5, cents=cents, corpus_rows=nrows
-    )
-    return (
-        sim_ops.topk_recall(truth, ivf, "ivf", 500)
-        .unionByName(sim_ops.topk_recall(truth, lsh, "lsh", 700))
-        # PQ floor 0.6: measured 1.0 / 0.90 at sf0.01 / sf0.1
-        .unionByName(sim_ops.topk_recall(truth, pq, "pq", 600))
-        # IVFPQ floor 0.45: measured 0.58 / 0.54 — tracks the coarse
-        # prune, like standalone IVF's 0.5 floor at measured 0.56
-        .unionByName(sim_ops.topk_recall(truth, ivfpq, "ivfpq", 450))
+    return sim_ops.cosine_topk_all_variants(
+        emb,
+        emb.where(F.col("vec_id") < 10),
+        dim=64,
+        k=5,
+        corpus_rows=_footer_rows(sf_dir, "embeddings"),
     )
 
 
@@ -11724,8 +11708,9 @@ def weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ann_ranking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rank-aware quality audit of both ANN variants vs the exact
-    brute-force top-5 (operators/similarity.topk_ranking_quality):
+    """Rank-aware quality audit of the four ANN variants vs the exact
+    brute-force top-5 (operators/similarity.
+    topk_ranking_quality_by_variant over ``_ann_variants``):
     MRR (where the first true neighbor lands) and binary NDCG@5 (how
     well the whole list is ordered) as pinned floor booleans —
     same gate pattern as ann_recall_check, but sensitive to ORDERING
@@ -11735,52 +11720,15 @@ def ann_ranking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     1.00/0.93+ (pq), 1.00/0.66+ (ivfpq) at sf0.01-sf0.1 vs floors
     0.60/0.40 (ivf, ivfpq — the coarse prune bounds list ordering)
     and 0.80/0.70 (lsh, pq)."""
-    emb = load(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") < 10)
-    truth = sim_ops.cosine_topk_bruteforce(emb, q, k=5).persist()
-    # shared seeded coarse k-means for ivf + ivfpq (identical training
-    # params -> identical centroids; r12, guide §2.4 — see
-    # ann_recall_check), footer-exact counts for the trainer sizing
-    nrows = _footer_rows(sf_dir, "embeddings")
-    cents = sim_ops.ivf_train_centroids(
-        emb, dim=64, n_centroids=16, iters=2, n_rows=nrows
-    )
-    ivf = sim_ops.cosine_topk_ivf(
-        emb, q, dim=64, k=5, n_centroids=16, nprobe=4, cents=cents
-    )
-    lsh = sim_ops.cosine_topk_lsh(
-        emb, q, dim=64, k=5, n_planes=4, n_tables=16
-    )
-    pq = sim_ops.cosine_topk_pq(
-        emb, q, dim=64, k=5, m=8, n_codes=32, shortlist=200,
-        corpus_rows=nrows,
-    )
-    ivfpq = sim_ops.cosine_topk_ivfpq(
-        emb, q, dim=64, k=5, cents=cents, corpus_rows=nrows
-    )
-    return (
-        sim_ops.topk_ranking_quality(
-            truth, ivf, "ivf", k=5,
-            mrr_floor_per_1000=600, ndcg_floor_per_1000=400,
-        )
-        .unionByName(
-            sim_ops.topk_ranking_quality(
-                truth, lsh, "lsh", k=5,
-                mrr_floor_per_1000=800, ndcg_floor_per_1000=700,
-            )
-        )
-        .unionByName(
-            sim_ops.topk_ranking_quality(
-                truth, pq, "pq", k=5,
-                mrr_floor_per_1000=800, ndcg_floor_per_1000=700,
-            )
-        )
-        .unionByName(
-            sim_ops.topk_ranking_quality(
-                truth, ivfpq, "ivfpq", k=5,
-                mrr_floor_per_1000=600, ndcg_floor_per_1000=400,
-            )
-        )
+    return sim_ops.topk_ranking_quality_by_variant(
+        _ann_variants(spark, sf_dir),
+        k=5,
+        floors_per_1000={
+            "ivf": (600, 400),
+            "lsh": (800, 700),
+            "pq": (800, 700),
+            "ivfpq": (600, 400),
+        },
     )
 
 

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -29,6 +30,33 @@ def spark():
         shuffle_partitions=8,
     )
     yield s
+
+
+@pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(fn)`` -> (fn(), number of Spark jobs fn submitted):
+    fn runs under its own job group, counted by the status tracker."""
+    sc = spark.sparkContext
+    # every local property setJobGroup sets, restored afterwards so later
+    # jobs of the shared session do not inherit the group
+    props = (
+        "spark.jobGroup.id",
+        "spark.job.description",
+        "spark.job.interruptOnCancel",
+    )
+
+    def run(fn):
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        saved = {p: sc.getLocalProperty(p) for p in props}
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            for p, v in saved.items():
+                sc.setLocalProperty(p, v)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 @pytest.fixture(scope="session")
