@@ -138,19 +138,6 @@ def run_tier(spark, tier: str) -> dict:
             pipelines.combine_cna, spark, out_cna, True,
         )
         timed("combine_mutations", pipelines.combine_mutations, spark, out_mut)
-        # the single-job modes that fuse convert + combine
-        n = timed(
-            "convert_cna_partitioned_with_derived",
-            pipelines.convert_cna_partitioned, spark, studies,
-            os.path.join(work, "out_part"), True,
-        )
-        assert n == n_studies
-        n = timed(
-            "convert_mutations_partitioned",
-            pipelines.convert_mutations_partitioned, spark, studies,
-            os.path.join(work, "out_mpart"),
-        )
-        assert n == n_studies
     shutil.rmtree(work, ignore_errors=True)
     per_study = {
         k: round(v / n_studies, 4) for k, v in timings.items()

@@ -1,4 +1,5 @@
-"""CLI mirroring the reference's six modes (cmd/cli/main.go:46-105).
+"""CLI mirroring the reference's six modes (cmd/cli/main.go:46-105),
+plus ddl, load-clickhouse, checksum and query.
 
 Usage:
     python -m clickhouse_only_importer_prototype_spark.cli \
@@ -15,13 +16,6 @@ import time
 from clickhouse_only_importer_prototype_spark.plans import pipelines
 from clickhouse_only_importer_prototype_spark.session import get_spark
 
-# older mode names -> the reference mode that now makes the same call
-ALIASES = {
-    "convert-mutations-grouped": "convert-mutations",
-    "convert-mutations-grouped-salvage": "convert-mutations",
-    "convert-cna-grouped": "convert-cna",
-    "convert-cna-grouped-with-derived": "convert-cna-with-derived",
-}
 MODES = (
     # the reference's modes. convert-* read every input file in one scan
     # and write each table once, into the reference's per-file layout
@@ -33,23 +27,15 @@ MODES = (
     "combine-cna",
     "combine-cna-with-derived",
     "combine-mutations",
-    # beyond the reference: single-job partitioned output for
-    # many-study corpora (see pipelines.convert_cna_partitioned /
-    # convert_mutations_partitioned)
-    "convert-cna-partitioned",
-    "convert-cna-partitioned-with-derived",
-    "convert-mutations-partitioned",
-    # older names that once selected the single-scan plan (ALIASES);
-    # kept so existing scripts run
-    *ALIASES,
     # beyond the reference: emit the ClickHouse CREATE TABLE statements
     # for the five catalog tables (the DDL the JDBC sink's inserts or an
     # out-of-band parquet load assume on the server)
     "ddl",
     # beyond the reference: bulk-load converted parquet into a live
-    # ClickHouse over the jar-free HTTP interface (DDL + distributed
-    # CSV inserts; see pipelines.load_clickhouse). Credentials via
-    # CLICKHOUSE_USER / CLICKHOUSE_PASSWORD env vars.
+    # ClickHouse over the jar-free HTTP interface (DDL, then one
+    # JSONEachRow insert job per table of per-file outputs; see
+    # pipelines.load_clickhouse). Credentials via CLICKHOUSE_USER /
+    # CLICKHOUSE_PASSWORD env vars.
     "load-clickhouse",
     # beyond the reference: order-independent convergence fingerprint of
     # every parquet table under -parquet-dir (operators/profile.
@@ -247,10 +233,9 @@ def main(argv: list[str] | None = None) -> int:
     logging.basicConfig(level=logging.INFO, format="%(levelname)s %(message)s")
     start = time.time()
     spark = get_spark(app_name=f"cips-{args.mode}")
-    mode = ALIASES.get(args.mode, args.mode)
     rc = 0
     try:
-        if mode in ("convert-cna", "convert-cna-with-derived"):
+        if args.mode in ("convert-cna", "convert-cna-with-derived"):
             # CNA mode aborts on first failure (cna/transformer.go:30-45):
             # report it as a nonzero exit, not a traceback
             try:
@@ -258,37 +243,26 @@ def main(argv: list[str] | None = None) -> int:
                     spark,
                     args.tsv_dir,
                     args.parquet_dir,
-                    with_derived=mode.endswith("with-derived"),
+                    with_derived=args.mode.endswith("with-derived"),
                 )
             except Exception as exc:  # noqa: BLE001
                 logging.error("convert-cna aborted: %s", exc)
                 rc = 1
-        elif mode.startswith("convert-cna-partitioned"):
-            pipelines.convert_cna_partitioned(
-                spark,
-                args.tsv_dir,
-                args.parquet_dir,
-                with_derived=mode.endswith("with-derived"),
-            )
-        elif mode == "convert-mutations-partitioned":
-            pipelines.convert_mutations_partitioned(
-                spark, args.tsv_dir, args.parquet_dir
-            )
-        elif mode == "convert-mutations":
+        elif args.mode == "convert-mutations":
             summary = pipelines.convert_mutations(
                 spark, args.tsv_dir, args.parquet_dir
             )
             rc = 0 if summary.ok else 1
-        elif mode in ("combine-cna", "combine-cna-with-derived"):
+        elif args.mode in ("combine-cna", "combine-cna-with-derived"):
             pipelines.combine_cna(
                 spark,
                 args.parquet_dir,
-                with_derived=mode.endswith("with-derived"),
+                with_derived=args.mode.endswith("with-derived"),
                 output=args.output,
             )
-        elif mode == "combine-mutations":
+        elif args.mode == "combine-mutations":
             pipelines.combine_mutations(spark, args.parquet_dir, output=args.output)
-        elif mode == "load-clickhouse":
+        elif args.mode == "load-clickhouse":
             import os as _os
 
             counts = pipelines.load_clickhouse(

@@ -79,10 +79,7 @@ def genetic_profile_samples(
         ("ORDERED_SAMPLE_LIST", ordered),
     )
     # numPartitions=1, NOT the default: bare spark.range(1) allocates
-    # defaultParallelism (32) partitions for ONE row, and the
-    # partitioned single-job mode unions one of these frames per study
-    # — 1000 studies made a 32,000-task write stage (measured), 31,999
-    # of them empty
+    # defaultParallelism partitions for ONE row, all but one empty
     out = spark.range(0, 1, 1, 1).select(
         *[
             F.when(F.col("id") >= 0, F.lit(v)).cast("string").alias(n)

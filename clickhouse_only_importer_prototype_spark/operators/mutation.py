@@ -145,7 +145,7 @@ def with_sequential_ids_multi(
     file_order: dict[str, int] | None = None,
 ) -> list[DataFrame]:
     """Gapless ids ACROSS several scan frames in one global
-    (file, partition) order — the single-job D3 shape.
+    (file, partition) order — the grouped D3 shape.
 
     Heterogeneous MAF headers force one csv scan per header group
     (Spark applies the first file's header to every file of a
@@ -238,8 +238,8 @@ def mutation(
 
     SAMPLE_ID = ``<study>_<Tumor_Sample_Barcode>`` (:377-380);
     GENETIC_PROFILE_ID is the profile literal; ANNOTATION_JSON "".
-    ``study``/``profile`` may be Columns (the single-job partitioned
-    mode derives them per file from a broadcast manifest); string
+    ``study``/``profile`` may be Columns (convert_mutations' grouped
+    write derives them per file from a broadcast manifest); string
     arguments fold to literals exactly as before. ``keep`` appends
     pass-through columns (see mutation_event).
     """

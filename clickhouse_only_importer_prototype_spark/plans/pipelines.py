@@ -10,13 +10,14 @@ Dataflow parity (SURVEY §2.10):
     writers over Go channels. Spark restatement: ONE multi-path scan
     over every file of the run and ONE write per output table, into
     the reference's per-file layout (each row carries its file's
-    output base; a partitioned write is renamed to the reference file
-    names). CNA rows are parsed positionally — ``split(value, '\\t')``
-    against a broadcast header manifest — so the plan does not grow
-    with the sample columns; genetic_profile_samples is header
-    metadata, written on the driver. CNA files a raw tab split would
-    parse differently from the csv reader (a quote char, a header line
-    missing or repeated) take the per-file csv writer instead.
+    output base; a staged ``partitionBy(__base)`` write is renamed to
+    the reference file names). CNA rows are parsed positionally —
+    ``split(value, '\\t')`` against a broadcast header manifest — so
+    the plan does not grow with the sample columns;
+    genetic_profile_samples is header metadata, written on the driver.
+    CNA files a raw tab split would parse differently from the csv
+    reader (a quote char, a header line missing or repeated) take the
+    per-file csv writer instead.
   * D3 event-id threading across files: subsumed by the prefix-sum id
     assigner over all files at once (operators/mutation.py) — the
     sequential file loop disappears.
@@ -28,7 +29,9 @@ Dataflow parity (SURVEY §2.10):
   * U1 combine: multi-path parquet read (union-all, duplicates kept)
     with one streaming write — the reference materializes each whole
     table in memory (cna/reader_parquet.go:60-64); Spark never does.
-    Reader errors fail loud (intentional fix of :132-137).
+    Reader errors fail loud (intentional fix of :132-137). Each combine
+    output carries a ``_COMBINED`` marker so load-clickhouse never
+    inserts its rows next to the per-file outputs they came from.
 """
 
 from __future__ import annotations
@@ -370,10 +373,18 @@ def convert_mutations(
 def _cna_single_job_scan(
     spark: SparkSession, inputs: list
 ) -> tuple[list, list, list[tuple], DataFrame | None]:
-    """Shared scaffold of the single-scan CNA plans: driver-side header
-    parse (manifest + per-study sample lists), ONE multi-path
-    ``spark.read.text`` scan, broadcast attribution join, a guard
-    aggregation, and positional cell parsing.
+    """The scan of convert_cna: driver-side header parse (manifest +
+    per-study sample lists), ONE multi-path ``spark.read.text`` scan,
+    broadcast attribution join, a guard aggregation, and positional
+    cell parsing.
+
+    Why positional: a CNA header is per-study, so a csv plan is too,
+    and a union of per-study csv plans (one scan node and codegen unit
+    per branch) measured 533.9s at 1,000 studies. ``split(value,
+    '\\t')`` + slice/array_join/posexplode never let the header reach
+    the plan: one text scan took 42.6s for the same studies. Sample
+    names come from sources.tsv.header_line_and_names, the csv reader's
+    own header normalization.
 
     Returns ``(scanned, csv_route, gps_rows, data)``. ``data`` carries
     one row per data line of the ``scanned`` files with
@@ -384,8 +395,7 @@ def _cna_single_job_scan(
     line (the csv reader applies quote='"'), or a header line that is
     unparseable or does not occur exactly once (header rows are removed
     by byte-match, and the csv reader keeps a repeated header row as
-    data). Both lists keep discovery order. See convert_cna_partitioned
-    for the design rationale."""
+    data). Both lists keep discovery order."""
     from pyspark.sql import functions as F
 
     from clickhouse_only_importer_prototype_spark.sources.tsv import (
@@ -504,185 +514,6 @@ def _cna_single_job_scan(
     return scanned, csv_route, gps_rows, data
 
 
-def convert_cna_partitioned(
-    spark: SparkSession,
-    tsv_dir: str,
-    parquet_dir: str,
-    with_derived: bool = False,
-) -> int:
-    """Single-job CNA conversion for many-study corpora (the 100 TB
-    shape of D1/D2): ONE multi-path ``spark.read.text`` scan of every
-    matrix, positional parsing, per-file attribution from a broadcast
-    header manifest, one write per output table.
-
-    Why not a per-study plan union: the previous implementation built
-    one csv plan per study and unioned 1000 branches per table — each
-    branch is its own scan node and codegen unit, so the write stages
-    carried megabyte task binaries and 3x1000 codegen compilations;
-    measured 533.9s for 1000 small studies, SLOWER than a per-study
-    driver loop on 8 threads (229s). A CNA matrix's header is
-    per-study (sample columns differ), so same-header csv batching
-    (the mutations mode's trick, 29.6s at 1000 studies) cannot apply —
-    but the TRANSFORMS are positional, so the header never needs to
-    reach the distributed plan at all: ``split(value, '\\t')`` +
-    slice/array_join/posexplode reproduce pivot-concat and melt, and
-    per-file (study, profile, sample names) join in from a broadcast
-    manifest built by the same driver-side header reads the csv path
-    already does. Measured: 42.6s for the same 1000 studies (12.5x).
-
-    Sample NAMES matter only for SAMPLE_ID/ORDERED_SAMPLE_LIST, and
-    those use Spark's normalized header names (dup -> <name><idx>,
-    empty -> _cN) — taken from sources.tsv.header_line_and_names, the
-    SAME normalization the per-study mode's df.columns yields, so the
-    two modes write byte-identical tables (pinned by test).
-
-    genetic_profile_samples is pure header metadata: built driver-side
-    from the manifest (one metadata-scale write, zero scans).
-
-    Header-row removal is by byte-match against the file's raw header
-    line (a line-oriented scan has no 'first line of its file' marker
-    at task level); a guard aggregation counts header matches and
-    quote chars per file first. A file the raw tab split would parse
-    differently from the csv reader (quotes, a header line missing or
-    repeated) raises here — convert_cna sends such files through the
-    per-file csv writer instead.
-
-    Returns the number of study files planned. CNA posture: abort on
-    first failure (unreadable/headerless file raises).
-    """
-    from pyspark.sql import functions as F
-
-    from clickhouse_only_importer_prototype_spark.schemas import (
-        GENETIC_PROFILE_SAMPLES_SCHEMA,
-    )
-
-    inputs, csv_route, gps_rows, data = _cna_single_job_scan(
-        spark, discover_cna_files(tsv_dir)
-    )
-    if csv_route:
-        raise ValueError(
-            "convert_cna_partitioned: quoted cells or a missing/repeated"
-            " header line in "
-            + ", ".join(it.path for it in csv_route[:5])
-            + " — a raw tab split has no csv quote semantics; convert"
-            " these with convert_cna"
-        )
-    if not inputs:
-        return 0
-    # partition by AUXILIARY copies of the keys: empty-string values
-    # (meta-less files) would round-trip as NULL through hive partition
-    # directories, violating the no-null '' contract — the real data
-    # columns stay inside the files untouched
-    placeholder = F.lit("(none)")
-
-    def with_keys(df):
-        return df.withColumn(
-            "__p_study",
-            F.when(F.col("CANCER_STUDY") == "", placeholder).otherwise(
-                F.col("CANCER_STUDY")
-            ),
-        ).withColumn(
-            "__p_profile",
-            F.when(F.col("GENETIC_PROFILE") == "", placeholder).otherwise(
-                F.col("GENETIC_PROFILE")
-            ),
-        )
-
-    keys = ["__p_study", "__p_profile"]
-    os.makedirs(parquet_dir, exist_ok=True)
-    ga = data.select(
-        F.col("__study").alias("CANCER_STUDY"),
-        F.col("__profile").alias("GENETIC_PROFILE"),
-        F.coalesce(F.col("__cells")[0], F.lit("")).alias("GENE_SYMBOL"),
-        F.array_join(
-            F.slice(
-                F.col("__cells"),
-                cna_ops.FIRST_SAMPLE_IDX + 1,
-                F.col("__n"),
-            ),
-            ",",
-        ).alias("VALUES"),
-    )
-    write_parquet(
-        with_keys(ga),
-        os.path.join(parquet_dir, "genetic_alterations.parquet"),
-        partition_by=keys,
-    )
-    gps = arrow_local_df(spark, gps_rows, GENETIC_PROFILE_SAMPLES_SCHEMA)
-    write_parquet(
-        with_keys(gps),
-        os.path.join(parquet_dir, "genetic_profile_samples.parquet"),
-        partition_by=keys,
-    )
-    if with_derived:
-        exploded = data.select(
-            "__study",
-            "__profile",
-            "__sample_ids",
-            F.coalesce(F.col("__cells")[0], F.lit("")).alias("__gene"),
-            F.posexplode(
-                F.slice(
-                    F.col("__cells"),
-                    cna_ops.FIRST_SAMPLE_IDX + 1,
-                    F.col("__n"),
-                )
-            ).alias("__pos", "__alt"),
-        )
-        derived = exploded.select(
-            F.element_at(
-                F.col("__sample_ids"), F.col("__pos") + 1
-            ).alias("SAMPLE_ID"),
-            F.col("__study").alias("CANCER_STUDY"),
-            F.col("__gene").alias("GENE_SYMBOL"),
-            F.col("__profile").alias("GENETIC_PROFILE"),
-            F.col("__alt").alias("ALTERATION"),
-        )
-        write_parquet(
-            with_keys(derived),
-            os.path.join(parquet_dir, "derived.parquet"),
-            partition_by=keys,
-        )
-    return len(inputs)
-
-
-def _write_mutations_grouped(
-    spark: SparkSession,
-    inputs: list,
-    parquet_dir: str,
-    start_event_id: int,
-) -> None:
-    """Grouped write of convert_mutations: ``inputs`` as one plan
-    (_mutations_single_job_frames: header-group scans, discovery-order
-    ids, broadcast attribution), each table written once into the
-    per-file layout (_write_per_base). Files with zero data rows get
-    schema-only outputs, as the per-file writer's empty write would.
-    All-or-nothing: convert_mutations owns per-file isolation."""
-    from pyspark.sql import functions as F
-
-    joined_frames = _mutations_single_job_frames(spark, inputs, start_event_id)
-    ev_all = _balanced_union(
-        [mut_ops.mutation_event(j, keep=("__base",)) for j in joined_frames]
-    )
-    mut_all = _balanced_union(
-        [
-            mut_ops.mutation(
-                j, F.col("__study"), F.col("__profile"), keep=("__base",)
-            )
-            for j in joined_frames
-        ]
-    )
-    _write_per_base(
-        spark,
-        [
-            ("mutation_event", ev_all, [mut_ops.EVENT_ID]),
-            ("mutation", mut_all, [mut_ops.EVENT_ID]),
-        ],
-        [output_base(it.path, "") for it in inputs],
-        parquet_dir,
-        ".grouped_staging",
-    )
-
-
 def _write_per_base(
     spark: SparkSession,
     tables: list[tuple[str, DataFrame, list[str]]],
@@ -728,7 +559,7 @@ def _maf_header_sig(path: str) -> str:
     """First non-``#`` line of a MAF — the csv header. Driver-side
     single-line read (one fs open per file, no Spark job): multi-path
     csv scans apply the FIRST file's header to every file, so the
-    single-job mode may only batch files whose headers are identical."""
+    grouped write may only batch files whose headers are identical."""
     with open(path, encoding="utf-8", errors="replace") as fh:
         for line in fh:
             if not line.startswith("#"):
@@ -748,21 +579,26 @@ def _balanced_union(dfs: list[DataFrame]) -> DataFrame:
     return dfs[0]
 
 
-def _mutations_single_job_frames(
-    spark: SparkSession, inputs: list, start_event_id: int
-) -> list[DataFrame]:
-    """Shared scaffold of the single-job mutations plans over ``inputs``
-    (non-empty, discovery order): header-signature grouping (Spark's multi-path csv scan applies the
-    first file's header to every file, so only same-header files may
-    share a scan), corpus-wide sequential ids in DISCOVERY order
-    (with_sequential_ids_multi + URI->rank map), and per-file
-    study/profile/output-base attribution joined from a broadcast
-    manifest keyed by the scan's file URI. Returns one joined frame per
-    header group, carrying the MAF columns + MUTATION_EVENT_ID +
-    __file/__study/__profile/__base. A scan file missing from the
-    manifest raises mid-plan (fail loud, never silently unattributed).
-    A file left out of ``inputs`` consumes no ids, as a failed read
-    does in a per-file loop."""
+def _write_mutations_grouped(
+    spark: SparkSession,
+    inputs: list,
+    parquet_dir: str,
+    start_event_id: int,
+) -> None:
+    """Grouped write of convert_mutations: ``inputs`` (non-empty,
+    discovery order) as one plan, each table written once into the
+    per-file layout (_write_per_base). Files are grouped by header
+    signature (Spark's multi-path csv scan applies the first file's
+    header to every file, so only same-header files may share a scan);
+    ids are corpus-wide and sequential in DISCOVERY order
+    (with_sequential_ids_multi + URI->rank map); per-file
+    study/profile/output base join from a broadcast manifest keyed by
+    the scan's file URI. A scan file missing from the manifest raises
+    mid-plan (fail loud, never silently unattributed). Files with zero
+    data rows get schema-only outputs, as the per-file writer's empty
+    write would; a file left out of ``inputs`` consumes no ids, as a
+    failed read does in a per-file loop. All-or-nothing:
+    convert_mutations owns per-file isolation."""
     from pyspark.sql import functions as F
 
     groups: dict[str, list] = {}
@@ -781,108 +617,56 @@ def _mutations_single_job_frames(
     ranked = mut_ops.with_sequential_ids_multi(
         frames, start=start_event_id, file_order=file_order
     )
-    manifest = [
-        (
-            _spark_file_uri(it.path),
-            it.cancer_study_id,
-            it.genetic_profile_id,
-            output_base(it.path, ""),
-        )
-        for g in groups.values()
-        for it in g
-    ]
     mf = arrow_local_df(
         spark,
-        manifest,
+        [
+            (
+                _spark_file_uri(it.path),
+                it.cancer_study_id,
+                it.genetic_profile_id,
+                output_base(it.path, ""),
+            )
+            for it in inputs
+        ],
         "__file string, __study string, __profile string, __base string",
     )
-    joined_frames = []
-    for r in ranked:
-        joined = r.join(F.broadcast(mf), "__file", "left").withColumn(
+    missing = F.raise_error(
+        F.concat_ws(
+            " ",
+            F.lit("grouped mutations write: scan file missing from manifest:"),
+            F.col("__file"),
+        )
+    ).cast("string")
+    joined_frames = [
+        r.join(F.broadcast(mf), "__file", "left").withColumn(
             "__study",
-            F.when(
-                F.col("__study").isNull(),
-                F.raise_error(
-                    F.concat_ws(
-                        " ",
-                        F.lit(
-                            "single-job mutations mode: scan file"
-                            " missing from manifest:"
-                        ),
-                        F.col("__file"),
-                    )
-                ).cast("string"),
-            ).otherwise(F.col("__study")),
+            F.when(F.col("__study").isNull(), missing).otherwise(
+                F.col("__study")
+            ),
         )
-        joined_frames.append(joined)
-    return joined_frames
-
-
-def convert_mutations_partitioned(
-    spark: SparkSession,
-    tsv_dir: str,
-    parquet_dir: str,
-    start_event_id: int = 0,
-) -> int:
-    """Single-job mutations conversion for many-study corpora — the
-    D3 dataflow at its 100 TB shape (compare convert_cna_partitioned).
-
-    A per-study driver loop pays 2 write actions + 1 count per file
-    (measured 2.2s/study sequential, 0.8s/study on 8 threads — a
-    scheduling floor, not data cost). Here files GROUP by header
-    signature (one driver-side first-line read each; Spark's
-    multi-path csv scan applies the first file's header to all files,
-    so only same-header files may share a scan), ids are assigned by
-    with_sequential_ids_multi — per-(file, partition) counts prefix-
-    summed GLOBALLY in sorted-path order, byte-identical to the
-    sequential loop's ids — and each output table unions across groups
-    and writes ONCE: two write jobs total regardless of study count.
-    Per-file study/profile attribution joins a broadcast manifest on
-    the scan's file tag. Output = the COMBINED tables directly
-    (mutation_event.parquet, mutation.parquet) — this mode fuses
-    convert + combine, which is what a 1000-study ingest actually
-    wants; per-study files, if needed, are a partition-pruned read
-    away via the GENETIC_PROFILE_ID hive partition on mutation.
-
-    Failure posture: all-or-nothing per run (one Spark job per table),
-    vs convert_mutations' per-file isolation — at this shape, replays are
-    cheaper than partial-output bookkeeping. Returns the number of
-    files planned.
-    """
-    from pyspark.sql import functions as F
-
-    inputs = discover_mutation_files(tsv_dir)
-    logger.info("found %d mutation files (partitioned)", len(inputs))
-    if not inputs:
-        return 0
-    joined_frames = _mutations_single_job_frames(spark, inputs, start_event_id)
-    ev_parts, mut_parts = [], []
-    for joined in joined_frames:
-        ev_parts.append(mut_ops.mutation_event(joined))
-        mut_parts.append(
+        for r in ranked
+    ]
+    ev_all = _balanced_union(
+        [mut_ops.mutation_event(j, keep=("__base",)) for j in joined_frames]
+    )
+    mut_all = _balanced_union(
+        [
             mut_ops.mutation(
-                joined, F.col("__study"), F.col("__profile")
+                j, F.col("__study"), F.col("__profile"), keep=("__base",)
             )
-        )
-    os.makedirs(parquet_dir, exist_ok=True)
-    write_parquet(
-        _balanced_union(ev_parts),
-        os.path.join(parquet_dir, "mutation_event.parquet"),
+            for j in joined_frames
+        ]
     )
-    # '' profile (meta-less file) would round-trip as NULL through a
-    # hive partition dir — same placeholder contract as the CNA mode
-    mut_all = _balanced_union(mut_parts).withColumn(
-        "__p_profile",
-        F.when(
-            F.col("GENETIC_PROFILE_ID") == "", F.lit("(none)")
-        ).otherwise(F.col("GENETIC_PROFILE_ID")),
+    _write_per_base(
+        spark,
+        [
+            ("mutation_event", ev_all, [mut_ops.EVENT_ID]),
+            ("mutation", mut_all, [mut_ops.EVENT_ID]),
+        ],
+        [output_base(it.path, "") for it in inputs],
+        parquet_dir,
+        ".grouped_staging",
     )
-    write_parquet(
-        mut_all,
-        os.path.join(parquet_dir, "mutation.parquet"),
-        partition_by=["__p_profile"],
-    )
-    return len(inputs)
 
 
 def _check_unique_bases(mode: str, inputs: list) -> None:
@@ -976,30 +760,21 @@ def load_clickhouse(
     url: str,
     user: str | None = None,
     password: str | None = None,
-    create_tables: bool = True,
 ) -> dict[str, int]:
     """convert -> load: the deployment tail of the S9 north star over
-    the jar-free HTTP interface. For each catalog kind, union-all every
-    ``*_<kind>.parquet`` (per-study outputs) plus a bare
-    ``<kind>.parquet`` (single-job combined outputs) under
-    ``parquet_dir`` in one multi-path scan and bulk-insert it with
+    the jar-free HTTP interface. For each catalog kind, first run its
+    catalog DDL (MergeTree CREATE TABLE IF NOT EXISTS from
+    sinks.clickhouse.catalog_ddl) driver-side, then union-all every
+    per-file output ``*_<kind>.parquet`` under ``parquet_dir`` in one
+    multi-path scan and bulk-insert it as JSONEachRow with
     ``write_clickhouse_http`` — one distributed job per table.
-    ``combined-*`` outputs are EXCLUDED: they are derivable duplicates
-    of the per-study files sitting in the same directory (running
-    combine then load would double every row); load the combined dir
-    explicitly if that is the intent.
 
-    Both naming forms present for one kind is REFUSED up front (same
-    posture as the convert modes' duplicate-base check): per-study
-    ``*_<kind>.parquet`` files next to a bare ``<kind>.parquet`` means
-    a convert run and a partitioned (fused-combined) run wrote
-    into the same -parquet-dir — loading the union would silently
-    double every row of that kind (round-10 advice).
-
-    ``create_tables`` first executes the catalog DDL (MergeTree
-    CREATE TABLE IF NOT EXISTS from sinks.clickhouse.catalog_ddl)
-    driver-side over the same interface. Returns {table: rows_sent}
-    for every kind that had files."""
+    Combine outputs are skipped: they repeat the rows of the per-file
+    outputs next to them, so loading both would insert every row twice.
+    A combine output is a dir holding combine_parquet's ``_COMBINED``
+    marker, or one named ``combined*``: the default -output, which the
+    reference's combine writes with no marker. Returns
+    {table: rows_sent} for every kind that had per-file outputs."""
     from clickhouse_only_importer_prototype_spark.schemas import ALL_TABLES
     from clickhouse_only_importer_prototype_spark.sinks.clickhouse import (
         catalog_ddl,
@@ -1009,31 +784,28 @@ def load_clickhouse(
         write_clickhouse_http,
     )
 
+    def is_combined(path: str) -> bool:
+        return os.path.basename(path).startswith("combined") or os.path.exists(
+            os.path.join(path, COMBINED_MARKER)
+        )
+
     ddls = catalog_ddl()
     counts: dict[str, int] = {}
     for kind in ALL_TABLES:
-        per_study = sorted(
-            p
-            for p in _glob.glob(os.path.join(parquet_dir, f"*_{kind}.parquet"))
-            if not os.path.basename(p).startswith("combined")
-        )
-        bare = sorted(
-            _glob.glob(os.path.join(parquet_dir, f"{kind}.parquet"))
-        )
-        if per_study and bare:
-            raise ValueError(
-                f"load_clickhouse: {kind!r} exists in BOTH naming forms"
-                f" under {parquet_dir} — per-study"
-                f" {[os.path.basename(p) for p in per_study[:3]]}... and"
-                f" combined {[os.path.basename(p) for p in bare]};"
-                " loading both would double every row. Point"
-                " -parquet-dir at one run's output, or remove one form."
+        paths, skipped = [], []
+        for p in sorted(
+            _glob.glob(os.path.join(parquet_dir, f"*_{kind}.parquet"))
+        ):
+            (skipped if is_combined(p) else paths).append(p)
+        if skipped:
+            logger.info(
+                "not loading combine output(s) %s into %s",
+                [os.path.basename(p) for p in skipped],
+                kind,
             )
-        paths = per_study + bare
         if not paths:
             continue
-        if create_tables:
-            execute_clickhouse_http(url, ddls[kind], user, password)
+        execute_clickhouse_http(url, ddls[kind], user, password)
         df = spark.read.parquet(*paths)
         counts[kind] = write_clickhouse_http(
             df, url, kind, user=user, password=password
@@ -1047,13 +819,14 @@ def load_clickhouse(
     return counts
 
 
-def combine_parquet(
-    spark: SparkSession,
-    pattern: str,
-    output_path: str,
-    single_file: bool = True,
-) -> int:
-    """U1 union-all by glob (cna/reader_parquet.go:86-143).
+# Marker file combine_parquet leaves in each output dir. Parquet readers
+# skip names starting with '_', so it never reaches a scan.
+COMBINED_MARKER = "_COMBINED"
+
+
+def combine_parquet(spark: SparkSession, pattern: str, output_path: str) -> int:
+    """U1 union-all by glob (cna/reader_parquet.go:86-143), written as
+    one file plus the COMBINED_MARKER that load_clickhouse skips on.
 
     Duplicate-preserving: multi-path parquet scan IS union-all. The
     output file is excluded from its own input glob (:101-108). Returns
@@ -1065,7 +838,8 @@ def combine_parquet(
         logger.warning("no files matched %s", pattern)
         return 0
     df: DataFrame = spark.read.parquet(*paths)
-    write_parquet(df, output_path, single_file=single_file)
+    write_parquet(df, output_path, single_file=True)
+    open(os.path.join(output_path, COMBINED_MARKER), "w").close()
     return len(paths)
 
 

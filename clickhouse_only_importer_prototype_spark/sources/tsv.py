@@ -62,8 +62,8 @@ def header_line_and_names(
     """(raw header line without EOL, Spark-normalized column names) or
     None for empty/comment-only/quoted-header files. The raw line is
     what ``spark.read.text`` yields for that row (text source strips
-    \\n, \\r\\n) — the single-scan partitioned CNA mode filters header
-    rows by matching it byte-for-byte. Name normalization: see
+    \\n, \\r\\n) — convert_cna's single text scan filters header rows
+    by matching it byte-for-byte. Name normalization: see
     _header_only_schema."""
     from collections import Counter
 
@@ -108,7 +108,7 @@ def read_cna_matrix(spark: SparkSession, path: str) -> DataFrame:
 
 def read_maf(spark: SparkSession, path: str | list[str]) -> DataFrame:
     """Read mutation MAF TSV(s); leading '#' comments skipped natively.
-    Multi-path callers (the single-job mode) group files by identical
+    Multi-path callers (convert_mutations' grouped write) group files by identical
     header, so the first path's driver-side header schema is the
     group's schema — again, no inference job."""
     paths = [path] if isinstance(path, str) else list(path)

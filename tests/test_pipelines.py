@@ -185,41 +185,6 @@ def test_combine_with_output_override(spark, study_tree, tmp_path):
     assert len(combined) == 3
 
 
-def test_convert_cna_partitioned_matches_per_study(spark, study_tree, tmp_path):
-    per_study = tmp_path / "per_study"
-    single_job = tmp_path / "single_job"
-    pipelines.convert_cna(spark, str(study_tree), str(per_study), with_derived=True)
-    n = pipelines.convert_cna_partitioned(
-        spark, str(study_tree), str(single_job), with_derived=True
-    )
-    assert n == 2
-
-    def rows(q):
-        return sorted(map(tuple, duckdb.sql(q).fetchall()))
-
-    cols = "CANCER_STUDY, GENETIC_PROFILE, GENE_SYMBOL, VALUES"
-    a = rows(
-        f"select {cols} from read_parquet("
-        f"'{per_study}/*_genetic_alterations.parquet/*.parquet')"
-    )
-    b = rows(
-        f"select {cols} from read_parquet("
-        f"'{single_job}/genetic_alterations.parquet/*/*/*.parquet', "
-        f"hive_partitioning=true)"
-    )
-    assert a == b and len(a) == 3
-    dcols = "SAMPLE_ID, CANCER_STUDY, GENE_SYMBOL, GENETIC_PROFILE, ALTERATION"
-    da = rows(
-        f"select {dcols} from read_parquet("
-        f"'{per_study}/*_derived.parquet/*.parquet')"
-    )
-    db = rows(
-        f"select {dcols} from read_parquet("
-        f"'{single_job}/derived.parquet/*/*/*.parquet', hive_partitioning=true)"
-    )
-    assert da == db and len(da) == 7
-
-
 def test_cli_query_oracle_mode(spark, sf_dir, capsys):
     """-oracle runs the registered query AND its DuckDB oracle on the
     same dir and exits 0 on the driver-identical triple match."""
@@ -373,238 +338,104 @@ def test_convert_mutations_grouped_failure_replays_per_file(
     assert not (out / ".grouped_staging").exists()
 
 
-def test_convert_mutations_partitioned_matches_per_study(
-    spark, study_tree, tmp_path
-):
-    """Single-job mutations mode: ids byte-identical to the sequential
-    loop (global prefix-sum across header groups in sorted-path
-    order), full row equality against the per-study convert's
-    outputs, two write jobs total. Three studies where the middle one
-    (sorted order) has a DIFFERENT header, so ids must interleave
-    across header groups."""
-    root = tmp_path / "studies_m"
-    mafs = {
-        # s_01 and s_03 share a header; s_02 differs (extra column and
-        # different order) -> 2 header groups, ids interleave 0..5
-        "s_01": (
-            "Hugo_Symbol\tEntrez_Gene_Id\tStart_Position\t"
-            "Tumor_Sample_Barcode\n"
-            "TP53\t7157\t1\tSA\nBRCA1\t672\t2\tSA\n"
-        ),
-        "s_02": (
-            "#v2\nTumor_Sample_Barcode\tHugo_Symbol\tEntrez_Gene_Id\t"
-            "Center\tStart_Position\n"
-            "SB\tEGFR\t1956\tC1\t5\nSB\tKRAS\t3845\tC1\t7\n"
-        ),
-        "s_03": (
-            "Hugo_Symbol\tEntrez_Gene_Id\tStart_Position\t"
-            "Tumor_Sample_Barcode\n"
-            "ALK\t238\t9\tSC\nMYC\t4609\t11\tSC\n"
-        ),
-    }
+def _maf_tree(root, mafs):
+    """One study dir per ``mafs`` entry (name -> MAF body), or one dir
+    holding several MAFs when a name carries a ``/<stem>``."""
     for name, body in mafs.items():
-        d = root / name
-        d.mkdir(parents=True)
-        (d / "meta_mutations.txt").write_text(
-            f"cancer_study_identifier: {name}\nstable_id: mutations\n"
-            "data_filename: data_mutations.txt\n"
+        study, _, stem = name.partition("/")
+        d = root / study
+        d.mkdir(parents=True, exist_ok=True)
+        data = f"data_mutations{stem}.txt"
+        (d / f"meta_mutations{stem}.txt").write_text(
+            f"cancer_study_identifier: {study}\nstable_id: mutations{stem}\n"
+            f"data_filename: {data}\n"
         )
-        (d / "data_mutations.txt").write_text(body)
+        (d / data).write_text(body)
 
-    per_study = tmp_path / "per_study_m"
-    single_job = tmp_path / "single_job_m"
-    pipelines.convert_mutations(spark, str(root), str(per_study))
-    n = pipelines.convert_mutations_partitioned(
-        spark, str(root), str(single_job)
+
+_MAF_HDR = "Hugo_Symbol\tEntrez_Gene_Id\tStart_Position\tTumor_Sample_Barcode\n"
+
+
+def _header_groups_tree(tmp_path):
+    """g_02 has a different header (a second scan group, so ids
+    interleave across groups); g_03 has zero data rows (schema-only
+    output both ways)."""
+    root = tmp_path / "studies_g"
+    _maf_tree(
+        root,
+        {
+            "g_01": _MAF_HDR + "TP53\t7157\t1\tSA\nBRCA1\t672\t2\tSA\n",
+            "g_02": "#v2\nTumor_Sample_Barcode\tHugo_Symbol\tEntrez_Gene_Id\t"
+            "Center\tStart_Position\nSB\tEGFR\t1956\tC1\t5\n",
+            "g_03": _MAF_HDR,
+            "g_04": _MAF_HDR + "ALK\t238\t9\tSC\n",
+        },
     )
-    assert n == 3
-
-    def rows(q):
-        return sorted(map(tuple, duckdb.sql(q).fetchall()))
-
-    ev_cols = "MUTATION_EVENT_ID, ENTREZ_GENE_ID, START_POSITION"
-    a = rows(
-        f"select {ev_cols} from read_parquet("
-        f"'{per_study}/*_mutation_event.parquet/*.parquet')"
-    )
-    b = rows(
-        f"select {ev_cols} from read_parquet("
-        f"'{single_job}/mutation_event.parquet/*.parquet')"
-    )
-    assert a == b and len(a) == 6
-    # ids dense and gapless corpus-wide, interleaving the header groups
-    assert [r[0] for r in b] == list(range(6))
-    # sorted-path order: s_02's rows (the other header group) sit at
-    # ids 2-3, BETWEEN the same-group files s_01 and s_03
-    by_id = {r[0]: r[1] for r in b}
-    assert by_id[2] == "1956" and by_id[3] == "3845"
-
-    m_cols = "MUTATION_EVENT_ID, GENETIC_PROFILE_ID, SAMPLE_ID"
-    ma = rows(
-        f"select {m_cols} from read_parquet("
-        f"'{per_study}/*_mutation.parquet/*.parquet')"
-    )
-    mb = rows(
-        f"select {m_cols} from read_parquet("
-        f"'{single_job}/mutation.parquet/*/*.parquet', "
-        f"hive_partitioning=true)"
-    )
-    assert ma == mb and len(ma) == 6
+    return root
 
 
-def test_convert_mutations_partitioned_exotic_names_via_symlink(
-    spark, tmp_path
-):
-    """ADVICE r9: two correctness traps in the single-job manifest/id
-    plumbing, both exercised at once.
-
-    (1) File URI percent-encoding can permute id order vs the
-    sequential loop's raw-path discovery order: 'x>y' scans as
-    'x%3Ey' and '%'(0x25) < '0'(0x30), so lexicographic-URI ordering
-    puts 'x>y.txt' BEFORE 'x0y.txt' while raw-path order is the
-    reverse — ids must follow discovery order (URI->rank map).
-
-    (2) Manifest keys built with Path.resolve() resolve symlinks but
-    input_file_name() does not (verified empirically), so a symlinked
-    tsv_dir made every scan tag miss the broadcast manifest.
-    """
-
+def _exotic_names_symlink_tree(tmp_path):
+    """Two traps of the grouped manifest/id plumbing at once.
+    (1) 'x>y' scans as 'x%3Ey' and '%'(0x25) < '0'(0x30), so sorting
+    scan URIs would put 'x>y' BEFORE 'x0y' while raw-path discovery
+    order is the reverse: ids must follow discovery order.
+    (2) input_file_name() does not resolve symlinks, so manifest keys
+    must not either, or every file under a symlinked tsv_dir misses
+    the broadcast manifest."""
     real_root = tmp_path / "real_studies"
-    d = real_root / "s_exotic"
-    d.mkdir(parents=True)
-    hdr = (
-        "Hugo_Symbol\tEntrez_Gene_Id\tStart_Position\t"
-        "Tumor_Sample_Barcode\n"
-    )
-    # raw-path sorted (= discovery = sequential) order:
-    #   data_mutations_x0y.txt  then  data_mutations_x>y.txt
-    # lexicographic scan-URI order is the reverse.
-    (d / "meta_mutations_a.txt").write_text(
-        "cancer_study_identifier: s_exotic\nstable_id: mutations\n"
-        "data_filename: data_mutations_x0y.txt\n"
-    )
-    (d / "data_mutations_x0y.txt").write_text(
-        hdr + "TP53\t7157\t1\tSA\nBRCA1\t672\t2\tSA\n"
-    )
-    (d / "meta_mutations_b.txt").write_text(
-        "cancer_study_identifier: s_exotic\nstable_id: mutations2\n"
-        "data_filename: data_mutations_x>y.txt\n"
-    )
-    (d / "data_mutations_x>y.txt").write_text(
-        hdr + "EGFR\t1956\t5\tSB\nKRAS\t3845\t7\tSB\n"
+    _maf_tree(
+        real_root,
+        {
+            "s_exotic/_x0y": _MAF_HDR + "TP53\t7157\t1\tSA\nBRCA1\t672\t2\tSA\n",
+            "s_exotic/_x>y": _MAF_HDR + "EGFR\t1956\t5\tSB\nKRAS\t3845\t7\tSB\n",
+        },
     )
     link = tmp_path / "linked_studies"
     os.symlink(real_root, link)
-
-    per_study = tmp_path / "per_study_x"
-    single_job = tmp_path / "single_job_x"
-    summary = pipelines.convert_mutations(spark, str(link), str(per_study))
-    assert summary.ok
-    n = pipelines.convert_mutations_partitioned(
-        spark, str(link), str(single_job)
-    )
-    assert n == 2
-
-    def rows(q):
-        return sorted(map(tuple, duckdb.sql(q).fetchall()))
-
-    cols = "MUTATION_EVENT_ID, ENTREZ_GENE_ID, START_POSITION"
-    a = rows(
-        f"select {cols} from read_parquet("
-        f"'{per_study}/*_mutation_event.parquet/*.parquet')"
-    )
-    b = rows(
-        f"select {cols} from read_parquet("
-        f"'{single_job}/mutation_event.parquet/*.parquet')"
-    )
-    assert a == b and len(a) == 4
-    # discovery (raw-path) order: x0y's rows take ids 0-1, x>y's 2-3 —
-    # lexicographic-URI ordering would have flipped them
-    by_id = {r[0]: r[1] for r in b}
-    assert by_id[0] == "7157" and by_id[2] == "1956"
+    return link
 
 
-def test_convert_cna_partitioned_quote_guard(spark, tmp_path):
-    """ADVICE r9: the single-job CNA mode parses rows with a raw
-    split(value, '\\t') — no csv quote semantics — so a data cell
-    containing '\"' must fail LOUD (the per-study csv mode applies
-    default quote handling and would diverge silently)."""
-    root = tmp_path / "studies_q"
-    d = root / "s_q"
-    d.mkdir(parents=True)
-    (d / "meta_cna.txt").write_text(
-        "cancer_study_identifier: s_q\nstable_id: gistic\n"
-        "data_filename: data_cna.txt\n"
-    )
-    (d / "data_cna.txt").write_text(
-        'Hugo_Symbol\tEntrez_Gene_Id\tS1\nTP53\t7157\t"0"\n'
-    )
-    with pytest.raises(ValueError, match="quote"):
-        pipelines.convert_cna_partitioned(
-            spark, str(root), str(tmp_path / "out_q")
-        )
-
-
+@pytest.mark.parametrize(
+    "tree, n_files, expected_ids",
+    [
+        (
+            _header_groups_tree,
+            4,
+            [(0, "7157"), (1, "672"), (2, "1956"), (3, "238")],
+        ),
+        (
+            _exotic_names_symlink_tree,
+            2,
+            [(0, "7157"), (1, "672"), (2, "1956"), (3, "3845")],
+        ),
+    ],
+    ids=["header_groups", "exotic_names_symlink"],
+)
 def test_convert_mutations_grouped_matches_loop_layout(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, tree, n_files, expected_ids
 ):
-    """Round-9 verdict #2: convert_mutations' grouped single-job write
-    must reproduce the per-file writer's OUTPUT LAYOUT exactly — same
-    file names, same rows per file, identical ids, one part file per
-    output — while running one write job per table instead of ~12
-    stages per file. Includes a zero-data-row MAF (schema-only output
-    both ways) and two header groups (ids interleave)."""
-    root = tmp_path / "studies_g"
-    mafs = {
-        "g_01": (
-            "Hugo_Symbol\tEntrez_Gene_Id\tStart_Position\t"
-            "Tumor_Sample_Barcode\n"
-            "TP53\t7157\t1\tSA\nBRCA1\t672\t2\tSA\n"
-        ),
-        # different header -> second scan group
-        "g_02": (
-            "#v2\nTumor_Sample_Barcode\tHugo_Symbol\tEntrez_Gene_Id\t"
-            "Center\tStart_Position\n"
-            "SB\tEGFR\t1956\tC1\t5\n"
-        ),
-        # header only, zero data rows
-        "g_03": (
-            "Hugo_Symbol\tEntrez_Gene_Id\tStart_Position\t"
-            "Tumor_Sample_Barcode\n"
-        ),
-        "g_04": (
-            "Hugo_Symbol\tEntrez_Gene_Id\tStart_Position\t"
-            "Tumor_Sample_Barcode\n"
-            "ALK\t238\t9\tSC\n"
-        ),
-    }
-    for name, body in mafs.items():
-        d = root / name
-        d.mkdir(parents=True)
-        (d / "meta_mutations.txt").write_text(
-            f"cancer_study_identifier: {name}\nstable_id: mutations\n"
-            "data_filename: data_mutations.txt\n"
-        )
-        (d / "data_mutations.txt").write_text(body)
-
+    """convert_mutations' grouped single-job write must reproduce the
+    per-file writer's OUTPUT LAYOUT exactly — same file names, same
+    rows per file, identical ids, one part file per output — while
+    running one write job per table. Event ids are dense, gapless and
+    in discovery order, checked explicitly per (id, ENTREZ_GENE_ID)."""
+    root = tree(tmp_path)
     loop_out = tmp_path / "loop_g"
     grouped_out = tmp_path / "grouped_g"
     assert _per_file_mutations(spark, root, loop_out) == []
     _forbid_per_file_writers(monkeypatch)
     s = pipelines.convert_mutations(spark, str(root), str(grouped_out))
-    assert s.ok and len(s.processed) == 4
+    assert s.ok and len(s.processed) == n_files
     assert not (grouped_out / ".grouped_staging").exists()
     for fname in _assert_same_outputs(loop_out, grouped_out):
         parts = glob.glob(str(grouped_out / fname / "*.parquet"))
         assert len(parts) == 1, f"{fname}: expected 1 part file"
-    # corpus-wide id check: dense, gapless, discovery order
-    ids = sorted(
-        duckdb.sql(
-            f"select MUTATION_EVENT_ID from read_parquet("
-            f"'{grouped_out}/*_mutation_event.parquet/*.parquet')"
-        ).df()["MUTATION_EVENT_ID"]
-    )
-    assert ids == [0, 1, 2, 3]
+    ids = duckdb.sql(
+        f"select MUTATION_EVENT_ID, ENTREZ_GENE_ID from read_parquet("
+        f"'{grouped_out}/*_mutation_event.parquet/*.parquet')"
+        " order by MUTATION_EVENT_ID"
+    ).fetchall()
+    assert ids == expected_ids
 
 
 def test_convert_cna_grouped_matches_loop_layout(

@@ -811,8 +811,9 @@ def test_load_clickhouse_end_to_end(spark, tmp_path):
     """The S9 deployment tail: convert a study tree, then
     load-clickhouse pushes every catalog table over the HTTP interface
     — DDL first (driver-side), then one distributed insert job per
-    table; combined-* duplicates excluded; row counts and body
-    contents verified against the parquet ground truth."""
+    table; combine outputs excluded whatever their -output name; row
+    counts and body contents verified against the parquet ground
+    truth."""
     import json
     from urllib.parse import parse_qs, urlparse
 
@@ -841,8 +842,13 @@ def test_load_clickhouse_end_to_end(spark, tmp_path):
         spark, str(root), str(out), with_derived=True
     ).ok
     assert pipelines.convert_mutations(spark, str(root), str(out)).ok
-    # a combined duplicate that must NOT be loaded
+    # combine outputs duplicate the per-file rows and must NOT be
+    # loaded: the default combined-* name and a custom -output name
     pipelines.combine_cna(spark, str(out), with_derived=True)
+    pipelines.combine_cna(
+        spark, str(out), with_derived=True, output="merged.parquet"
+    )
+    pipelines.combine_mutations(spark, str(out), output="merged.parquet")
 
     srv, records = _capture_server()
     try:
@@ -885,20 +891,3 @@ def test_load_clickhouse_end_to_end(spark, tmp_path):
     ]
     ev_ids = sorted(r["MUTATION_EVENT_ID"] for r in inserted["mutation_event"])
     assert ev_ids == [0, 1]
-
-
-def test_load_clickhouse_refuses_mixed_naming_forms(spark, tmp_path):
-    """Round-10 advice: a -parquet-dir holding BOTH per-study
-    ``*_<kind>.parquet`` and a bare ``<kind>.parquet`` (loop/grouped
-    output next to a partitioned fused-combined run) would
-    double-insert every row of that kind — refused up front, naming
-    the conflict, before any HTTP traffic."""
-    from clickhouse_only_importer_prototype_spark.plans import pipelines
-
-    d = tmp_path / "mixed"
-    (d / "s_a_genetic_alterations.parquet").mkdir(parents=True)
-    (d / "genetic_alterations.parquet").mkdir()
-    with pytest.raises(ValueError, match="BOTH naming forms"):
-        pipelines.load_clickhouse(
-            spark, str(d), "http://127.0.0.1:1"  # never reached
-        )
