@@ -5,8 +5,6 @@ All JVM-side built-ins — nothing here leaves whole-stage codegen.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import Column, functions as F
 
 
@@ -69,53 +67,3 @@ def salted_join(
     salted_r = right.select("*", salts)
     return salted_l.join(salted_r, [on, "__salt"], how).drop("__salt")
 
-
-@contextmanager
-def runtime_bloom_filters(
-    spark,
-    application_side_scan_threshold: str = "10GB",
-    creation_side_threshold: str = "10MB",
-):
-    """Enable Catalyst's runtime bloom-filter join pruning for the
-    enclosed queries, restoring prior conf on exit.
-
-    For a selective shuffle join (dim side filtered small, fact side
-    huge), the optimizer inserts bloom_filter_agg over the dim keys
-    and a might_contain predicate on the fact side of the exchange —
-    fact rows with no join partner drop BEFORE they shuffle, the
-    single biggest I/O lever for star joins at 100 TB (the fact side
-    never broadcasts and its exchange dominates the query). The
-    filter is semantics-preserving (no false negatives), so this
-    never changes results, only shuffle volume.
-
-    Spark leaves it off by default; the thresholds here gate where it
-    fires: the creation side must aggregate under
-    ``creation_side_threshold`` and the fact scan must exceed
-    ``application_side_scan_threshold`` (defaults mirror Spark's own
-    at-scale defaults — local tests pass "0" to force injection; a
-    cluster job keeps 10GB so toy joins skip the bloom build cost).
-
-    Context-managed, not session-global, because probe-building costs
-    one extra aggregation per join — the operator owning the join
-    decides, same philosophy as the collapse gate in operators/dedup.
-    """
-    keys = {
-        "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": application_side_scan_threshold,
-        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": creation_side_threshold,
-    }
-    prior: dict[str, str | None] = {}
-    for k, v in keys.items():
-        try:
-            prior[k] = spark.conf.get(k)
-        except Exception:
-            prior[k] = None
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in prior.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)

@@ -620,6 +620,53 @@ def _self_cos_1e6(vec_col: str) -> Column:
     return F.floor(cos * F.lit(1000000.0)).cast("long")
 
 
+def _expand_rep_pairs(
+    df: DataFrame,
+    groups: DataFrame,
+    threshold_1e6: int,
+    id_col: str,
+    vec_col: str,
+    rep_pairs_of,
+    keep: tuple[str, ...] = (),
+) -> DataFrame:
+    """Collapsed path of embedding_/grouped_neardup_pairs: ``rep_pairs_of``
+    scores the reps of ``groups`` (id, rep, ``keep``), then JVM joins
+    regenerate the member pairs (see embedding_neardup_pairs)."""
+    reps = df.join(
+        groups.where(F.col("id") == F.col("rep")).select(
+            F.col("id").alias(id_col)
+        ),
+        id_col,
+        "left_semi",
+    )
+    rep_pairs = rep_pairs_of(reps)
+    ga = groups.select(F.col("rep").alias("doc_a"), F.col("id").alias("ma"))
+    gb = groups.select(F.col("rep").alias("doc_b"), F.col("id").alias("mb"))
+    cross = (
+        rep_pairs.join(ga, "doc_a")
+        .join(gb, "doc_b")
+        .select(
+            F.least("ma", "mb").alias("doc_a"),
+            F.greatest("ma", "mb").alias("doc_b"),
+            *keep,
+            "cos_1e6",
+        )
+    )
+    selfcos = reps.select(
+        F.col(id_col).alias("rep"), _self_cos_1e6(vec_col).alias("cos_1e6")
+    )
+    m1 = groups.select(*keep, "rep", F.col("id").alias("doc_a"))
+    m2 = groups.select("rep", F.col("id").alias("doc_b"))
+    within = (
+        m1.join(m2, "rep")
+        .where(F.col("doc_a") < F.col("doc_b"))
+        .join(selfcos, "rep")
+        .where(F.col("cos_1e6") >= threshold_1e6)
+        .select("doc_a", "doc_b", *keep, "cos_1e6")
+    )
+    return cross.unionByName(within)
+
+
 def embedding_neardup_pairs(
     df: DataFrame,
     threshold_1e6: int = 950000,
@@ -667,40 +714,16 @@ def embedding_neardup_pairs(
         # slim (id, rep) frame, consumed by 4 plans below — persist so
         # the md5-style groupBy+join runs once, not per consumer
         groups = _vec_groups(df, id_col, vec_col).persist()
-        reps = df.join(
-            groups.where(F.col("id") == F.col("rep")).select(
-                F.col("id").alias(id_col)
-            ),
+        return _expand_rep_pairs(
+            df,
+            groups,
+            threshold_1e6,
             id_col,
-            "left_semi",
+            vec_col,
+            lambda reps: embedding_neardup_pairs(
+                reps, threshold_1e6, id_col, vec_col, n_blocks, collapse=False
+            ),
         )
-        rep_pairs = embedding_neardup_pairs(
-            reps, threshold_1e6, id_col, vec_col, n_blocks, collapse=False
-        )
-        ga = groups.select(F.col("rep").alias("doc_a"), F.col("id").alias("ma"))
-        gb = groups.select(F.col("rep").alias("doc_b"), F.col("id").alias("mb"))
-        cross = (
-            rep_pairs.join(ga, "doc_a")
-            .join(gb, "doc_b")
-            .select(
-                F.least("ma", "mb").alias("doc_a"),
-                F.greatest("ma", "mb").alias("doc_b"),
-                "cos_1e6",
-            )
-        )
-        selfcos = reps.select(
-            F.col(id_col).alias("rep"), _self_cos_1e6(vec_col).alias("cos_1e6")
-        )
-        m1 = groups.select("rep", F.col("id").alias("doc_a"))
-        m2 = groups.select("rep", F.col("id").alias("doc_b"))
-        within = (
-            m1.join(m2, "rep")
-            .where(F.col("doc_a") < F.col("doc_b"))
-            .join(selfcos, "rep")
-            .where(F.col("cos_1e6") >= threshold_1e6)
-            .select("doc_a", "doc_b", "cos_1e6")
-        )
-        return cross.unionByName(within)
     # parallel arrays (ids + vectors), NOT an array<struct>: Arrow moves
     # each as one contiguous column and numpy stacks without a Python
     # dict per element — at 20k vectors this is the difference between
@@ -1093,47 +1116,23 @@ def grouped_neardup_pairs(
         # slim (grp, id, rep) frame, 4 consumers — persist (see the
         # ungrouped twin). ids are unique per the operator contract,
         # so a rep id alone identifies its (grp, fp) group and the
-        # expansion joins below key on the rep id only.
+        # expansion joins key on the rep id only.
         groups = (
             keyed.join(mins, ["grp", "__fp"])
             .select("grp", "id", "rep")
             .persist()
         )
-        reps = df.join(
-            groups.where(F.col("id") == F.col("rep")).select(
-                F.col("id").alias(id_col)
-            ),
+        return _expand_rep_pairs(
+            df,
+            groups,
+            threshold_1e6,
             id_col,
-            "left_semi",
+            vec_col,
+            lambda reps: grouped_neardup_pairs(
+                reps, group_col, threshold_1e6, id_col, vec_col, collapse=False
+            ),
+            keep=("grp",),
         )
-        rep_pairs = grouped_neardup_pairs(
-            reps, group_col, threshold_1e6, id_col, vec_col, collapse=False
-        )
-        ga = groups.select(F.col("rep").alias("doc_a"), F.col("id").alias("ma"))
-        gb = groups.select(F.col("rep").alias("doc_b"), F.col("id").alias("mb"))
-        cross = (
-            rep_pairs.join(ga, "doc_a")
-            .join(gb, "doc_b")
-            .select(
-                F.least("ma", "mb").alias("doc_a"),
-                F.greatest("ma", "mb").alias("doc_b"),
-                "grp",
-                "cos_1e6",
-            )
-        )
-        selfcos = reps.select(
-            F.col(id_col).alias("rep"), _self_cos_1e6(vec_col).alias("cos_1e6")
-        )
-        m1 = groups.select("grp", "rep", F.col("id").alias("doc_a"))
-        m2 = groups.select("rep", F.col("id").alias("doc_b"))
-        within = (
-            m1.join(m2, "rep")
-            .where(F.col("doc_a") < F.col("doc_b"))
-            .join(selfcos, "rep")
-            .where(F.col("cos_1e6") >= threshold_1e6)
-            .select("doc_a", "doc_b", "grp", "cos_1e6")
-        )
-        return cross.unionByName(within)
     blocked = df.select(
         F.col(group_col).cast("long").alias("grp"),
         F.col(id_col).alias("id"),

@@ -30,8 +30,9 @@ Dataflow parity (SURVEY §2.10):
     with one streaming write — the reference materializes each whole
     table in memory (cna/reader_parquet.go:60-64); Spark never does.
     Reader errors fail loud (intentional fix of :132-137). Each combine
-    output carries a ``_COMBINED`` marker so load-clickhouse never
-    inserts its rows next to the per-file outputs they came from.
+    output carries a ``_COMBINED`` marker so neither load-clickhouse nor
+    a later combine reads its rows next to the per-file outputs they
+    came from.
 """
 
 from __future__ import annotations
@@ -769,12 +770,10 @@ def load_clickhouse(
     multi-path scan and bulk-insert it as JSONEachRow with
     ``write_clickhouse_http`` — one distributed job per table.
 
-    Combine outputs are skipped: they repeat the rows of the per-file
-    outputs next to them, so loading both would insert every row twice.
-    A combine output is a dir holding combine_parquet's ``_COMBINED``
-    marker, or one named ``combined*``: the default -output, which the
-    reference's combine writes with no marker. Returns
-    {table: rows_sent} for every kind that had per-file outputs."""
+    Combine outputs (``_is_combined``) are skipped: they repeat the rows
+    of the per-file outputs next to them, so loading both would insert
+    every row twice. Returns {table: rows_sent} for every kind that had
+    per-file outputs."""
     from clickhouse_only_importer_prototype_spark.schemas import ALL_TABLES
     from clickhouse_only_importer_prototype_spark.sinks.clickhouse import (
         catalog_ddl,
@@ -784,11 +783,6 @@ def load_clickhouse(
         write_clickhouse_http,
     )
 
-    def is_combined(path: str) -> bool:
-        return os.path.basename(path).startswith("combined") or os.path.exists(
-            os.path.join(path, COMBINED_MARKER)
-        )
-
     ddls = catalog_ddl()
     counts: dict[str, int] = {}
     for kind in ALL_TABLES:
@@ -796,7 +790,7 @@ def load_clickhouse(
         for p in sorted(
             _glob.glob(os.path.join(parquet_dir, f"*_{kind}.parquet"))
         ):
-            (skipped if is_combined(p) else paths).append(p)
+            (skipped if _is_combined(p) else paths).append(p)
         if skipped:
             logger.info(
                 "not loading combine output(s) %s into %s",
@@ -824,16 +818,36 @@ def load_clickhouse(
 COMBINED_MARKER = "_COMBINED"
 
 
+def _is_combined(path: str) -> bool:
+    """A combine output: it holds COMBINED_MARKER, or is named
+    ``combined*`` (the default -output, which the reference's combine
+    writes with no marker)."""
+    return os.path.basename(path).startswith("combined") or os.path.exists(
+        os.path.join(path, COMBINED_MARKER)
+    )
+
+
 def combine_parquet(spark: SparkSession, pattern: str, output_path: str) -> int:
     """U1 union-all by glob (cna/reader_parquet.go:86-143), written as
     one file plus the COMBINED_MARKER that load_clickhouse skips on.
 
-    Duplicate-preserving: multi-path parquet scan IS union-all. The
-    output file is excluded from its own input glob (:101-108). Returns
-    the number of input files combined. Fails loud on reader errors —
-    an intentional fix of the reference's silent truncation (:132-137).
+    Duplicate-preserving: multi-path parquet scan IS union-all. Every
+    earlier combine output is left out of the input, not only this
+    call's own output as in the reference (cmd/cli/main.go:101-108):
+    a second combine with another -output would otherwise fold the
+    first one's rows in again. Returns the number of input files
+    combined. Fails loud on reader errors — an intentional fix of the
+    reference's silent truncation (:132-137).
     """
-    paths = sorted(p for p in _glob.glob(pattern) if os.path.abspath(p) != os.path.abspath(output_path))
+    paths, skipped = [], []
+    for p in sorted(_glob.glob(pattern)):
+        if os.path.abspath(p) != os.path.abspath(output_path):
+            (skipped if _is_combined(p) else paths).append(p)
+    if skipped:
+        logger.info(
+            "not combining earlier combine output(s) %s",
+            [os.path.basename(p) for p in skipped],
+        )
     if not paths:
         logger.warning("no files matched %s", pattern)
         return 0

@@ -48,6 +48,10 @@ from clickhouse_only_importer_prototype_spark.operators.cna import (
     genetic_alterations_from_long,
 )
 from clickhouse_only_importer_prototype_spark.localframe import arrow_local_df
+from clickhouse_only_importer_prototype_spark.session import ensure_conf
+from clickhouse_only_importer_prototype_spark.streaming.events import (
+    pin_event_time_conf,
+)
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -87,47 +91,11 @@ def ORACLE_FLOORDIV(expr: str, width: int) -> str:
 
 _SCHEMA_CACHE: dict[tuple[str, str], object] = {}
 
-_RUNTIME_CONF = (
-    # externally-built sessions (the driver's) may lack the engine conf;
-    # all of these are runtime-settable and load() is the common gate
-    ("spark.sql.session.timeZone", "UTC"),  # timestamp literals vs DuckDB
-    ("spark.sql.adaptive.enabled", "true"),
-    ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-    ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-    ("spark.sql.shuffle.partitions", "32"),
-    # broadcast policy: hints mark bounded frames only; scaling dims
-    # rely on size-based selection being generous enough to pick them
-    # up while they fit (see session.py for the 64m rationale)
-    ("spark.sql.autoBroadcastJoinThreshold", "64m"),
-    ("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m"),
-    # runtime bloom-filter pruning at fact scale (see session.py):
-    # q19 at the 600M-row tier 142.5s -> 7.8-16s; sub-1GB scans never
-    # pay a bloom build
-    ("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "256MB"),
-    (
-        "spark.sql.optimizer.runtime.bloomFilter."
-        "applicationSideScanSizeThreshold",
-        "1GB",
-    ),
-)
-_CONF_APPLIED: set[str] = set()
-
-
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    # keyed by applicationId, not id(spark): a GC'd session's address
-    # can be reused by a fresh unconfigured one
-    app_id = spark.sparkContext.applicationId
-    if app_id not in _CONF_APPLIED:
-        for k, v in _RUNTIME_CONF:
-            try:
-                spark.conf.set(k, v)
-            except Exception:
-                pass
-        _CONF_APPLIED.add(app_id)
+    # a session built outside get_spark may lack the engine conf
+    ensure_conf(spark)
     if table == "events":
-        # TIMESTAMP(NANOS) parquet reads as long nanos only with this
-        # conf (driver sessions may not have it; runtime-settable)
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        pin_event_time_conf(spark)
     path = f"{sf_dir}/{table}.parquet"
     key = (sf_dir, table)
     cached = _SCHEMA_CACHE.get(key)
@@ -4653,6 +4621,9 @@ def _stream_twin(
         os.path.join(sf_dir, f"{table}.parquet"),
         os.path.join(src, f"{table}.parquet"),
     )
+    # setups read and rewrite the fixture BEFORE build()'s
+    # read_events_stream pins the event-time conf
+    pin_event_time_conf(spark)
     if setup is not None:
         # e.g. write extra source files (watermark sentinels) that the
         # availableNow read must see alongside the fixture
@@ -5599,9 +5570,6 @@ def stream_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def setup(src: str) -> None:
-        # the NANOS-shape fixture needs this for the batch max-ts read,
-        # same as read_events_stream does for the stream itself
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         ev = spark.read.parquet(os.path.join(src, "events.parquet"))
         t = ev.schema["ts"].dataType
         far: Column
@@ -10435,13 +10403,6 @@ def stream_throttle_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         import shutil
         import tempfile
 
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # normalize_ts folds timestamp[us] fixtures through
-        # timestamp_ltz, which reads the session timezone; an
-        # externally built non-UTC session would write shifted batch
-        # files BEFORE read_events_stream's own UTC pin runs in
-        # build() — pin it here too (round-8 review finding)
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
         fixture = os.path.join(src, "events.parquet")
         ev = spark.read.parquet(fixture)
         # write both halves BEFORE unlinking: the half writes read the
@@ -10559,13 +10520,6 @@ def stream_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     HOUR_NS = streaming_lateness.HOUR_NS
 
     def setup(src: str) -> None:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # normalize_ts folds timestamp[us] fixtures through
-        # timestamp_ltz, which reads the session timezone; an
-        # externally built non-UTC session would write shifted batch
-        # files BEFORE read_events_stream's own UTC pin runs in
-        # build() — pin it here too (round-8 review finding)
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
         fixture = os.path.join(src, "events.parquet")
         # normalize to the long-nanos contract BEFORE writing: the
         # stream schema is pinned from the rewritten files' footer, so
@@ -10691,13 +10645,6 @@ def stream_dedup_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
     HOUR_NS = 3_600_000_000_000
 
     def setup(src: str) -> None:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # normalize_ts folds timestamp[us] fixtures through
-        # timestamp_ltz, which reads the session timezone; an
-        # externally built non-UTC session would write shifted batch
-        # files BEFORE read_events_stream's own UTC pin runs in
-        # build() — pin it here too (round-8 review finding)
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
         fixture = os.path.join(src, "events.parquet")
         ev = streaming_events.normalize_ts(spark.read.parquet(fixture))
         # one scan for every scalar the harness needs: ts bounds for
@@ -10846,13 +10793,6 @@ def stream_join_late_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     HOUR_NS = streaming_lateness.HOUR_NS
 
     def setup(src: str) -> None:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # normalize_ts folds timestamp[us] fixtures through
-        # timestamp_ltz, which reads the session timezone; an
-        # externally built non-UTC session would write shifted batch
-        # files BEFORE read_events_stream's own UTC pin runs in
-        # build() — pin it here too (round-8 review finding)
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
         fixture = os.path.join(src, "events.parquet")
         ev = streaming_events.normalize_ts(
             spark.read.parquet(fixture)
@@ -10998,13 +10938,6 @@ def stream_session_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     HOUR_NS = streaming_lateness.HOUR_NS
 
     def setup(src: str) -> None:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # normalize_ts folds timestamp[us] fixtures through
-        # timestamp_ltz, which reads the session timezone; an
-        # externally built non-UTC session would write shifted batch
-        # files BEFORE read_events_stream's own UTC pin runs in
-        # build() — pin it here too (round-8 review finding)
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
         fixture = os.path.join(src, "events.parquet")
         ev = streaming_events.normalize_ts(spark.read.parquet(fixture))
         tmax = ev.agg(F.max("ts")).collect()[0][0]

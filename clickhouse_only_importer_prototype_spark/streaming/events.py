@@ -30,6 +30,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from clickhouse_only_importer_prototype_spark.session import ENGINE_CONF
+
 # The long-nanos shape every operator downstream consumes (and the
 # shape test fixtures write directly).
 EVENTS_SCHEMA = StructType(
@@ -42,6 +44,12 @@ EVENTS_SCHEMA = StructType(
         StructField("props", StringType(), True),
     ]
 )
+
+
+def pin_event_time_conf(spark: SparkSession) -> None:
+    """Re-set ENGINE_CONF's nanosAsLong and UTC: every events read needs both."""
+    for k in ("spark.sql.legacy.parquet.nanosAsLong", "spark.sql.session.timeZone"):
+        spark.conf.set(k, ENGINE_CONF[k])
 
 
 def normalize_ts(df: DataFrame) -> DataFrame:
@@ -81,14 +89,7 @@ def read_events_stream(
     ``max_files_per_trigger`` caps files per micro-batch — the twin
     harness uses it to force MULTI-batch runs so cross-batch state
     contracts are exercised, not just the single-batch degenerate."""
-    # TIMESTAMP(NANOS) parquet -> long requires this (runtime-settable);
-    # external sessions won't have it
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # normalize_ts folds NTZ timestamps through timestamp_ltz, which
-    # reads the session timezone — an externally built non-UTC session
-    # would shift ts away from DuckDB's epoch_ns of the same naive
-    # instants. Runtime-settable, so pin it here like nanosAsLong.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    pin_event_time_conf(spark)
     schema = spark.read.parquet(path).schema
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:

@@ -24,11 +24,7 @@ def spark():
     # real Spark retry to pin (test_clickhouse_http_sink_retry_
     # duplicates_posted_batches). Fail-loud tests still fail their
     # jobs; they just pay one extra (tiny) task attempt first.
-    s = get_spark(
-        app_name="cips-tests",
-        master=f"local[{cpus},2]",
-        shuffle_partitions=8,
-    )
+    s = get_spark(app_name="cips-tests", master=f"local[{cpus},2]")
     yield s
 
 

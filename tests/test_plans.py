@@ -227,10 +227,6 @@ def test_contamination_collapse_no_corpus_self_join(spark, sf_dir):
 
 
 def test_runtime_bloom_filter_injected_for_selective_star_join(spark, sf_dir):
-    from clickhouse_only_importer_prototype_spark.functions import (
-        runtime_bloom_filters,
-    )
-
     li = q.load(spark, sf_dir, "lineitem")
     orders = q.load(spark, sf_dir, "orders").where(
         "o_orderpriority = '1-URGENT'"
@@ -238,29 +234,24 @@ def test_runtime_bloom_filter_injected_for_selective_star_join(spark, sf_dir):
     joined = li.join(orders, li.l_orderkey == orders.o_orderkey).groupBy(
         "o_orderpriority"
     ).count()
-    prior_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    keys = (
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.optimizer.runtime.bloomFilter."
+        "applicationSideScanSizeThreshold",
+    )
+    prior = {k: spark.conf.get(k) for k in keys}
     try:
         # force the shuffle-join shape the rule targets (at 100 TB the
-        # fact side never broadcasts; locally everything would)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        with runtime_bloom_filters(
-            spark, application_side_scan_threshold="0"
-        ):
-            plan = joined._jdf.queryExecution().optimizedPlan().toString()
-            assert "bloom_filter_agg" in plan
-            assert "might_contain" in plan
-        # conf restored on exit: bloom must NOT inject any more
-        plan2 = (
-            li.join(orders, li.l_orderkey == orders.o_orderkey)
-            .groupBy("o_orderpriority")
-            .count()
-            ._jdf.queryExecution()
-            .optimizedPlan()
-            .toString()
-        )
-        assert "bloom_filter_agg" not in plan2
+        # fact side never broadcasts; locally everything would), and
+        # drop the engine's 1GB fact-scan floor so the toy scan qualifies
+        spark.conf.set(keys[0], "-1")
+        spark.conf.set(keys[1], "0")
+        plan = joined._jdf.queryExecution().optimizedPlan().toString()
+        assert "bloom_filter_agg" in plan
+        assert "might_contain" in plan
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior_bc)
+        for k, v in prior.items():
+            spark.conf.set(k, v)
 
 
 def test_fuzzy_pairs_block_equi_join_no_cartesian(spark, sf_dir):

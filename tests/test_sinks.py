@@ -849,6 +849,11 @@ def test_load_clickhouse_end_to_end(spark, tmp_path):
         spark, str(out), with_derived=True, output="merged.parquet"
     )
     pipelines.combine_mutations(spark, str(out), output="merged.parquet")
+    # nor may a later combine fold the earlier combine outputs in
+    pipelines.combine_cna(
+        spark, str(out), with_derived=True, output="other.parquet"
+    )
+    pipelines.combine_mutations(spark, str(out), output="other.parquet")
 
     srv, records = _capture_server()
     try:
@@ -865,6 +870,10 @@ def test_load_clickhouse_end_to_end(spark, tmp_path):
         "mutation_event": 2,
         "mutation": 2,
     }
+    assert {
+        k: spark.read.parquet(str(out / f"other_{k}.parquet")).count()
+        for k in counts
+    } == counts
     ddl_stmts = []
     inserted: dict[str, list] = {}
     for path, headers, body in records:
