@@ -15,8 +15,10 @@ Count tier N: N studies of 20 genes x 8 samples CNA + a 12-row MAF —
 small enough that all measured cost is per-study overhead (job
 scheduling, plan analysis). Width tier ``wide``: 2 studies of 200
 genes x 10,000 samples CNA + a 2,000-row MAF — the cost a per-column
-plan would pay grows with the sample columns. Prints one JSON line per
-tier and merges all tiers into BENCH_parity.json.
+plan would pay grows with the sample columns. One cell of the second
+study's matrix is csv-quoted, so that file takes the csv-parse route of
+convert_cna at full width. Prints one JSON line per tier and merges all
+tiers into BENCH_parity.json.
 """
 
 from __future__ import annotations
@@ -55,11 +57,13 @@ def gen_study_tree(
     n_genes: int = 20,
     n_samples: int = 8,
     maf_rows: int = 12,
+    quoted_study: int | None = None,
 ) -> None:
     """N studies, each: meta+data CNA (genes x samples), meta+data MAF,
     a case_lists/ decoy and a *seg* decoy (the discovery filters must
     pay their cost at count scale too). Deterministic content — value
-    distribution does not matter on these axes."""
+    distribution does not matter on these axes. Study ``quoted_study``
+    writes its first CNA cell csv-quoted (same value once parsed)."""
     for i in range(n_studies):
         study = f"study_{i:05d}"
         d = os.path.join(root, study)
@@ -76,6 +80,8 @@ def gen_study_tree(
             for g in range(n_genes):
                 sym, ent = GENES[g % len(GENES)]
                 vals = [str(((i + g + j) % 5) - 2) for j in range(n_samples)]
+                if i == quoted_study and g == 0:
+                    vals[0] = f'"{vals[0]}"'
                 fh.write(f"{sym}\t{ent}\t" + "\t".join(vals) + "\n")
         with open(os.path.join(d, "meta_mutations.txt"), "w") as fh:
             fh.write(
@@ -103,13 +109,13 @@ def gen_study_tree(
 
 def run_tier(spark, tier: str) -> dict:
     if tier == WIDE_TIER:
-        n_studies, shape = 2, (200, 10_000, 2_000)
+        n_studies, shape, quoted = 2, (200, 10_000, 2_000), 1
     else:
-        n_studies, shape = int(tier), (20, 8, 12)
+        n_studies, shape, quoted = int(tier), (20, 8, 12), None
     work = tempfile.mkdtemp(prefix=f"parity_{tier}_")
     studies = os.path.join(work, "studies")
     t0 = time.perf_counter()
-    gen_study_tree(studies, n_studies, *shape)
+    gen_study_tree(studies, n_studies, *shape, quoted_study=quoted)
     gen_sec = time.perf_counter() - t0
     timings: dict[str, float] = {}
 

@@ -45,40 +45,10 @@ def field_or_empty(df: DataFrame, name: str) -> F.Column:
 
 
 def with_sequential_ids(df: DataFrame, start: int = 0) -> DataFrame:
-    """Assign dense, gapless int64 ids in (file, scan-order) order.
-
-    Two-pass prefix-sum (see module docstring), partition-parallel
-    WITHIN each file: ``__mid`` (monotonically_increasing_id) encodes
-    ``partition_id << 33 + row_offset``, so ordering by ``__mid``
-    within a file is identical to ordering by (scan partition, row
-    offset). Ranking therefore partitions the window by (file, scan
-    partition) — a single 100 GB MAF ranks across all its scan splits
-    in parallel instead of funneling through one task — and the driver
-    prefix-sums per-(file, partition) counts (metadata-scale: one row
-    per scan split) in (sorted path, partition) order, which yields
-    byte-identical ids to a per-file global rank.
-
-    ASSUMPTION (load-bearing): ``__pid``/``__mid`` are identical across
-    the counts pass and the rank pass. True when both evaluate the same
-    plan over unchanged files — FilePartition packing is a stable sort
-    of splits — but a scan-conf change between the passes (AQE
-    coalesce, ``spark.sql.files.maxPartitionBytes``) would repartition
-    the second scan. Rather than silently permuting ids, the rank pass
-    re-checks every (file, partition) row count against the broadcast
-    expectation and raises mid-plan on any drift.
-    """
-    tagged = _tagged_scan(df)
-    # no persist: per-(file, partition) counts are recompute-invariant
-    # and __pid/__mid are stable for an identical plan over identical
-    # files (same FilePartition packing), so the counts pass and the
-    # ranking pass can each evaluate the scan — a pinned full-MAF cache
-    # per file would leak for the session lifetime
-    counts = tagged.groupBy(_FILE, "__pid").count().collect()
-    offsets, acc = [], start
-    for row in sorted(counts, key=lambda r: (r[_FILE], r["__pid"])):
-        offsets.append((row[_FILE], row["__pid"], acc, row["count"]))
-        acc += row["count"]
-    return _rank_with_offsets(tagged, offsets, keep_file=False)
+    """Assign dense, gapless int64 ids in (file, scan-order) order: the
+    one-frame case of with_sequential_ids_multi (lexicographic file
+    order), without the ``__file`` tag."""
+    return with_sequential_ids_multi([df], start)[0].drop(_FILE)
 
 
 def _tagged_scan(df: DataFrame) -> DataFrame:
@@ -89,12 +59,10 @@ def _tagged_scan(df: DataFrame) -> DataFrame:
     )
 
 
-def _rank_with_offsets(
-    tagged: DataFrame, offsets: list[tuple], keep_file: bool
-) -> DataFrame:
+def _rank_with_offsets(tagged: DataFrame, offsets: list[tuple]) -> DataFrame:
     """Rank pass over a ``_tagged_scan`` frame with driver-computed
     (file, pid, offset, expected-count) rows; the drift guard raises
-    mid-plan on any packing change (see with_sequential_ids)."""
+    mid-plan on any packing change (see with_sequential_ids_multi)."""
     spark = tagged.sparkSession
     offsets_df = arrow_local_df(
         spark, offsets, f"{_FILE} string, __pid int, __offset long, __expect long"
@@ -107,9 +75,6 @@ def _rank_with_offsets(
     guard_ok = F.col("__expect").isNotNull() & (
         F.count("*").over(w_full) == F.col("__expect")
     )
-    drop_cols = ["__pid", "__mid", "__offset", "__expect"]
-    if not keep_file:
-        drop_cols.append(_FILE)
     return (
         tagged.join(F.broadcast(offsets_df), [_FILE, "__pid"], "left")
         .withColumn(
@@ -135,7 +100,7 @@ def _rank_with_offsets(
             )
             .cast("long"),
         )
-        .drop(*drop_cols)
+        .drop("__pid", "__mid", "__offset", "__expect")
     )
 
 
@@ -166,7 +131,28 @@ def with_sequential_ids_multi(
     explicitly for the byte-identical-ids contract to survive exotic
     filenames. ``None`` falls back to lexicographic URI order (only
     correct when every path is encoding-invariant); a scanned URI
-    absent from the map raises rather than silently mis-ordering."""
+    absent from the map raises rather than silently mis-ordering.
+
+    Ranking is partition-parallel WITHIN each file: ``__mid``
+    (monotonically_increasing_id) encodes ``partition_id << 33 +
+    row_offset``, so ordering by ``__mid`` within a file is ordering by
+    (scan partition, row offset). The window partitions by (file, scan
+    partition) — a single 100 GB MAF ranks across all its scan splits
+    in parallel instead of funneling through one task — and the driver
+    prefix-sums the per-(file, partition) counts (one row per scan
+    split) in (file, partition) order, which yields byte-identical ids
+    to a per-file global rank. No persist: the counts are
+    recompute-invariant, and a pinned full-MAF cache per file would
+    leak for the session lifetime.
+
+    ASSUMPTION (load-bearing): ``__pid``/``__mid`` are identical across
+    the counts pass and the rank pass. True when both evaluate the same
+    plan over unchanged files — FilePartition packing is a stable sort
+    of splits — but a scan-conf change between the passes (AQE
+    coalesce, ``spark.sql.files.maxPartitionBytes``) would repartition
+    the second scan. Rather than silently permuting ids, the rank pass
+    re-checks every (file, partition) row count against the broadcast
+    expectation and raises mid-plan on any drift."""
     taggeds = [_tagged_scan(f) for f in frames]
     all_counts: list[tuple] = []
     for i, t in enumerate(taggeds):
@@ -196,7 +182,7 @@ def with_sequential_ids_multi(
         per_frame[i].append((fpath, pid, acc, cnt))
         acc += cnt
     return [
-        _rank_with_offsets(t, per_frame[i], keep_file=True)
+        _rank_with_offsets(t, per_frame[i])
         for i, t in enumerate(taggeds)
     ]
 

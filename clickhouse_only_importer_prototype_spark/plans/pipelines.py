@@ -16,8 +16,9 @@ Dataflow parity (SURVEY §2.10):
     the plan does not grow with the sample columns;
     genetic_profile_samples is header metadata, written on the driver.
     CNA files a raw tab split would parse differently from the csv
-    reader (a quote char, a header line missing or repeated) take the
-    per-file csv writer instead.
+    reader (a quote char, a header line missing or repeated) are parsed
+    by the csv reader and projected to the same positional rows, so
+    every file takes the one transform and the one write per table.
   * D3 event-id threading across files: subsumed by the prefix-sum id
     assigner over all files at once (operators/mutation.py) — the
     sequential file loop disappears.
@@ -108,32 +109,6 @@ class RunSummary:
         return not self.failed
 
 
-def _write_cna_outputs(
-    spark: SparkSession, item, parquet_dir: str, with_derived: bool
-) -> None:
-    """The per-file CNA write: one csv read of the matrix (the csv
-    reader's quote semantics, one plan column per sample column), each
-    output written as ONE part file. convert_cna sends the files its
-    text scan cannot parse through here; the parity tests use it as the
-    reference layout."""
-    base = output_base(item.path, parquet_dir)
-    df = read_cna_matrix(spark, item.path)
-    if not df.columns:
-        raise ValueError(f"convert_cna: no header in {item.path}")
-    study, profile = item.cancer_study_id, item.genetic_profile_id
-    outputs = [
-        ("genetic_alterations", cna_ops.genetic_alterations(df, study, profile)),
-        (
-            "genetic_profile_samples",
-            cna_ops.genetic_profile_samples(spark, df, study, profile),
-        ),
-    ]
-    if with_derived:
-        outputs.append(("derived", cna_ops.cna_derived(df, study, profile)))
-    for suffix, out in outputs:
-        write_parquet(out, f"{base}_{suffix}.parquet", single_file=True)
-
-
 def convert_cna(
     spark: SparkSession,
     tsv_dir: str,
@@ -145,22 +120,21 @@ def convert_cna(
     genetic_profile_samples[,derived]}.parquet`` (cna/transformer.go:
     266-297).
 
-    Every matrix is read by ONE multi-path text scan and parsed
-    positionally (_cna_single_job_scan), so the plan is the same size
-    at 8 or 10,000 sample columns. genetic_alterations and derived are
-    each written once for all files (_write_per_base).
+    Every matrix becomes the same positional rows (_cna_single_job_scan:
+    one multi-path text scan, plus a csv parse of the files a tab split
+    would misread), so the plan is the same size at 8 or 10,000 sample
+    columns. genetic_alterations and derived are each built once and
+    written once for all files (_write_per_base).
     genetic_profile_samples is header metadata with exactly one row per
     file, written driver-side by pyarrow: a Spark job per 1-row frame
     costs seconds each. Zero-data-row matrices get schema-only
     alterations/derived parquet and their sample-list row
     (cna/transformer.go:498-508).
 
-    Files the text scan cannot parse the csv way (a quote char, or a
-    header line that is missing or repeated) go through the per-file
-    csv writer (_write_cna_outputs) first. CNA posture: abort on first
-    failure (cna/transformer.go:30-45) — an empty file, a duplicate
-    output base or a failed write raises. Row parity with the per-file
-    writer is pinned by test."""
+    CNA posture: abort on first failure (cna/transformer.go:30-45) — an
+    empty file, a missing header, a duplicate output base or a failed
+    write raises. Row parity with the per-file csv writer of the wide
+    operators (operators/cna.py) is pinned by test."""
     import pyarrow as pa
     import pyarrow.parquet as pa_pq
     from pyspark.sql import functions as F
@@ -169,12 +143,9 @@ def convert_cna(
     logger.info("found %d CNA files", len(inputs))
     os.makedirs(parquet_dir, exist_ok=True)
     _check_unique_bases("convert_cna", inputs)
-    scanned, csv_route, gps_rows, data = _cna_single_job_scan(spark, inputs)
-    for item in csv_route:
-        logger.info("converting %s with the per-file csv reader", item.path)
-        _write_cna_outputs(spark, item, parquet_dir, with_derived)
-    if not scanned:
-        return RunSummary(processed=[it.path for it in inputs])
+    if not inputs:
+        return RunSummary()
+    gps_rows, data = _cna_single_job_scan(spark, inputs)
     sample_slice = F.slice(
         F.col("__cells"), cna_ops.FIRST_SAMPLE_IDX + 1, F.col("__n")
     )
@@ -212,7 +183,7 @@ def convert_cna(
         tables.append(
             ("derived", derived, ["GENE_SYMBOL", "SAMPLE_ID", "ALTERATION"])
         )
-    bases = [output_base(it.path, "") for it in scanned]
+    bases = [output_base(it.path, "") for it in inputs]
     _write_per_base(spark, tables, bases, parquet_dir, ".grouped_staging_cna")
     gps_schema = pa.schema(
         [
@@ -373,8 +344,8 @@ def convert_mutations(
 
 def _cna_single_job_scan(
     spark: SparkSession, inputs: list
-) -> tuple[list, list, list[tuple], DataFrame | None]:
-    """The scan of convert_cna: driver-side header parse (manifest +
+) -> tuple[list[tuple], DataFrame]:
+    """The rows of convert_cna: driver-side header parse (manifest +
     per-study sample lists), ONE multi-path ``spark.read.text`` scan,
     broadcast attribution join, a guard aggregation, and positional
     cell parsing.
@@ -387,21 +358,34 @@ def _cna_single_job_scan(
     names come from sources.tsv.header_line_and_names, the csv reader's
     own header normalization.
 
-    Returns ``(scanned, csv_route, gps_rows, data)``. ``data`` carries
-    one row per data line of the ``scanned`` files with
-    __study/__profile/__base/__sample_ids/__n/__cells; ``gps_rows`` is
-    aligned with ``scanned`` (one (study, profile, ordered_sample_list)
-    per file). ``csv_route`` are the files a raw ``split(value, '\\t')``
-    would parse differently from the csv reader: a quote char in any
-    line (the csv reader applies quote='"'), or a header line that is
-    unparseable or does not occur exactly once (header rows are removed
-    by byte-match, and the csv reader keeps a repeated header row as
-    data). Both lists keep discovery order."""
+    A raw tab split parses some files differently from the csv reader:
+    a quote char in any line (the csv reader applies quote='"'), or a
+    header line that is unparseable or does not occur exactly once
+    (header rows are removed by byte-match, and the csv reader keeps a
+    repeated header row as data). The csv reader (read_cna_matrix)
+    parses those, and each is projected to the same row shape: all its
+    columns in ONE ``transform(array(*), ...)`` expression and its
+    sample ids in one JSON literal, so no plan node grows with the
+    sample columns. Each such file adds a scan branch to the union —
+    the route for the odd file, not for a corpus.
+
+    Returns ``(gps_rows, data)`` for ``inputs`` in discovery order.
+    ``data`` carries one row per data line with
+    __study/__profile/__base/__sample_ids/__n/__cells; ``gps_rows``
+    holds one (study, profile, ordered_sample_list) per input."""
+    import json
+
     from pyspark.sql import functions as F
 
     from clickhouse_only_importer_prototype_spark.sources.tsv import (
         header_line_and_names,
     )
+
+    def ids_of(item, names):
+        return [
+            f"{item.cancer_study_id}_{c}"
+            for c in names[cna_ops.FIRST_SAMPLE_IDX:]
+        ]
 
     csv_paths: set[str] = set()
     manifest: dict[str, tuple] = {}  # path -> manifest row
@@ -411,108 +395,113 @@ def _cna_single_job_scan(
             csv_paths.add(item.path)
             continue
         raw, names = parsed
-        sample_ids = [
-            f"{item.cancer_study_id}_{c}"
-            for c in names[cna_ops.FIRST_SAMPLE_IDX:]
-        ]
         manifest[item.path] = (
             _spark_file_uri(item.path),
             item.cancer_study_id,
             item.genetic_profile_id,
             output_base(item.path, ""),
             raw,
-            sample_ids,
+            ids_of(item, names),
         )
-
-    def route(paths):
-        scanned = [it for it in inputs if it.path not in paths]
-        return scanned, [it for it in inputs if it.path in paths]
-
-    scanned, csv_route = route(csv_paths)
-    logger.info(
-        "single-scan CNA plan: %d files, %d via csv", len(scanned), len(csv_route)
-    )
-    if not scanned:
-        return [], csv_route, [], None
-    mf = arrow_local_df(
-        spark,
-        list(manifest.values()),
-        "__file string, __study string, __profile string,"
-        " __base string, __header string, __sample_ids array<string>",
-    )
-
-    def tagged_scan(items):
-        lines = spark.read.text([it.path for it in items]).select(
-            F.col("value"), F.input_file_name().alias("__file")
+    frames: list[DataFrame] = []
+    scanned = [it.path for it in inputs if it.path not in csv_paths]
+    if scanned:
+        mf = arrow_local_df(
+            spark,
+            list(manifest.values()),
+            "__file string, __study string, __profile string,"
+            " __base string, __header string, __sample_ids array<string>",
         )
-        return lines.join(F.broadcast(mf), "__file", "left")
-
-    tagged = tagged_scan(scanned)
-    is_header = F.col("value") == F.col("__header")
-    # guard pass, before anything is written: every scanned line must be
-    # attributed to a manifest file; per file, count header matches and
-    # lines containing the csv quote char
-    flagged = (
-        tagged.groupBy("__file")
-        .agg(
-            F.sum(is_header.cast("int")).alias("n_hdr"),
-            F.max(F.col("__study").isNull().cast("int")).alias("n_miss"),
-            F.sum(F.col("value").contains('"').cast("int")).alias("n_quote"),
+        tagged = (
+            spark.read.text(scanned)
+            .select(F.col("value"), F.input_file_name().alias("__file"))
+            .join(F.broadcast(mf), "__file", "left")
         )
-        .where(
-            (F.col("n_hdr") != 1)
-            | (F.col("n_miss") > 0)
-            | (F.col("n_quote") > 0)
+        is_header = F.col("value") == F.col("__header")
+        # guard pass, before anything is written: every scanned line must
+        # be attributed to a manifest file; per file, count header matches
+        # and lines containing the csv quote char
+        flagged = (
+            tagged.groupBy("__file")
+            .agg(
+                F.sum(is_header.cast("int")).alias("n_hdr"),
+                F.max(F.col("__study").isNull().cast("int")).alias("n_miss"),
+                F.sum(F.col("value").contains('"').cast("int")).alias("n_quote"),
+            )
+            .where(
+                (F.col("n_hdr") != 1)
+                | (F.col("n_miss") > 0)
+                | (F.col("n_quote") > 0)
+            )
+            .collect()
         )
-        .collect()
-    )
-    unattributed = [r["__file"] for r in flagged if r["n_miss"]]
-    if unattributed:
-        raise ValueError(
-            "single-scan CNA plan: scan file(s) missing from the header"
-            f" manifest: {unattributed[:5]}"
-        )
-    if flagged:
-        uris = {r["__file"] for r in flagged}
-        csv_paths |= {
-            it.path for it in scanned if _spark_file_uri(it.path) in uris
-        }
-        scanned, csv_route = route(csv_paths)
-        if not scanned:
-            return [], csv_route, [], None
-        tagged = tagged_scan(scanned)
-    gps_rows = [
-        (study, profile, ",".join(samples))
-        for _, study, profile, _, _, samples in (
-            manifest[it.path] for it in scanned
-        )
-    ]
-    n_samples = F.size("__sample_ids")
-    parts = F.split(F.col("value"), "\t")
-    # pad to header width: the csv path yields NULL (-> '') for short
-    # rows and drops fields beyond the schema; slice after padding
-    # reproduces both
-    padded = F.concat(
-        parts,
-        F.array_repeat(
-            F.lit(""),
-            F.greatest(
-                F.lit(0),
-                n_samples + F.lit(cna_ops.FIRST_SAMPLE_IDX) - F.size(parts),
+        unattributed = [r["__file"] for r in flagged if r["n_miss"]]
+        if unattributed:
+            raise ValueError(
+                "single-scan CNA plan: scan file(s) missing from the header"
+                f" manifest: {unattributed[:5]}"
+            )
+        if flagged:
+            uris = [r["__file"] for r in flagged]
+            csv_paths |= {p for p in scanned if _spark_file_uri(p) in uris}
+            tagged = tagged.where(~F.col("__file").isin(uris))
+        n_samples = F.size("__sample_ids")
+        parts = F.split(F.col("value"), "\t")
+        # csv parity: the csv reader drops every line that Java's
+        # String.trim() empties (all chars <= U+0020, tabs included;
+        # text keeps them), yields NULL (-> '') for the missing cells of
+        # a short row and drops fields beyond the header; padding
+        # (array_repeat of a negative count is empty), then slicing to
+        # the header width, reproduces both
+        padded = F.concat(
+            parts,
+            F.array_repeat(
+                F.lit(""), n_samples + cna_ops.FIRST_SAMPLE_IDX - F.size(parts)
             ),
-        ),
+        )
+        frames.append(
+            tagged.where(
+                ~is_header & ~F.col("value").rlike(r"^[\x00-\x20]*$")
+            ).select(
+                "__study",
+                "__profile",
+                "__base",
+                "__sample_ids",
+                n_samples.alias("__n"),
+                padded.alias("__cells"),
+            )
+        )
+    logger.info(
+        "single-scan CNA plan: %d files, %d via csv",
+        len(inputs) - len(csv_paths),
+        len(csv_paths),
     )
-    # csv parity: the csv reader drops fully blank lines; text keeps
-    # them — filter to match (a line of only tabs is NOT blank)
-    data = tagged.where(~is_header & (F.col("value") != "")).select(
-        "__study",
-        "__profile",
-        "__base",
-        "__sample_ids",
-        n_samples.alias("__n"),
-        padded.alias("__cells"),
-    )
-    return scanned, csv_route, gps_rows, data
+    sample_ids = {path: row[5] for path, row in manifest.items()}
+    every_cell = F.expr("transform(array(*), x -> coalesce(x, ''))")
+    for item in inputs:
+        if item.path not in csv_paths:
+            continue
+        df = read_cna_matrix(spark, item.path)
+        if not df.columns:
+            raise ValueError(f"convert_cna: no header in {item.path}")
+        ids = sample_ids[item.path] = ids_of(item, df.columns)
+        frames.append(
+            df.select(
+                F.lit(item.cancer_study_id).alias("__study"),
+                F.lit(item.genetic_profile_id).alias("__profile"),
+                F.lit(output_base(item.path, "")).alias("__base"),
+                F.from_json(F.lit(json.dumps(ids)), "array<string>").alias(
+                    "__sample_ids"
+                ),
+                F.lit(len(ids)).alias("__n"),
+                every_cell.alias("__cells"),
+            )
+        )
+    gps_rows = [
+        (it.cancer_study_id, it.genetic_profile_id, ",".join(sample_ids[it.path]))
+        for it in inputs
+    ]
+    return gps_rows, _balanced_union(frames)
 
 
 def _write_per_base(

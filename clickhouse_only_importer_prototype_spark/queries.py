@@ -89,7 +89,17 @@ def ORACLE_FLOORDIV(expr: str, width: int) -> str:
     )
 
 
-_SCHEMA_CACHE: dict[tuple[str, str], object] = {}
+def _mtime(path: str) -> int | None:
+    try:
+        return os.stat(path).st_mtime_ns
+    except OSError:
+        return None
+
+
+# keyed by mtime, like _FOOTER_META: a table rewritten in place (say,
+# with an extra column) must not be read through its old schema
+_SCHEMA_CACHE: dict[tuple, object] = {}
+
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     # a session built outside get_spark may lack the engine conf
@@ -97,7 +107,7 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     if table == "events":
         pin_event_time_conf(spark)
     path = f"{sf_dir}/{table}.parquet"
-    key = (sf_dir, table)
+    key = (sf_dir, table, _mtime(path))
     cached = _SCHEMA_CACHE.get(key)
     if cached is None:
         df = spark.read.parquet(path)
@@ -119,11 +129,7 @@ def _footer_meta(sf_dir: str, table: str) -> tuple[int, int] | None:
     fixture regeneration (or a cached probe error) never pins stale
     metadata for the process lifetime (round-12 ADVICE fix)."""
     path = f"{sf_dir}/{table}.parquet"
-    try:
-        mtime = os.stat(path).st_mtime_ns
-    except OSError:
-        mtime = None
-    key = (sf_dir, table, mtime)
+    key = (sf_dir, table, _mtime(path))
     if key not in _FOOTER_META:
         try:
             import pyarrow.parquet as pq
@@ -254,13 +260,8 @@ def _collapse_gate(
     min_rows=100k sits between the 10x tier (20k vectors: probe never
     pays) and the 100x tier (200k: probe decides).
     """
-    try:
-        import pyarrow.parquet as pq
-
-        rows = pq.ParquetFile(
-            f"{sf_dir}/{table}.parquet"
-        ).metadata.num_rows
-    except Exception:
+    rows = _footer_rows(sf_dir, table)
+    if rows is None:
         return None
     return False if rows < min_rows else None
 
@@ -4641,14 +4642,7 @@ def _stream_twin(
     # fixture footer, ~300k rows per state partition, clamped to
     # [8, cores]. Semantics are partition-count-invariant (the oracle
     # equality is the proof). Restored for the batch rollup.
-    try:
-        import pyarrow.parquet as _pq
-
-        _rows = _pq.ParquetFile(
-            os.path.join(sf_dir, f"{table}.parquet")
-        ).metadata.num_rows
-    except Exception:
-        _rows = 0
+    _rows = _footer_rows(sf_dir, table) or 0
     stream_parts = max(8, min(os.cpu_count() or 8, _rows // 300_000))
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(stream_parts))

@@ -7,9 +7,11 @@ table) and a UTC session timezone. Every key is runtime-settable, so
 the same table reaches two kinds of session:
 
   * ``get_spark`` builds a new session from it;
-  * ``ensure_conf`` sets it once per application on a session built
-    elsewhere — ``queries.load`` and ``get_spark``'s reused-session
-    branch both call it.
+  * ``ensure_conf`` sets it once per session on a session built
+    elsewhere, or a second session of one application
+    (``spark.newSession()``, which keeps its own SQL conf) —
+    ``queries.load`` and ``get_spark``'s reused-session branch both
+    call it.
 
 Only deployment values stay outside the table: app name, master
 (``$SPARK_GRAFT_MASTER``, default ``local[$SPARK_GRAFT_CPUS]``), driver
@@ -89,22 +91,28 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
 }
 
-# applicationIds whose session already holds ENGINE_CONF — keyed by
-# applicationId, not id(spark): a GC'd session's address can be reused
-# by a fresh unconfigured one
+# session keys (_session_key) of the sessions that already hold
+# ENGINE_CONF — not id(spark): a GC'd session's address can be reused by
+# a fresh unconfigured one
 _CONF_APPLIED: set[str] = set()
 
 
+def _session_key(spark: SparkSession) -> str:
+    """The JVM session's UUID: distinct for every ``newSession()`` of one
+    application, stable for the same session."""
+    return spark._jsparkSession.sessionUUID()
+
+
 def ensure_conf(spark: SparkSession) -> None:
-    """Set ENGINE_CONF on ``spark`` once per application. Once, not on
-    every call: a value a caller changes afterwards keeps its value
-    (tests turn Arrow off after load() to pin the no-Arrow path)."""
-    app_id = spark.sparkContext.applicationId
-    if app_id in _CONF_APPLIED:
+    """Set ENGINE_CONF on ``spark`` once per session. Once, not on every
+    call: a value a caller changes afterwards keeps its value (tests
+    turn Arrow off after load() to pin the no-Arrow path)."""
+    key = _session_key(spark)
+    if key in _CONF_APPLIED:
         return
     for k, v in ENGINE_CONF.items():
         spark.conf.set(k, v)
-    _CONF_APPLIED.add(app_id)
+    _CONF_APPLIED.add(key)
 
 
 def _default_driver_mem() -> str:
@@ -153,5 +161,5 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    _CONF_APPLIED.add(spark.sparkContext.applicationId)
+    _CONF_APPLIED.add(_session_key(spark))
     return spark

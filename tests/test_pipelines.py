@@ -11,7 +11,10 @@ import os
 import duckdb
 import pytest
 
+from clickhouse_only_importer_prototype_spark.operators import cna as cna_ops
 from clickhouse_only_importer_prototype_spark.plans import pipelines
+from clickhouse_only_importer_prototype_spark.sinks.parquet import write_parquet
+from clickhouse_only_importer_prototype_spark.sources.tsv import read_cna_matrix
 
 
 @pytest.fixture(scope="module")
@@ -60,10 +63,30 @@ def _read(path):
     ).df()
 
 
+def _write_cna_outputs(spark, item, parquet_dir, with_derived):
+    """The per-file CNA reference: one csv read of the matrix (the csv
+    reader's quote semantics, one plan column per sample column) through
+    the wide operators, each output written as ONE part file."""
+    base = pipelines.output_base(item.path, parquet_dir)
+    df = read_cna_matrix(spark, item.path)
+    study, profile = item.cancer_study_id, item.genetic_profile_id
+    outputs = [
+        ("genetic_alterations", cna_ops.genetic_alterations(df, study, profile)),
+        (
+            "genetic_profile_samples",
+            cna_ops.genetic_profile_samples(spark, df, study, profile),
+        ),
+    ]
+    if with_derived:
+        outputs.append(("derived", cna_ops.cna_derived(df, study, profile)))
+    for suffix, out in outputs:
+        write_parquet(out, f"{base}_{suffix}.parquet", single_file=True)
+
+
 def _per_file_cna(spark, tree, out, with_derived=True):
     """Reference layout: the per-file csv writer over every matrix."""
     for item in pipelines.discover_cna_files(str(tree)):
-        pipelines._write_cna_outputs(spark, item, str(out), with_derived)
+        _write_cna_outputs(spark, item, str(out), with_derived)
 
 
 def _per_file_mutations(spark, tree, out):
@@ -96,14 +119,16 @@ def _assert_same_outputs(ref, got):
 
 
 def _forbid_per_file_writers(monkeypatch):
-    """Fail any call of a per-file writer: a parity run must take the
-    single-scan path, not converge through the per-file fallback."""
+    """Fail any call of the per-file mutation writer or of a wide CNA
+    operator: a parity run must take the single-scan path, not converge
+    through a per-file or per-column plan."""
 
     def forbidden(*args, **kwargs):
-        raise AssertionError("per-file writer called")
+        raise AssertionError("per-file writer or wide CNA operator called")
 
-    monkeypatch.setattr(pipelines, "_write_cna_outputs", forbidden)
     monkeypatch.setattr(pipelines, "_write_mutation_outputs", forbidden)
+    for name in ("genetic_alterations", "cna_derived", "genetic_profile_samples"):
+        monkeypatch.setattr(pipelines.cna_ops, name, forbidden)
 
 
 def test_convert_cna_with_derived(spark, study_tree, tmp_path):
@@ -467,15 +492,18 @@ def test_cli_convert_cna_routes_quoted_files_to_csv_reader(
 ):
     """Files a raw tab split would parse differently from the csv
     reader — quoted cells, a quoted header, a data row equal to the
-    header — convert through the per-file csv writer, the rest through
-    the single scan. The CLI run exits 0 and every output equals the
+    header — are parsed by the csv reader, the rest by the text scan;
+    all of them take the one positional transform and write, never a
+    wide CNA operator. The CLI run exits 0 and every output equals the
     per-file writer's."""
     from clickhouse_only_importer_prototype_spark import cli
 
     root = tmp_path / "studies_q"
     matrices = {
+        # a short row, a long row and a line the csv reader drops as
+        # blank (only tabs and spaces)
         "s_plain": "Hugo_Symbol\tEntrez_Gene_Id\tS1\tS2\n"
-        "TP53\t7157\t0\t-1\nKRAS\t3845\t1\t2\n",
+        "TP53\t7157\t0\t-1\nKRAS\t3845\t1\t2\t3\n\t \t\nEGFR\n",
         # a quoted tab is one csv field, two text-split fields
         "s_qcell": "Hugo_Symbol\tEntrez_Gene_Id\tS1\tS2\n"
         'TP53\t7157\t"0"\t"a\tb"\nEGFR\t1956\t1\t"-2"\n',
@@ -493,14 +521,14 @@ def test_cli_convert_cna_routes_quoted_files_to_csv_reader(
         (d / "data_cna.txt").write_text(body)
     ref, out = tmp_path / "ref_q", tmp_path / "out_q"
     _per_file_cna(spark, root, ref)
+    _forbid_per_file_writers(monkeypatch)
     routed = []
-    real = pipelines._write_cna_outputs
 
-    def spy(spark_, item, *args):
-        routed.append(os.path.basename(os.path.dirname(item.path)))
-        return real(spark_, item, *args)
+    def spy(spark_, path):
+        routed.append(os.path.basename(os.path.dirname(path)))
+        return read_cna_matrix(spark_, path)
 
-    monkeypatch.setattr(pipelines, "_write_cna_outputs", spy)
+    monkeypatch.setattr(pipelines, "read_cna_matrix", spy)
     rc = cli.main(
         ["-mode", "convert-cna-with-derived", "-tsv-dir", str(root),
          "-parquet-dir", str(out)]
@@ -510,3 +538,30 @@ def test_cli_convert_cna_routes_quoted_files_to_csv_reader(
     assert len(_assert_same_outputs(ref, out)) == 12
     ga = _read(out / "s_qcell_data_cna_genetic_alterations.parquet")
     assert sorted(ga.VALUES) == ["0,a\tb", "1,-2"]
+
+
+def test_convert_cna_aborts_on_empty_file_or_duplicate_base(spark, tmp_path):
+    """CNA keeps abort-on-first-failure: two inputs that map to one
+    output base raise before anything is read, and an empty matrix (no
+    header, so csv-parsed) raises before anything is written."""
+
+    def tree(root, studies):
+        for rel, body in studies.items():
+            d = root / rel
+            d.mkdir(parents=True)
+            (d / "meta_cna.txt").write_text(
+                f"cancer_study_identifier: {d.name}\nstable_id: gistic\n"
+                "data_filename: data_cna.txt\n"
+            )
+            (d / "data_cna.txt").write_text(body)
+        return str(root)
+
+    plain = "Hugo_Symbol\tEntrez_Gene_Id\tS1\nTP53\t7157\t0\n"
+    dup = tree(tmp_path / "dup", {"p/s1": plain, "q/s1": plain})
+    with pytest.raises(ValueError, match="same output base"):
+        pipelines.convert_cna(spark, dup, str(tmp_path / "out_dup"))
+    empty = tree(tmp_path / "empty", {"s_ok": plain, "s_empty": ""})
+    out = tmp_path / "out_empty"
+    with pytest.raises(ValueError, match="no header"):
+        pipelines.convert_cna(spark, empty, str(out), with_derived=True)
+    assert os.listdir(out) == []

@@ -1,7 +1,8 @@
 """The engine conf table: every ``session.ENGINE_CONF`` value reaches a
 session ``get_spark`` built and a session built elsewhere (through
-``queries.load``), once per application, and no package module but
-``session.py`` declares one of its values."""
+``queries.load``), once per session, and no package module but
+``session.py`` declares one of its values. Also ``queries.load``'s
+cached schema, which must follow a table rewritten in place."""
 
 from __future__ import annotations
 
@@ -54,7 +55,7 @@ def test_load_restores_engine_conf_once_per_application(spark, sf_dir):
     # built elsewhere, without touching the shared test session's conf
     other = spark.newSession()
     assert set(_OTHER) == set(ENGINE_CONF)
-    app_id = spark.sparkContext.applicationId
+    key = session._session_key(other)
     for drift in ("unset", "changed"):
         for k in ENGINE_CONF:
             if drift == "unset":
@@ -62,7 +63,7 @@ def test_load_restores_engine_conf_once_per_application(spark, sf_dir):
             else:
                 other.conf.set(k, _OTHER[k])
         assert _conf(other) != ENGINE_CONF
-        session._CONF_APPLIED.discard(app_id)
+        session._CONF_APPLIED.discard(key)
         q.load(other, sf_dir, "region")
         assert _conf(other) == ENGINE_CONF, drift
     # applied once: a key changed after the first load keeps its value
@@ -71,11 +72,23 @@ def test_load_restores_engine_conf_once_per_application(spark, sf_dir):
     assert other.conf.get("spark.sql.execution.arrow.pyspark.enabled") == "false"
 
 
+def test_load_applies_engine_conf_to_new_session(spark, sf_dir):
+    # a new session of an application that already holds the table has
+    # its own SQL conf; the first load() on it applies the table
+    key = "spark.sql.adaptive.skewJoin.enabled"
+    other = spark.newSession()
+    other.conf.set(key, _OTHER[key])
+    q.load(other, sf_dir, "region")
+    assert other.conf.get(key) == ENGINE_CONF[key]
+    assert session._session_key(other) != session._session_key(spark)
+    assert session._session_key(other) == session._session_key(other)
+
+
 def test_get_spark_applies_engine_conf_to_reused_session(spark):
     key = "spark.sql.adaptive.skewJoin.enabled"
     try:
         spark.conf.set(key, "false")
-        session._CONF_APPLIED.discard(spark.sparkContext.applicationId)
+        session._CONF_APPLIED.discard(session._session_key(spark))
         assert get_spark() is spark
         assert spark.conf.get(key) == ENGINE_CONF[key]
         spark.conf.set(key, "false")
@@ -83,6 +96,19 @@ def test_get_spark_applies_engine_conf_to_reused_session(spark):
         assert spark.conf.get(key) == "false"
     finally:
         spark.conf.set(key, ENGINE_CONF[key])
+
+
+def test_load_schema_follows_table_rewritten_in_place(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1]}), path)
+    assert q.load(spark, str(tmp_path), "t").columns == ["a"]
+    pq.write_table(pa.table({"a": [1], "b": [2]}), path)
+    assert spark.read.parquet(path).columns == ["a", "b"]
+    assert q.load(spark, str(tmp_path), "t").columns == ["a", "b"]
+    assert q._footer_rows(str(tmp_path), "t") == 1
 
 
 def _engine_conf_sets(path: Path) -> list[str]:
