@@ -22,11 +22,6 @@ def underscore_join(*parts: Column | str) -> Column:
     return F.concat_ws("_", *cols)
 
 
-def comma_join(*cols: Column) -> Column:
-    """Comma-joined value list (cna/transformer.go:503,525)."""
-    return F.concat_ws(",", *cols)
-
-
 def salted_join(
     left,
     right,

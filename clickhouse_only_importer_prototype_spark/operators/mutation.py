@@ -48,7 +48,8 @@ def with_sequential_ids(df: DataFrame, start: int = 0) -> DataFrame:
     """Assign dense, gapless int64 ids in (file, scan-order) order: the
     one-frame case of with_sequential_ids_multi (lexicographic file
     order), without the ``__file`` tag."""
-    return with_sequential_ids_multi([df], start)[0].drop(_FILE)
+    (ranked,), _ = with_sequential_ids_multi([df], start)
+    return ranked.drop(_FILE)
 
 
 def _tagged_scan(df: DataFrame) -> DataFrame:
@@ -108,9 +109,11 @@ def with_sequential_ids_multi(
     frames: list[DataFrame],
     start: int = 0,
     file_order: dict[str, int] | None = None,
-) -> list[DataFrame]:
+) -> tuple[list[DataFrame], int]:
     """Gapless ids ACROSS several scan frames in one global
-    (file, partition) order — the grouped D3 shape.
+    (file, partition) order — the grouped D3 shape. Returns the ranked
+    frames and the next free id (``start`` plus every counted row, so
+    ``start`` when there are no rows), taken from the counts pass.
 
     Heterogeneous MAF headers force one csv scan per header group
     (Spark applies the first file's header to every file of a
@@ -184,7 +187,7 @@ def with_sequential_ids_multi(
     return [
         _rank_with_offsets(t, per_frame[i])
         for i, t in enumerate(taggeds)
-    ]
+    ], acc
 
 
 def next_event_id(df_with_ids: DataFrame, start: int = 0) -> int:

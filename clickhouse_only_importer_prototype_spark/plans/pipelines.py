@@ -22,9 +22,9 @@ Dataflow parity (SURVEY §2.10):
   * D3 event-id threading across files: subsumed by the prefix-sum id
     assigner over all files at once (operators/mutation.py) — the
     sequential file loop disappears.
-  * D4 per-file error isolation: mutations probe every file, write the
-    healthy ones in the grouped job and replay the failures (every
-    file, if the grouped job itself fails) through the per-file writer,
+  * D4 per-file error isolation: mutations are written in one grouped
+    plan; if it raises, every file is converted on its own through the
+    same writer in discovery order (the reference's per-file loop),
     reporting a failure manifest; CNA aborts on the first failure —
     matching cna/transformer.go:30-45 vs mutation/transformer.go:37-73.
   * U1 combine: multi-path parquet read (union-all, duplicates kept)
@@ -204,71 +204,6 @@ def convert_cna(
     return RunSummary(processed=[it.path for it in inputs])
 
 
-def _write_mutation_outputs(
-    spark: SparkSession,
-    item,
-    parquet_dir: str,
-    start: int,
-) -> int:
-    """The per-file mutation write: read the MAF, assign ids from
-    ``start``, write both outputs as ONE part file each. convert_mutations
-    replays failed files through here; the parity tests use it as the
-    reference layout. Returns the next free id (an empty MAF keeps the
-    counter unchanged — must not reset). On failure, partial outputs
-    are removed (a stale mutation_event parquet would enter the combine
-    glob with an id range another file may legitimately hold) and the
-    error re-raised; the cached frame is unpersisted on EVERY path so a
-    failed file never pins executor storage for the session."""
-    base = output_base(item.path, parquet_dir)
-    out_paths = (f"{base}_mutation_event.parquet", f"{base}_mutation.parquet")
-    try:
-        df = read_maf(spark, item.path)
-        with_ids = mut_ops.with_sequential_ids(df, start=start).persist()
-        try:
-            write_parquet(
-                mut_ops.mutation_event(with_ids), out_paths[0], single_file=True
-            )
-            write_parquet(
-                mut_ops.mutation(
-                    with_ids, item.cancer_study_id, item.genetic_profile_id
-                ),
-                out_paths[1],
-                single_file=True,
-            )
-            return mut_ops.next_event_id(with_ids, start=start)
-        finally:
-            with_ids.unpersist()
-    except Exception:
-        for p in out_paths:
-            shutil.rmtree(p, ignore_errors=True)
-        raise
-
-
-def _probe_maf_counts(
-    spark: SparkSession, inputs: list, failed: dict[str, str]
-) -> dict[str, int]:
-    """Probe phase of convert_mutations: one column-pruned count scan
-    per file, on driver threads (the jobs are independent and their
-    cost is per-job scheduling, not data). It is the read the per-file
-    writer performs, so a probe failure IS a per-file read failure: the
-    file lands in ``failed`` and consumes no ids."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    counts: dict[str, int] = {}
-    with ThreadPoolExecutor(max_workers=8) as pool:
-        futures = [
-            (it, pool.submit(lambda p: read_maf(spark, p).count(), it.path))
-            for it in inputs
-        ]
-        for item, fut in futures:
-            try:
-                counts[item.path] = fut.result()
-            except Exception as exc:  # noqa: BLE001 — D4 isolation
-                logger.error("failed to read %s: %s", item.path, exc)
-                failed[item.path] = str(exc)
-    return counts
-
-
 def convert_mutations(
     spark: SparkSession,
     tsv_dir: str,
@@ -279,59 +214,42 @@ def convert_mutations(
     per-file layout ``<studyDir>_<stem>_mutation[_event].parquet``, with
     per-file failure isolation (D4, mutation/transformer.go:37-73).
 
-    Event ids are dense and gapless across all files in discovery order
-    (prefix-sum assigner) — the reference's sequential id threading
-    without the sequential execution. Three phases:
-
-      1. **Probe** — _probe_maf_counts. Failing files go to the failure
-         manifest (``RunSummary.failed``) and consume no ids, as in a
-         per-file loop.
-      2. **Grouped write** — the healthy files as one plan
-         (_write_mutations_grouped): one scan per header group, one
-         shuffle and one write per table, whatever the file count.
-      3. **Replay** — each failed file retried through the per-file
-         writer (_write_mutation_outputs; partial outputs removed on
-         failure). A deterministic failure stays in the manifest; a
-         transient one recovers and takes ids PAST the healthy range
-         (unique and ordered, gapless within each phase) — splicing it
-         back into discovery order would rewrite every later file.
-
-    If the grouped write itself raises, every file is replayed through
-    the per-file writer in discovery order from ``start_event_id``, so a
-    file that poisons the grouped job costs only its own outputs and
-    the ids are those of a per-file loop. Duplicate output bases are
-    refused up front (a replayed file must never clobber a healthy
-    output). Returns the processed files and the failure manifest."""
+    Every file is written in one grouped plan (_write_mutations_grouped:
+    one scan per header group, one shuffle and one write per table,
+    whatever the file count). If that raises, the run becomes the
+    reference's own per-file loop through the same writer, in discovery
+    order from ``start_event_id``: a failing file consumes no ids, lands
+    in the failure manifest (``RunSummary.failed``) and loses both its
+    outputs (a stale mutation_event output would enter the combine glob
+    with an id range another file may hold). Either way event ids are
+    dense and gapless in discovery order, a per-file loop's. Duplicate
+    output bases are refused up front. Returns the processed files and
+    the failure manifest."""
     inputs = discover_mutation_files(tsv_dir)
     logger.info("found %d mutation files", len(inputs))
-    summary = RunSummary()
     os.makedirs(parquet_dir, exist_ok=True)
     _check_unique_bases("convert_mutations", inputs)
-    counts = _probe_maf_counts(spark, inputs, summary.failed)
-    healthy = [it for it in inputs if it.path in counts]
-    replay = [it for it in inputs if it.path in summary.failed]
-    next_id = start_event_id + sum(counts.values())
-    if healthy:
+    if not inputs:
+        return RunSummary()
+    try:
+        _write_mutations_grouped(spark, inputs, parquet_dir, start_event_id)
+        return RunSummary(processed=[it.path for it in inputs])
+    except Exception:  # noqa: BLE001 — D4 isolation
+        logger.exception("grouped mutation write failed; converting per file")
+    summary, next_id = RunSummary(), start_event_id
+    for item in inputs:
         try:
-            _write_mutations_grouped(spark, healthy, parquet_dir, start_event_id)
-            summary.processed = [it.path for it in healthy]
-        except Exception:  # noqa: BLE001 — D4 isolation
-            logger.exception(
-                "grouped mutation write failed; replaying every file"
-                " through the per-file writer"
+            next_id = _write_mutations_grouped(
+                spark, [item], parquet_dir, next_id
             )
-            replay, next_id = inputs, start_event_id
-            summary.failed.clear()
-    for item in replay:  # discovery order, deterministic replay ids
-        try:
-            next_id = _write_mutation_outputs(spark, item, parquet_dir, next_id)
         except Exception as exc:  # noqa: BLE001 — D4 isolation
             logger.error("failed to process %s: %s", item.path, exc)
             summary.failed[item.path] = str(exc)
-            continue
-        summary.failed.pop(item.path, None)
-        summary.processed.append(item.path)
-    summary.processed.sort()
+            base = output_base(item.path, parquet_dir)
+            for suffix in ("mutation_event", "mutation"):
+                shutil.rmtree(f"{base}_{suffix}.parquet", ignore_errors=True)
+        else:
+            summary.processed.append(item.path)
     if summary.failed:
         logger.error(
             "%d/%d mutation files failed: %s",
@@ -574,7 +492,7 @@ def _write_mutations_grouped(
     inputs: list,
     parquet_dir: str,
     start_event_id: int,
-) -> None:
+) -> int:
     """Grouped write of convert_mutations: ``inputs`` (non-empty,
     discovery order) as one plan, each table written once into the
     per-file layout (_write_per_base). Files are grouped by header
@@ -585,10 +503,10 @@ def _write_mutations_grouped(
     study/profile/output base join from a broadcast manifest keyed by
     the scan's file URI. A scan file missing from the manifest raises
     mid-plan (fail loud, never silently unattributed). Files with zero
-    data rows get schema-only outputs, as the per-file writer's empty
-    write would; a file left out of ``inputs`` consumes no ids, as a
-    failed read does in a per-file loop. All-or-nothing:
-    convert_mutations owns per-file isolation."""
+    data rows get schema-only outputs, as a per-file write of an empty
+    frame would. Returns the next free id, from the id assigner's counts
+    pass (no extra job; zero rows leave ``start_event_id`` unchanged).
+    All-or-nothing: convert_mutations owns per-file isolation."""
     from pyspark.sql import functions as F
 
     groups: dict[str, list] = {}
@@ -604,7 +522,7 @@ def _write_mutations_grouped(
     file_order = {
         _spark_file_uri(it.path): i for i, it in enumerate(inputs)
     }
-    ranked = mut_ops.with_sequential_ids_multi(
+    ranked, next_id = mut_ops.with_sequential_ids_multi(
         frames, start=start_event_id, file_order=file_order
     )
     mf = arrow_local_df(
@@ -657,6 +575,7 @@ def _write_mutations_grouped(
         parquet_dir,
         ".grouped_staging",
     )
+    return next_id
 
 
 def _check_unique_bases(mode: str, inputs: list) -> None:

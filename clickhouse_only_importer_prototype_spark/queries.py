@@ -4452,14 +4452,13 @@ def clickhouse_http_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def grouped_salvage_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D3/D4 driver gate for convert_mutations' grouped salvage path
-    (plans/pipelines.py — round-10 verdict #3): the probe -> grouped
-    single-job write -> rename machinery driven end-to-end inside the
-    query, same harness posture as clickhouse_http_roundtrip (the
-    study tree is test scaffold; the three-phase pipeline under audit
-    is production code; the FAILURE seam itself is pytest-pinned via
-    monkeypatch because PERMISSIVE csv makes organic read failures
-    unreachable by construction).
+    """D3/D4 driver gate for convert_mutations' grouped write
+    (plans/pipelines.py — round-10 verdict #3): the grouped write ->
+    rename machinery driven end-to-end inside the query, same harness
+    posture as clickhouse_http_roundtrip (the study tree is test
+    scaffold; the pipeline under audit is production code; the per-file
+    FAILURE path is pytest-pinned via monkeypatch because PERMISSIVE csv
+    makes organic read failures unreachable by construction).
 
     A deterministic orders slice (1-in-50 keys; bounded driver
     collect, ~3k rows at sf0.1 — the documented bounded class) is
@@ -4471,7 +4470,7 @@ def grouped_salvage_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     across the grouped write (distinct == n, min 0, max n-1), and
     ``outputs_complete`` pins the reference output layout (both
     parquet files per study, per-study row counts equal to the
-    slice's per-study counts). Any probe, id prefix-sum, shuffle, or
+    slice's per-study counts). Any id prefix-sum, shuffle, or
     rename-promotion bug hash-mismatches the hard gate."""
     import os as _os
     import shutil as _shutil

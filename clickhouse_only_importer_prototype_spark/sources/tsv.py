@@ -44,8 +44,9 @@ def _header_only_schema(path: str, comment: str | None = None):
         occurrence, original case kept.
     Falls back to inference (None) for: unreadable first line, empty /
     comment-only files (must keep reading as empty zero-column frames,
-    the pinned degenerate behavior), and headers containing a quote
-    char (csv quote semantics belong to the real parser).
+    the pinned degenerate behavior), a whitespace-only first line, and
+    headers containing a quote char (csv quote semantics belong to the
+    real parser).
     """
     from pyspark.sql.types import StringType, StructField, StructType
 
@@ -60,7 +61,10 @@ def header_line_and_names(
     path: str, comment: str | None = None
 ) -> tuple[str, list[str]] | None:
     """(raw header line without EOL, Spark-normalized column names) or
-    None for empty/comment-only/quoted-header files. The raw line is
+    None for empty/comment-only/quoted-header files and for a first
+    line that Java's ``String.trim()`` empties (every char <= U+0020):
+    the csv reader skips such a line and takes the next one as the
+    header, so only the real parser may read the file. The raw line is
     what ``spark.read.text`` yields for that row (text source strips
     \\n, \\r\\n) — convert_cna's single text scan filters header rows
     by matching it byte-for-byte. Name normalization: see
@@ -74,7 +78,7 @@ def header_line_and_names(
                 continue
             line = raw
             break
-    if line is None or line.strip("\r\n") == "" or '"' in line:
+    if line is None or all(c <= " " for c in line) or '"' in line:
         return None
     stripped = line.rstrip("\r\n")
     names = stripped.split("\t")

@@ -7,11 +7,13 @@ from __future__ import annotations
 
 import glob
 import os
+import shutil
 
 import duckdb
 import pytest
 
 from clickhouse_only_importer_prototype_spark.operators import cna as cna_ops
+from clickhouse_only_importer_prototype_spark.operators import mutation as mut_ops
 from clickhouse_only_importer_prototype_spark.plans import pipelines
 from clickhouse_only_importer_prototype_spark.sinks.parquet import write_parquet
 from clickhouse_only_importer_prototype_spark.sources.tsv import read_cna_matrix
@@ -89,6 +91,37 @@ def _per_file_cna(spark, tree, out, with_derived=True):
         _write_cna_outputs(spark, item, str(out), with_derived)
 
 
+def _write_mutation_outputs(spark, item, parquet_dir, start):
+    """The per-file mutation reference: read one MAF (through
+    ``pipelines.read_maf``, so injected read faults apply), assign ids
+    from ``start``, write both outputs as ONE part file each. Returns
+    the next free id (an empty MAF keeps ``start``). On failure, partial
+    outputs are removed and the error re-raised."""
+    base = pipelines.output_base(item.path, parquet_dir)
+    out_paths = (f"{base}_mutation_event.parquet", f"{base}_mutation.parquet")
+    try:
+        df = pipelines.read_maf(spark, item.path)
+        with_ids = mut_ops.with_sequential_ids(df, start=start).persist()
+        try:
+            write_parquet(
+                mut_ops.mutation_event(with_ids), out_paths[0], single_file=True
+            )
+            write_parquet(
+                mut_ops.mutation(
+                    with_ids, item.cancer_study_id, item.genetic_profile_id
+                ),
+                out_paths[1],
+                single_file=True,
+            )
+            return mut_ops.next_event_id(with_ids, start=start)
+        finally:
+            with_ids.unpersist()
+    except Exception:
+        for p in out_paths:
+            shutil.rmtree(p, ignore_errors=True)
+        raise
+
+
 def _per_file_mutations(spark, tree, out):
     """Reference layout: the per-file writer over every MAF, ids
     threaded in discovery order; a failing file consumes no ids.
@@ -96,9 +129,7 @@ def _per_file_mutations(spark, tree, out):
     next_id, failed = 0, []
     for item in pipelines.discover_mutation_files(str(tree)):
         try:
-            next_id = pipelines._write_mutation_outputs(
-                spark, item, str(out), next_id
-            )
+            next_id = _write_mutation_outputs(spark, item, str(out), next_id)
         except Exception:  # noqa: BLE001
             failed.append(item.path)
     return failed
@@ -118,15 +149,13 @@ def _assert_same_outputs(ref, got):
     return names
 
 
-def _forbid_per_file_writers(monkeypatch):
-    """Fail any call of the per-file mutation writer or of a wide CNA
-    operator: a parity run must take the single-scan path, not converge
-    through a per-file or per-column plan."""
+def _forbid_wide_cna_operators(monkeypatch):
+    """Fail any call of a wide CNA operator: a parity run must take the
+    single-scan path, not converge through a per-column plan."""
 
     def forbidden(*args, **kwargs):
-        raise AssertionError("per-file writer or wide CNA operator called")
+        raise AssertionError("wide CNA operator called")
 
-    monkeypatch.setattr(pipelines, "_write_mutation_outputs", forbidden)
     for name in ("genetic_alterations", "cna_derived", "genetic_profile_samples"):
         monkeypatch.setattr(pipelines.cna_ops, name, forbidden)
 
@@ -255,110 +284,115 @@ def _three_study_mutation_tree(tmp_path):
     return root
 
 
+def _spy_grouped_writes(monkeypatch):
+    """Record the input paths of every _write_mutations_grouped call."""
+    calls = []
+    real = pipelines._write_mutations_grouped
+
+    def spy(spark_, inputs, *args):
+        calls.append([it.path for it in inputs])
+        return real(spark_, inputs, *args)
+
+    monkeypatch.setattr(pipelines, "_write_mutations_grouped", spy)
+    return calls
+
+
 def test_convert_mutations_grouped_salvage_isolates_corrupt_file(
     spark, tmp_path, monkeypatch
 ):
-    """Round-10 verdict #3: the grouped single-job write is
-    all-or-nothing; convert_mutations' probe restores D4 per-file
-    isolation. One MAF fails its read deterministically (injected at the
+    """The grouped write is all-or-nothing; convert_mutations restores
+    D4 per-file isolation. One MAF fails every read (injected at the
     read_maf seam — PERMISSIVE CSV makes content-level failures
-    unreachable): the grouped run still completes every healthy file,
-    the manifest names the failure, and the output equals the per-file
-    writer's over the same tree (same file set, same ids, same rows —
-    the failed file consumed no ids in both)."""
+    unreachable), so it breaks the grouped plan and then its own
+    per-file write: every healthy file is still converted, the manifest
+    names the failure, the failed file's stale outputs from an earlier
+    run are removed, and the output equals the per-file writer's over
+    the same tree (same file set, same ids, same rows — the failed file
+    consumed no ids in both)."""
     root = _three_study_mutation_tree(tmp_path)
+    out_ref, out_salv = tmp_path / "oref", tmp_path / "osalv"
+    assert pipelines.convert_mutations(spark, str(root), str(out_salv)).ok
     real_read = pipelines.read_maf
 
     def corrupt_read(spark_, path):
-        if isinstance(path, str) and "s_bb" in path:
+        if "s_bb" in str(path):
             raise RuntimeError("injected corruption")
         return real_read(spark_, path)
 
     monkeypatch.setattr(pipelines, "read_maf", corrupt_read)
-    out_ref, out_salv = tmp_path / "oref", tmp_path / "osalv"
     ref_failed = _per_file_mutations(spark, root, out_ref)
+    calls = _spy_grouped_writes(monkeypatch)
     salv = pipelines.convert_mutations(spark, str(root), str(out_salv))
+    a, b, c = (it.path for it in pipelines.discover_mutation_files(str(root)))
+    assert calls == [[a, b, c], [a], [b], [c]]
     assert not salv.ok and sorted(salv.failed) == ref_failed
     assert len(salv.processed) == 2
     (bad,) = salv.failed
     assert "s_bb" in bad and "injected corruption" in salv.failed[bad]
     names = _assert_same_outputs(out_ref, out_salv)
     assert len(names) == 4 and not any("s_bb" in n for n in names)
+    assert not (out_salv / ".grouped_staging").exists()
 
 
 def test_convert_mutations_grouped_salvage_replays_transient_failure(
     spark, tmp_path, monkeypatch
 ):
-    """A file that fails only its PROBE (transient) is salvaged by the
-    per-file replay: the run converges to ok, and the replayed file
-    takes ids past the healthy range (documented late-id contract —
-    unique and ordered, gapless within each phase)."""
+    """A file whose first read fails (transient) breaks the grouped
+    write; the per-file pass then converts it, so the run converges to
+    ok with a per-file loop's ids in discovery order."""
     root = _three_study_mutation_tree(tmp_path)
     real_read = pipelines.read_maf
     fails = {"n": 0}
 
     def flaky_once(spark_, path):
-        if isinstance(path, str) and "s_bb" in path and fails["n"] == 0:
+        if "s_bb" in str(path) and fails["n"] == 0:
             fails["n"] = 1
-            raise RuntimeError("transient probe failure")
+            raise RuntimeError("transient read failure")
         return real_read(spark_, path)
 
     monkeypatch.setattr(pipelines, "read_maf", flaky_once)
     out = tmp_path / "osalv2"
     s = pipelines.convert_mutations(spark, str(root), str(out))
     assert s.ok and len(s.processed) == 3 and not s.failed
-    ev_a = _read(out / "s_aa_data_mutations_mutation_event.parquet")
-    ev_b = _read(out / "s_bb_data_mutations_mutation_event.parquet")
-    ev_c = _read(out / "s_cc_data_mutations_mutation_event.parquet")
-    # healthy files keep loop-identical ids (s_bb's probe failure
-    # consumed none); the salvaged file takes the next free range
-    assert sorted(ev_a.MUTATION_EVENT_ID) == [0]
-    assert sorted(ev_c.MUTATION_EVENT_ID) == [1, 2]
-    assert sorted(ev_b.MUTATION_EVENT_ID) == [3]
-    # the replay goes through the per-file writer, so the salvaged
-    # output keeps its one-part-file layout
+    ids = {
+        name: sorted(
+            _read(out / f"{name}_data_mutations_mutation_event.parquet")
+            .MUTATION_EVENT_ID
+        )
+        for name in ("s_aa", "s_bb", "s_cc")
+    }
+    assert ids == {"s_aa": [0], "s_bb": [1], "s_cc": [2, 3]}
+    # a per-file write keeps the one-part-file layout
     parts = glob.glob(
         str(out / "s_bb_data_mutations_mutation_event.parquet" / "*.parquet")
     )
     assert len(parts) == 1, parts
 
 
-@pytest.mark.parametrize("fault", ["staged_write", "poisoned_file"])
 def test_convert_mutations_grouped_failure_replays_per_file(
-    spark, tmp_path, monkeypatch, fault
+    spark, tmp_path, monkeypatch
 ):
-    """If the grouped write itself raises (not a probe read failure),
-    every file is replayed through the per-file writer in discovery
-    order, so the ids are a per-file loop's and a bad file costs only
-    its own outputs. ``staged_write``: the staged write of the second
-    table raises after the first was promoted. ``poisoned_file``: s_bb
-    passes its probe, then fails every later read, so it breaks the
-    grouped plan and its own replay."""
+    """If the grouped write raises after promoting its first table (the
+    staged write of the second table fails, once), every file is
+    converted again on its own in discovery order: the run is ok, the
+    outputs and ids are a per-file loop's, and no staging dir is left."""
     root = _three_study_mutation_tree(tmp_path)
-    real_read, real_write = pipelines.read_maf, pipelines.write_parquet
-    probed = []
-
-    def read(spark_, path):
-        if fault == "poisoned_file" and "s_bb" in str(path):
-            if probed:
-                raise RuntimeError("injected corruption")
-            probed.append(path)
-        return real_read(spark_, path)
+    real_write = pipelines.write_parquet
+    fired = []
 
     def write(df, path, **kwargs):
         staged = ".grouped_staging" in path
-        if fault == "staged_write" and staged and path.endswith("mutation"):
+        if not fired and staged and path.endswith("mutation"):
+            fired.append(path)
             raise RuntimeError("injected grouped write failure")
         return real_write(df, path, **kwargs)
 
-    monkeypatch.setattr(pipelines, "read_maf", read)
     monkeypatch.setattr(pipelines, "write_parquet", write)
     out, ref = tmp_path / "out", tmp_path / "ref"
     s = pipelines.convert_mutations(spark, str(root), str(out))
-    ref_failed = _per_file_mutations(spark, root, ref)
-    assert sorted(s.failed) == ref_failed
-    assert len(ref_failed) == (fault == "poisoned_file")
-    assert len(s.processed) == 3 - len(ref_failed)
+    assert len(fired) == 1
+    assert s.ok and len(s.processed) == 3
+    assert _per_file_mutations(spark, root, ref) == []
     _assert_same_outputs(ref, out)
     assert not (out / ".grouped_staging").exists()
 
@@ -441,16 +475,18 @@ def test_convert_mutations_grouped_matches_loop_layout(
 ):
     """convert_mutations' grouped single-job write must reproduce the
     per-file writer's OUTPUT LAYOUT exactly — same file names, same
-    rows per file, identical ids, one part file per output — while
-    running one write job per table. Event ids are dense, gapless and
+    rows per file, identical ids, one part file per output — in one
+    grouped write of every input. Event ids are dense, gapless and
     in discovery order, checked explicitly per (id, ENTREZ_GENE_ID)."""
     root = tree(tmp_path)
     loop_out = tmp_path / "loop_g"
     grouped_out = tmp_path / "grouped_g"
     assert _per_file_mutations(spark, root, loop_out) == []
-    _forbid_per_file_writers(monkeypatch)
+    calls = _spy_grouped_writes(monkeypatch)
     s = pipelines.convert_mutations(spark, str(root), str(grouped_out))
     assert s.ok and len(s.processed) == n_files
+    discovered = pipelines.discover_mutation_files(str(root))
+    assert calls == [[it.path for it in discovered]]
     assert not (grouped_out / ".grouped_staging").exists()
     for fname in _assert_same_outputs(loop_out, grouped_out):
         parts = glob.glob(str(grouped_out / fname / "*.parquet"))
@@ -473,7 +509,7 @@ def test_convert_cna_grouped_matches_loop_layout(
     loop_out = tmp_path / "loop_c"
     grouped_out = tmp_path / "grouped_c"
     _per_file_cna(spark, study_tree, loop_out)
-    _forbid_per_file_writers(monkeypatch)
+    _forbid_wide_cna_operators(monkeypatch)
     s = pipelines.convert_cna(
         spark, str(study_tree), str(grouped_out), with_derived=True
     )
@@ -492,7 +528,7 @@ def test_cli_convert_cna_routes_quoted_files_to_csv_reader(
 ):
     """Files a raw tab split would parse differently from the csv
     reader — quoted cells, a quoted header, a data row equal to the
-    header — are parsed by the csv reader, the rest by the text scan;
+    header, a blank first line — are parsed by the csv reader, the rest by the text scan;
     all of them take the one positional transform and write, never a
     wide CNA operator. The CLI run exits 0 and every output equals the
     per-file writer's."""
@@ -510,6 +546,8 @@ def test_cli_convert_cna_routes_quoted_files_to_csv_reader(
         "s_qhead": '"Hugo_Symbol"\tEntrez_Gene_Id\t"S1"\nBRCA1\t672\t2\n',
         "s_rehdr": "Hugo_Symbol\tEntrez_Gene_Id\tS1\n"
         "Hugo_Symbol\tEntrez_Gene_Id\tS1\nALK\t238\t0\n",
+        # the csv reader skips a blank first line and takes the next
+        "s_tabhdr": "\t\t\nHugo_Symbol\tEntrez_Gene_Id\tS1\nTP53\t7157\t0\n",
     }
     for name, body in matrices.items():
         d = root / name
@@ -521,7 +559,7 @@ def test_cli_convert_cna_routes_quoted_files_to_csv_reader(
         (d / "data_cna.txt").write_text(body)
     ref, out = tmp_path / "ref_q", tmp_path / "out_q"
     _per_file_cna(spark, root, ref)
-    _forbid_per_file_writers(monkeypatch)
+    _forbid_wide_cna_operators(monkeypatch)
     routed = []
 
     def spy(spark_, path):
@@ -534,10 +572,12 @@ def test_cli_convert_cna_routes_quoted_files_to_csv_reader(
          "-parquet-dir", str(out)]
     )
     assert rc == 0
-    assert routed == ["s_qcell", "s_qhead", "s_rehdr"]
-    assert len(_assert_same_outputs(ref, out)) == 12
+    assert routed == ["s_qcell", "s_qhead", "s_rehdr", "s_tabhdr"]
+    assert len(_assert_same_outputs(ref, out)) == 15
     ga = _read(out / "s_qcell_data_cna_genetic_alterations.parquet")
     assert sorted(ga.VALUES) == ["0,a\tb", "1,-2"]
+    ga = _read(out / "s_tabhdr_data_cna_genetic_alterations.parquet")
+    assert list(zip(ga.GENE_SYMBOL, ga.VALUES)) == [("TP53", "0")]
 
 
 def test_convert_cna_aborts_on_empty_file_or_duplicate_base(spark, tmp_path):
