@@ -369,16 +369,28 @@ def test_convert_mutations_grouped_salvage_replays_transient_failure(
     assert len(parts) == 1, parts
 
 
+@pytest.mark.parametrize("fault", ["staged_write", "poisoned_file"])
 def test_convert_mutations_grouped_failure_replays_per_file(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, fault
 ):
     """If the grouped write raises after promoting its first table (the
     staged write of the second table fails, once), every file is
-    converted again on its own in discovery order: the run is ok, the
-    outputs and ids are a per-file loop's, and no staging dir is left."""
+    converted again on its own in discovery order: the outputs and ids
+    are a per-file loop's and no staging dir is left. ``staged_write``:
+    that is the only fault, so the run is ok. ``poisoned_file``: s_bb
+    also passes its grouped read and then fails every later read, so its
+    own per-file write fails too: it lands in the manifest and loses the
+    output the grouped write had already promoted for it."""
     root = _three_study_mutation_tree(tmp_path)
-    real_write = pipelines.write_parquet
-    fired = []
+    real_read, real_write = pipelines.read_maf, pipelines.write_parquet
+    fired, read_once = [], []
+
+    def read(spark_, path):
+        if fault == "poisoned_file" and "s_bb" in str(path):
+            if read_once:
+                raise RuntimeError("injected corruption")
+            read_once.append(path)
+        return real_read(spark_, path)
 
     def write(df, path, **kwargs):
         staged = ".grouped_staging" in path
@@ -387,13 +399,18 @@ def test_convert_mutations_grouped_failure_replays_per_file(
             raise RuntimeError("injected grouped write failure")
         return real_write(df, path, **kwargs)
 
+    monkeypatch.setattr(pipelines, "read_maf", read)
     monkeypatch.setattr(pipelines, "write_parquet", write)
     out, ref = tmp_path / "out", tmp_path / "ref"
     s = pipelines.convert_mutations(spark, str(root), str(out))
     assert len(fired) == 1
-    assert s.ok and len(s.processed) == 3
-    assert _per_file_mutations(spark, root, ref) == []
-    _assert_same_outputs(ref, out)
+    ref_failed = _per_file_mutations(spark, root, ref)
+    assert sorted(s.failed) == ref_failed
+    assert len(ref_failed) == (fault == "poisoned_file")
+    assert s.ok == (not ref_failed)
+    assert len(s.processed) == 3 - len(ref_failed)
+    names = _assert_same_outputs(ref, out)
+    assert len(names) == 6 - 2 * len(ref_failed)
     assert not (out / ".grouped_staging").exists()
 
 
