@@ -13,17 +13,18 @@ Reference semantics (mutation/transformer.go):
 
 Scale design for the surrogate key (SURVEY §7.5.1): a naive global
 ``row_number()`` funnels 100 TB through one partition. Instead:
-two-pass prefix-sum — (1) count rows per file (an aggregate over
-file-name, metadata-sized result), (2) ``row_number() OVER
-(PARTITION BY file ORDER BY scan_order)`` plus the file's broadcast
-offset. The only shuffle is the per-file window partition, parallel
-across files. The reference's own file order is nondeterministic (Go
-map iteration, cmd/cli/main.go:309,496); we define sorted-path order.
+two-pass prefix-sum — (1) per (file, scan partition), count the rows
+and take their first ``monotonically_increasing_id`` (an aggregate,
+metadata-sized result), (2) map-side, each row's id is its segment's
+broadcast offset plus its distance from that first id. No shuffle, no
+window and no sort: the rank pass is the scan itself. The reference's
+own file order is nondeterministic (Go map iteration,
+cmd/cli/main.go:309,496); we define sorted-path order.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from clickhouse_only_importer_prototype_spark.functions import ns, underscore_join
 from clickhouse_only_importer_prototype_spark.localframe import arrow_local_df
@@ -33,7 +34,6 @@ from clickhouse_only_importer_prototype_spark.schemas import (
 )
 
 _FILE = "__file"
-_SCAN_ORDER = "__scan_order"
 EVENT_ID = "MUTATION_EVENT_ID"
 
 
@@ -62,28 +62,29 @@ def _tagged_scan(df: DataFrame) -> DataFrame:
 
 def _rank_with_offsets(tagged: DataFrame, offsets: list[tuple]) -> DataFrame:
     """Rank pass over a ``_tagged_scan`` frame with driver-computed
-    (file, pid, offset, expected-count) rows; the drift guard raises
-    mid-plan on any packing change (see with_sequential_ids_multi)."""
+    (file, pid, offset, expected-count, first-mid) rows: a row's id is
+    its file segment's offset plus its distance from the segment's
+    first ``__mid``. Map-side — no window, exchange or sort; the drift
+    guard raises mid-plan on any packing change (see
+    with_sequential_ids_multi)."""
     spark = tagged.sparkSession
     offsets_df = arrow_local_df(
-        spark, offsets, f"{_FILE} string, __pid int, __offset long, __expect long"
+        spark,
+        offsets,
+        f"{_FILE} string, __pid int, __offset long, __expect long,"
+        " __min_mid long",
     )
-    w = Window.partitionBy(_FILE, "__pid").orderBy("__mid")
-    # same partition keys as `w`: shares its exchange, adds no shuffle
-    w_full = Window.partitionBy(_FILE, "__pid")
+    pos = F.col("__mid") - F.col("__min_mid")
     # left join so a partition the counts pass never saw surfaces as a
     # null expectation (raise) instead of vanishing through an inner join
-    guard_ok = F.col("__expect").isNotNull() & (
-        F.count("*").over(w_full) == F.col("__expect")
+    guard_ok = F.col("__expect").isNotNull() & (pos >= 0) & (
+        pos < F.col("__expect")
     )
     return (
         tagged.join(F.broadcast(offsets_df), [_FILE, "__pid"], "left")
         .withColumn(
             EVENT_ID,
-            F.when(
-                guard_ok,
-                F.row_number().over(w) - F.lit(1) + F.col("__offset"),
-            )
+            F.when(guard_ok, F.col("__offset") + pos)
             .otherwise(
                 F.raise_error(
                     F.concat_ws(
@@ -101,7 +102,7 @@ def _rank_with_offsets(tagged: DataFrame, offsets: list[tuple]) -> DataFrame:
             )
             .cast("long"),
         )
-        .drop("__pid", "__mid", "__offset", "__expect")
+        .drop("__pid", "__mid", "__offset", "__expect", "__min_mid")
     )
 
 
@@ -109,11 +110,12 @@ def with_sequential_ids_multi(
     frames: list[DataFrame],
     start: int = 0,
     file_order: dict[str, int] | None = None,
-) -> tuple[list[DataFrame], int]:
+) -> tuple[list[DataFrame], dict[str, int]]:
     """Gapless ids ACROSS several scan frames in one global
     (file, partition) order — the grouped D3 shape. Returns the ranked
-    frames and the next free id (``start`` plus every counted row, so
-    ``start`` when there are no rows), taken from the counts pass.
+    frames and each scanned file's row count from the counts pass, keyed
+    by scan URI (the next free id is ``start`` plus their sum; a file
+    with no rows is absent and consumes no ids).
 
     Heterogeneous MAF headers force one csv scan per header group
     (Spark applies the first file's header to every file of a
@@ -136,17 +138,17 @@ def with_sequential_ids_multi(
     correct when every path is encoding-invariant); a scanned URI
     absent from the map raises rather than silently mis-ordering.
 
-    Ranking is partition-parallel WITHIN each file: ``__mid``
+    Ranking is map-side and partition-parallel: ``__mid``
     (monotonically_increasing_id) encodes ``partition_id << 33 +
-    row_offset``, so ordering by ``__mid`` within a file is ordering by
-    (scan partition, row offset). The window partitions by (file, scan
-    partition) — a single 100 GB MAF ranks across all its scan splits
-    in parallel instead of funneling through one task — and the driver
-    prefix-sums the per-(file, partition) counts (one row per scan
-    split) in (file, partition) order, which yields byte-identical ids
-    to a per-file global rank. No persist: the counts are
-    recompute-invariant, and a pinned full-MAF cache per file would
-    leak for the session lifetime.
+    row_offset``, so it is consecutive within a scan partition, and a
+    file's rows are one contiguous segment of each FilePartition that
+    holds them. The counts pass collects ``count`` and ``min(__mid)``
+    per (file, scan partition); the driver prefix-sums the counts in
+    (file, partition) order, and a row's id is its segment's offset plus
+    ``__mid - min(__mid)`` — byte-identical to a per-file global rank,
+    with no shuffle: a single 100 GB MAF ranks in every scan split at
+    once. No persist: the counts are recompute-invariant, and a pinned
+    full-MAF cache per file would leak for the session lifetime.
 
     ASSUMPTION (load-bearing): ``__pid``/``__mid`` are identical across
     the counts pass and the rank pass. True when both evaluate the same
@@ -154,13 +156,23 @@ def with_sequential_ids_multi(
     of splits — but a scan-conf change between the passes (AQE
     coalesce, ``spark.sql.files.maxPartitionBytes``) would repartition
     the second scan. Rather than silently permuting ids, the rank pass
-    re-checks every (file, partition) row count against the broadcast
-    expectation and raises mid-plan on any drift."""
+    raises mid-plan on a row whose (file, partition) the counts pass
+    never saw, or whose position lies outside ``[0, count)``. A file's
+    row total is fixed, so a repacking either moves a segment's start
+    (rows fall out of range), grows a segment past its count, or makes
+    a segment the counts pass never saw. A file whose CONTENT changes
+    between the passes can pass this guard (a dropped last row keeps
+    every position in range): callers compare the rows they wrote with
+    the returned counts."""
     taggeds = [_tagged_scan(f) for f in frames]
     all_counts: list[tuple] = []
     for i, t in enumerate(taggeds):
-        for row in t.groupBy(_FILE, "__pid").count().collect():
-            all_counts.append((row[_FILE], row["__pid"], row["count"], i))
+        for row in (
+            t.groupBy(_FILE, "__pid")
+            .agg(F.count("*").alias("n"), F.min("__mid").alias("m"))
+            .collect()
+        ):
+            all_counts.append((row[_FILE], row["__pid"], row["n"], row["m"], i))
     if file_order is not None:
         missing = sorted(
             {c[0] for c in all_counts if c[0] not in file_order}
@@ -180,14 +192,16 @@ def with_sequential_ids_multi(
             return (x[0], x[1])
 
     per_frame: list[list[tuple]] = [[] for _ in frames]
+    file_rows: dict[str, int] = {}
     acc = start
-    for fpath, pid, cnt, i in sorted(all_counts, key=key):
-        per_frame[i].append((fpath, pid, acc, cnt))
+    for fpath, pid, cnt, min_mid, i in sorted(all_counts, key=key):
+        per_frame[i].append((fpath, pid, acc, cnt, min_mid))
+        file_rows[fpath] = file_rows.get(fpath, 0) + cnt
         acc += cnt
     return [
         _rank_with_offsets(t, per_frame[i])
         for i, t in enumerate(taggeds)
-    ], acc
+    ], file_rows
 
 
 def next_event_id(df_with_ids: DataFrame, start: int = 0) -> int:

@@ -42,6 +42,8 @@ import glob as _glob
 import logging
 import os
 import shutil
+from collections import Counter
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -131,13 +133,25 @@ def convert_cna(
     alterations/derived parquet and their sample-list row
     (cna/transformer.go:498-508).
 
+    The text scan's guard rides on the first staged write: no pass runs
+    only to check the files. The text-scanned files are written first
+    and alone; if the guard flags a file, or a file's header already
+    sent it to the csv reader, the staging is dropped and the tables are
+    built and written once more with every csv-routed file, each parsed
+    once, in discovery order. A run without such a file writes each
+    table once.
+
     CNA posture: abort on first failure (cna/transformer.go:30-45) — an
-    empty file, a missing header, a duplicate output base or a failed
-    write raises. Row parity with the per-file csv writer of the wide
-    operators (operators/cna.py) is pinned by test."""
+    empty file, a missing header, a duplicate output base, an
+    unattributed scan line or a failed write raises. Row parity with the
+    per-file csv writer of the wide operators (operators/cna.py) is
+    pinned by test."""
     import pyarrow as pa
     import pyarrow.parquet as pa_pq
-    from pyspark.sql import functions as F
+
+    from clickhouse_only_importer_prototype_spark.sources.tsv import (
+        header_line_and_names,
+    )
 
     inputs = discover_cna_files(tsv_dir)
     logger.info("found %d CNA files", len(inputs))
@@ -145,53 +159,36 @@ def convert_cna(
     _check_unique_bases("convert_cna", inputs)
     if not inputs:
         return RunSummary()
-    gps_rows, data = _cna_single_job_scan(spark, inputs)
-    sample_slice = F.slice(
-        F.col("__cells"), cna_ops.FIRST_SAMPLE_IDX + 1, F.col("__n")
-    )
-    gene = F.coalesce(F.col("__cells")[0], F.lit(""))
-    ga = data.select(
-        "__base",
-        F.col("__study").alias("CANCER_STUDY"),
-        F.col("__profile").alias("GENETIC_PROFILE"),
-        gene.alias("GENE_SYMBOL"),
-        F.array_join(sample_slice, ",").alias("VALUES"),
-    )
-    tables = [("genetic_alterations", ga, ["GENE_SYMBOL", "VALUES"])]
-    if with_derived:
-        exploded = data.select(
-            "__base",
-            "__study",
-            "__profile",
-            "__sample_ids",
-            gene.alias("__gene"),
-            F.posexplode(sample_slice).alias("__pos", "__alt"),
-        )
-        derived = exploded.select(
-            "__base",
-            F.element_at(
-                F.col("__sample_ids"), F.col("__pos") + 1
-            ).alias("SAMPLE_ID"),
-            F.col("__study").alias("CANCER_STUDY"),
-            F.col("__gene").alias("GENE_SYMBOL"),
-            F.col("__profile").alias("GENETIC_PROFILE"),
-            F.col("__alt").alias("ALTERATION"),
-        )
-        # ALTERATION in the sort key: a duplicated gene row with
-        # different values would otherwise tie on (gene, sample) and
-        # leave file byte-order run-dependent
-        tables.append(
-            ("derived", derived, ["GENE_SYMBOL", "SAMPLE_ID", "ALTERATION"])
-        )
+    headers = {it.path: header_line_and_names(it.path) for it in inputs}
+    csv_paths = {p for p, h in headers.items() if h is None}
     bases = [output_base(it.path, "") for it in inputs]
-    _write_per_base(spark, tables, bases, parquet_dir, ".grouped_staging_cna")
+    staging = ".grouped_staging_cna"
+    parse_csv = len(csv_paths) == len(inputs)
+    while True:
+        sample_ids, data, guard = _cna_single_job_scan(
+            spark, inputs, headers, csv_paths, parse_csv
+        )
+        tables = _cna_tables(data, with_derived)
+        if _write_per_base(spark, tables, bases, parquet_dir, staging, guard):
+            break
+        parse_csv = True
+    logger.info(
+        "single-scan CNA plan: %d files, %d via csv",
+        len(inputs) - len(csv_paths),
+        len(csv_paths),
+    )
     gps_schema = pa.schema(
         [
             pa.field(n, pa.string())
             for n in ("CANCER_STUDY", "GENETIC_PROFILE", "ORDERED_SAMPLE_LIST")
         ]
     )
-    for base, row in zip(bases, gps_rows):
+    for base, it in zip(bases, inputs):
+        row = (
+            it.cancer_study_id,
+            it.genetic_profile_id,
+            ",".join(sample_ids[it.path]),
+        )
         dest = os.path.join(
             parquet_dir, f"{base}_genetic_profile_samples.parquet"
         )
@@ -260,13 +257,65 @@ def convert_mutations(
     return summary
 
 
+def _cna_tables(
+    data: DataFrame, with_derived: bool
+) -> list[tuple[str, DataFrame, list[str]]]:
+    """genetic_alterations [and derived] of _cna_single_job_scan's rows,
+    as _write_per_base tables."""
+    from pyspark.sql import functions as F
+
+    sample_slice = F.slice(
+        F.col("__cells"), cna_ops.FIRST_SAMPLE_IDX + 1, F.col("__n")
+    )
+    gene = F.coalesce(F.col("__cells")[0], F.lit(""))
+    ga = data.select(
+        "__base",
+        F.col("__study").alias("CANCER_STUDY"),
+        F.col("__profile").alias("GENETIC_PROFILE"),
+        gene.alias("GENE_SYMBOL"),
+        F.array_join(sample_slice, ",").alias("VALUES"),
+    )
+    tables = [("genetic_alterations", ga, ["GENE_SYMBOL", "VALUES"])]
+    if with_derived:
+        exploded = data.select(
+            "__base",
+            "__study",
+            "__profile",
+            "__sample_ids",
+            gene.alias("__gene"),
+            F.posexplode(sample_slice).alias("__pos", "__alt"),
+        )
+        derived = exploded.select(
+            "__base",
+            F.element_at(
+                F.col("__sample_ids"), F.col("__pos") + 1
+            ).alias("SAMPLE_ID"),
+            F.col("__study").alias("CANCER_STUDY"),
+            F.col("__gene").alias("GENE_SYMBOL"),
+            F.col("__profile").alias("GENETIC_PROFILE"),
+            F.col("__alt").alias("ALTERATION"),
+        )
+        # ALTERATION in the sort key: a duplicated gene row with
+        # different values would otherwise tie on (gene, sample) and
+        # leave file byte-order run-dependent
+        tables.append(
+            ("derived", derived, ["GENE_SYMBOL", "SAMPLE_ID", "ALTERATION"])
+        )
+    return tables
+
+
 def _cna_single_job_scan(
-    spark: SparkSession, inputs: list
-) -> tuple[list[tuple], DataFrame]:
-    """The rows of convert_cna: driver-side header parse (manifest +
-    per-study sample lists), ONE multi-path ``spark.read.text`` scan,
-    broadcast attribution join, a guard aggregation, and positional
-    cell parsing.
+    spark: SparkSession,
+    inputs: list,
+    headers: dict,
+    csv_paths: set[str],
+    parse_csv: bool,
+) -> tuple[dict[str, list[str]], DataFrame, Callable[[str, str], bool]]:
+    """The rows of convert_cna: ONE multi-path ``spark.read.text`` scan
+    of every input not in ``csv_paths``, attributed by a broadcast
+    header manifest (``headers``: path -> header_line_and_names), an
+    observed guard, and positional cell parsing; with ``parse_csv``,
+    the files of ``csv_paths`` too, through the csv reader.
 
     Why positional: a CNA header is per-study, so a csv plan is too,
     and a union of per-study csv plans (one scan node and codegen unit
@@ -280,24 +329,28 @@ def _cna_single_job_scan(
     a quote char in any line (the csv reader applies quote='"'), or a
     header line that is unparseable or does not occur exactly once
     (header rows are removed by byte-match, and the csv reader keeps a
-    repeated header row as data). The csv reader (read_cna_matrix)
-    parses those, and each is projected to the same row shape: all its
-    columns in ONE ``transform(array(*), ...)`` expression and its
-    sample ids in one JSON literal, so no plan node grows with the
-    sample columns. Each such file adds a scan branch to the union —
-    the route for the odd file, not for a corpus.
+    repeated header row as data). An unparseable header is known up
+    front (``csv_paths``); the rest is found by the guard, a
+    ``DataFrame.observe`` on the tagged scan (unattributed lines, header
+    matches and quote-bearing lines per file) that the first action over
+    ``data`` collects. The csv reader (read_cna_matrix) parses those
+    files, and each is projected to the same row shape: all its columns
+    in ONE ``transform(array(*), ...)`` expression and its sample ids in
+    one JSON literal, so no plan node grows with the sample columns.
+    Each such file adds a scan branch to the union — the route for the
+    odd file, not for a corpus.
 
-    Returns ``(gps_rows, data)`` for ``inputs`` in discovery order.
-    ``data`` carries one row per data line with
-    __study/__profile/__base/__sample_ids/__n/__cells; ``gps_rows``
-    holds one (study, profile, ordered_sample_list) per input."""
+    Returns ``(sample_ids, data, guard)``. ``sample_ids`` maps each
+    included path to its sample ids; ``data`` carries one row per data
+    line with __study/__profile/__base/__sample_ids/__n/__cells.
+    ``guard(suffix, stage_dir)`` is _write_per_base's check, run once
+    ``data`` has been written: it raises on an unattributed line, adds
+    the flagged files to ``csv_paths``, and returns False when the rows
+    cannot stand — a file was flagged, or csv files were left out."""
     import json
 
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
-
-    from clickhouse_only_importer_prototype_spark.sources.tsv import (
-        header_line_and_names,
-    )
 
     def ids_of(item, names):
         return [
@@ -305,64 +358,57 @@ def _cna_single_job_scan(
             for c in names[cna_ops.FIRST_SAMPLE_IDX:]
         ]
 
-    csv_paths: set[str] = set()
-    manifest: dict[str, tuple] = {}  # path -> manifest row
+    sample_ids: dict[str, list[str]] = {}
+    manifest: list[tuple] = []
+    uri_paths: dict[str, str] = {}
     for item in inputs:
-        parsed = header_line_and_names(item.path)
-        if parsed is None:  # quoted or empty header
-            csv_paths.add(item.path)
+        if item.path in csv_paths:
             continue
-        raw, names = parsed
-        manifest[item.path] = (
-            _spark_file_uri(item.path),
-            item.cancer_study_id,
-            item.genetic_profile_id,
-            output_base(item.path, ""),
-            raw,
-            ids_of(item, names),
+        raw, names = headers[item.path]
+        sample_ids[item.path] = ids_of(item, names)
+        uri_paths[_spark_file_uri(item.path)] = item.path
+        manifest.append(
+            (
+                _spark_file_uri(item.path),
+                item.cancer_study_id,
+                item.genetic_profile_id,
+                output_base(item.path, ""),
+                raw,
+                sample_ids[item.path],
+            )
         )
     frames: list[DataFrame] = []
-    scanned = [it.path for it in inputs if it.path not in csv_paths]
-    if scanned:
+    obs = Observation() if manifest else None
+    if manifest:
         mf = arrow_local_df(
             spark,
-            list(manifest.values()),
+            manifest,
             "__file string, __study string, __profile string,"
             " __base string, __header string, __sample_ids array<string>",
         )
+        is_header = F.col("value") == F.col("__header")
+
+        def files_where(cond):
+            return F.when(cond, F.col("__file"))
+
+        # the guard: every scanned line must be attributed to a manifest
+        # file; per file, the header matches and the lines containing
+        # the csv quote char
         tagged = (
-            spark.read.text(scanned)
+            spark.read.text(list(uri_paths.values()))
             .select(F.col("value"), F.input_file_name().alias("__file"))
             .join(F.broadcast(mf), "__file", "left")
+            .observe(
+                obs,
+                F.collect_set(files_where(F.col("__study").isNull())).alias(
+                    "miss"
+                ),
+                F.collect_list(files_where(is_header)).alias("hdr"),
+                F.collect_set(files_where(F.col("value").contains('"'))).alias(
+                    "quote"
+                ),
+            )
         )
-        is_header = F.col("value") == F.col("__header")
-        # guard pass, before anything is written: every scanned line must
-        # be attributed to a manifest file; per file, count header matches
-        # and lines containing the csv quote char
-        flagged = (
-            tagged.groupBy("__file")
-            .agg(
-                F.sum(is_header.cast("int")).alias("n_hdr"),
-                F.max(F.col("__study").isNull().cast("int")).alias("n_miss"),
-                F.sum(F.col("value").contains('"').cast("int")).alias("n_quote"),
-            )
-            .where(
-                (F.col("n_hdr") != 1)
-                | (F.col("n_miss") > 0)
-                | (F.col("n_quote") > 0)
-            )
-            .collect()
-        )
-        unattributed = [r["__file"] for r in flagged if r["n_miss"]]
-        if unattributed:
-            raise ValueError(
-                "single-scan CNA plan: scan file(s) missing from the header"
-                f" manifest: {unattributed[:5]}"
-            )
-        if flagged:
-            uris = [r["__file"] for r in flagged]
-            csv_paths |= {p for p in scanned if _spark_file_uri(p) in uris}
-            tagged = tagged.where(~F.col("__file").isin(uris))
         n_samples = F.size("__sample_ids")
         parts = F.split(F.col("value"), "\t")
         # csv parity: the csv reader drops every line that Java's
@@ -389,15 +435,9 @@ def _cna_single_job_scan(
                 padded.alias("__cells"),
             )
         )
-    logger.info(
-        "single-scan CNA plan: %d files, %d via csv",
-        len(inputs) - len(csv_paths),
-        len(csv_paths),
-    )
-    sample_ids = {path: row[5] for path, row in manifest.items()}
     every_cell = F.expr("transform(array(*), x -> coalesce(x, ''))")
     for item in inputs:
-        if item.path not in csv_paths:
+        if not parse_csv or item.path not in csv_paths:
             continue
         df = read_cna_matrix(spark, item.path)
         if not df.columns:
@@ -415,11 +455,24 @@ def _cna_single_job_scan(
                 every_cell.alias("__cells"),
             )
         )
-    gps_rows = [
-        (it.cancer_study_id, it.genetic_profile_id, ",".join(sample_ids[it.path]))
-        for it in inputs
-    ]
-    return gps_rows, _balanced_union(frames)
+
+    def guard(suffix: str, stage_dir: str) -> bool:
+        if obs is not None:
+            seen = obs.get
+            if seen["miss"]:
+                raise ValueError(
+                    "single-scan CNA plan: scan file(s) missing from the"
+                    f" header manifest: {sorted(seen['miss'])[:5]}"
+                )
+            n_hdr = Counter(seen["hdr"])
+            flagged = {u for u in uri_paths if n_hdr[u] != 1}
+            flagged |= set(seen["quote"])
+            if flagged:
+                csv_paths.update(uri_paths[u] for u in flagged)
+                return False
+        return parse_csv or not csv_paths
+
+    return sample_ids, _balanced_union(frames), guard
 
 
 def _write_per_base(
@@ -428,7 +481,8 @@ def _write_per_base(
     bases: list[str],
     parquet_dir: str,
     staging_name: str,
-) -> None:
+    check: Callable[[str, str], bool] | None = None,
+) -> bool:
     """Write each ``(suffix, df, sort_cols)`` table ONCE into the
     reference's per-file layout ``<base>_<suffix>.parquet``; ``df``
     carries each row's output base in ``__base``. ``repartition(n,
@@ -437,8 +491,13 @@ def _write_per_base(
     ``sortWithinPartitions`` makes file content order deterministic. A
     staged ``partitionBy(__base)`` write plus a driver rename pass
     (_promote_partition_dirs) lands the reference names: one shuffle
-    and one write stage per table, whatever the file count. The staging
-    dir is removed on every path."""
+    and one write stage per table, whatever the file count.
+
+    ``check(suffix, stage_dir)`` runs after each staged write, before
+    that table is promoted: it may raise, and a False return stops the
+    call with that table unpromoted (so nothing is promoted when the
+    first table fails it). Returns True when every table is promoted.
+    The staging dir is removed on every path."""
     staging = os.path.join(parquet_dir, staging_name)
     shutil.rmtree(staging, ignore_errors=True)
     nparts = max(1, min(len(bases), spark.sparkContext.defaultParallelism * 4))
@@ -452,13 +511,16 @@ def _write_per_base(
                 stage_dir,
                 partition_by=["__base"],
             )
+            if check is not None and not check(suffix, stage_dir):
+                return False
             _promote_partition_dirs(
                 stage_dir,
                 parquet_dir,
                 bases,
                 suffix,
-                _arrow_schema_without_base(df),
+                _arrow_schema_without_base(df.schema),
             )
+        return True
     finally:
         shutil.rmtree(staging, ignore_errors=True)
 
@@ -504,9 +566,13 @@ def _write_mutations_grouped(
     the scan's file URI. A scan file missing from the manifest raises
     mid-plan (fail loud, never silently unattributed). Files with zero
     data rows get schema-only outputs, as a per-file write of an empty
-    frame would. Returns the next free id, from the id assigner's counts
-    pass (no extra job; zero rows leave ``start_event_id`` unchanged).
-    All-or-nothing: convert_mutations owns per-file isolation."""
+    frame would. Before each table is promoted, its staged per-file row
+    counts (parquet footers, read on the driver) must equal the id
+    assigner's counts pass, so a file that changed between the two
+    passes raises instead of leaving an id gap. Returns the next free
+    id, from that counts pass (no extra job; zero rows leave
+    ``start_event_id`` unchanged). All-or-nothing: convert_mutations
+    owns per-file isolation."""
     from pyspark.sql import functions as F
 
     groups: dict[str, list] = {}
@@ -522,7 +588,7 @@ def _write_mutations_grouped(
     file_order = {
         _spark_file_uri(it.path): i for i, it in enumerate(inputs)
     }
-    ranked, next_id = mut_ops.with_sequential_ids_multi(
+    ranked, file_rows = mut_ops.with_sequential_ids_multi(
         frames, start=start_event_id, file_order=file_order
     )
     mf = arrow_local_df(
@@ -565,25 +631,40 @@ def _write_mutations_grouped(
             for j in joined_frames
         ]
     )
+    bases = [output_base(it.path, "") for it in inputs]
+    expected = {
+        base: file_rows.get(_spark_file_uri(it.path), 0)
+        for base, it in zip(bases, inputs)
+    }
+
+    def check(suffix: str, stage_dir: str) -> bool:
+        staged = _staged_rows(stage_dir)
+        wrong = sorted(b for b, n in expected.items() if staged.get(b, 0) != n)
+        if wrong:
+            raise RuntimeError(
+                f"grouped mutations write: staged {suffix} row counts differ"
+                f" from the id counts pass for {wrong[:5]}"
+            )
+        return True
+
     _write_per_base(
         spark,
         [
             ("mutation_event", ev_all, [mut_ops.EVENT_ID]),
             ("mutation", mut_all, [mut_ops.EVENT_ID]),
         ],
-        [output_base(it.path, "") for it in inputs],
+        bases,
         parquet_dir,
         ".grouped_staging",
+        check,
     )
-    return next_id
+    return start_event_id + sum(file_rows.values())
 
 
 def _check_unique_bases(mode: str, inputs: list) -> None:
     """Per-file output bases of the per-file layout; raises up front if
     two inputs collide onto one ``<studyDir>_<stem>`` (a per-file loop
     would silently let the later write clobber the earlier one)."""
-    from collections import Counter
-
     bases = [output_base(it.path, "") for it in inputs]
     dup = {b for b, n in Counter(bases).items() if n > 1}
     if dup:
@@ -603,8 +684,7 @@ def _promote_partition_dirs(
 ) -> None:
     """Driver-side rename pass of _write_per_base: move each
     ``__base=<v>`` partition dir of a staged partitionBy write to the
-    reference's ``<base>_<suffix>.parquet`` name. Dir names carry
-    Spark's %XX partition-value escaping (urllib unquote reverses).
+    reference's ``<base>_<suffix>.parquet`` name (_staged_partitions).
     Bases with no partition dir (zero-data-row inputs) get a schema-
     only parquet written via pyarrow — milliseconds, vs ~5s per tiny
     frame through the Python local-relation write path (the round-8
@@ -617,14 +697,9 @@ def _promote_partition_dirs(
     that shape ever materializes, thread-pool the renames (they are
     independent same-filesystem moves) or commit the mapping to a
     catalog instead of materializing reference filenames."""
-    from urllib.parse import unquote
-
     import pyarrow.parquet as pa_pq
 
-    found = {}
-    for d in os.listdir(stage_dir):
-        if d.startswith("__base="):
-            found[unquote(d[len("__base=") :])] = os.path.join(stage_dir, d)
+    found = _staged_partitions(stage_dir)
     for base in bases:
         dest = os.path.join(parquet_dir, f"{base}_{suffix}.parquet")
         shutil.rmtree(dest, ignore_errors=True)
@@ -644,9 +719,39 @@ def _promote_partition_dirs(
         )
 
 
-def _arrow_schema_without_base(df: DataFrame):
-    """pyarrow schema of a grouped frame minus the __base tag (all
-    columns string except bigint ids) — for schema-only outputs."""
+def _staged_partitions(stage_dir: str) -> dict[str, str]:
+    """base -> ``__base=<v>`` partition dir of a staged partitionBy
+    write. Dir names carry Spark's %XX partition-value escaping (urllib
+    unquote reverses)."""
+    from urllib.parse import unquote
+
+    prefix = "__base="
+    return {
+        unquote(d[len(prefix) :]): os.path.join(stage_dir, d)
+        for d in os.listdir(stage_dir)
+        if d.startswith(prefix)
+    }
+
+
+def _staged_rows(stage_dir: str) -> dict[str, int]:
+    """base -> rows staged for it, from the part files' parquet footers
+    (driver-side, no Spark job)."""
+    import pyarrow.parquet as pa_pq
+
+    return {
+        base: sum(
+            pa_pq.read_metadata(os.path.join(d, f)).num_rows
+            for f in os.listdir(d)
+            if f.endswith(".parquet")
+        )
+        for base, d in _staged_partitions(stage_dir).items()
+    }
+
+
+def _arrow_schema_without_base(schema):
+    """pyarrow schema of a table or grouped frame's Spark schema minus
+    the __base tag (all columns string except bigint ids) — for
+    schema-only outputs and footer checks."""
     import pyarrow as pa
 
     return pa.schema(
@@ -657,10 +762,31 @@ def _arrow_schema_without_base(df: DataFrame):
                 if f.dataType.simpleString() == "bigint"
                 else pa.string(),
             )
-            for f in df.schema.fields
+            for f in schema.fields
             if f.name != "__base"
         ]
     )
+
+
+def _check_footer_schemas(paths: list[str], schema) -> None:
+    """Every part file under ``paths`` must carry ``schema``'s columns
+    in order, with its types, per its pyarrow footer (driver-side, no
+    Spark job): a read with the declared schema skips Spark's inference
+    job, and would otherwise null out or misread a drifted file."""
+    import pyarrow.parquet as pa_pq
+
+    want = [(f.name, f.type) for f in _arrow_schema_without_base(schema)]
+    for p in paths:
+        for name in sorted(os.listdir(p)):
+            if name.startswith(("_", ".")):  # not read by Spark either
+                continue
+            part = os.path.join(p, name)
+            got = [(f.name, f.type) for f in pa_pq.read_schema(part)]
+            if got != want:
+                raise ValueError(
+                    f"load_clickhouse: {part} has columns {got}, expected"
+                    f" {want}"
+                )
 
 
 def load_clickhouse(
@@ -676,7 +802,11 @@ def load_clickhouse(
     sinks.clickhouse.catalog_ddl) driver-side, then union-all every
     per-file output ``*_<kind>.parquet`` under ``parquet_dir`` in one
     multi-path scan and bulk-insert it as JSONEachRow with
-    ``write_clickhouse_http`` — one distributed job per table.
+    ``write_clickhouse_http`` — one distributed job per table. The scan
+    takes the table's declared schema (schemas.ALL_TABLES), so Spark
+    runs no schema-inference job; every part file's footer schema is
+    checked against it on the driver first, and a mismatch raises
+    naming the file.
 
     Combine outputs (``_is_combined``) are skipped: they repeat the rows
     of the per-file outputs next to them, so loading both would insert
@@ -707,8 +837,9 @@ def load_clickhouse(
             )
         if not paths:
             continue
+        _check_footer_schemas(paths, ALL_TABLES[kind])
         execute_clickhouse_http(url, ddls[kind], user, password)
-        df = spark.read.parquet(*paths)
+        df = spark.read.schema(ALL_TABLES[kind]).parquet(*paths)
         counts[kind] = write_clickhouse_http(
             df, url, kind, user=user, password=password
         )

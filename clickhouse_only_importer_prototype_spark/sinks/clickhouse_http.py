@@ -161,8 +161,9 @@ def write_clickhouse_http(
     as one ``INSERT ... FORMAT JSONEachRow`` body (``mapInArrow`` so
     NULL-bearing integer columns never pass through float64;
     vectorized pandas ``to_json`` for the body — see module
-    docstring). Returns the total row count sent (the job's action is
-    the count aggregation, so the write is forced exactly once).
+    docstring). Returns the total row count sent: each task yields its
+    count and the driver sums the collected rows, so the write is forced
+    exactly once, in one job with no shuffle.
     Raises on the first non-2xx response (fail loud; see module
     docstring for the at-least-once retry semantics that implies).
 
@@ -263,11 +264,6 @@ def write_clickhouse_http(
         flush()
         yield pa.RecordBatch.from_pydict({"rows_sent": [sent]})
 
-    from pyspark.sql import functions as F
-
-    row = (
-        df.mapInArrow(send, "rows_sent long")
-        .agg(F.sum("rows_sent").alias("total"))
-        .first()
-    )
-    return int(row["total"] or 0)
+    # one row per task, summed on the driver: the collect is the one job
+    sent = df.mapInArrow(send, "rows_sent long").collect()
+    return sum(r["rows_sent"] for r in sent)

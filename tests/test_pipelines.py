@@ -414,6 +414,56 @@ def test_convert_mutations_grouped_failure_replays_per_file(
     assert not (out / ".grouped_staging").exists()
 
 
+def test_convert_mutations_count_check_catches_changed_file(
+    spark, tmp_path, monkeypatch
+):
+    """A MAF that loses its last data line between the id counts pass
+    and the grouped write keeps every rank position in range, so only
+    a comparison of the rows written with the counts can see it. The
+    grouped write must raise, and the per-file path then converts the
+    truncated tree with a per-file loop's ids and outputs."""
+    root = _three_study_mutation_tree(tmp_path)
+    maf = root / "s_cc" / "data_mutations.txt"
+    real_ids = pipelines.mut_ops.with_sequential_ids_multi
+    truncated = []
+
+    def ids_then_truncate(*args, **kwargs):
+        out = real_ids(*args, **kwargs)
+        if not truncated:
+            truncated.append(maf)
+            maf.write_text("".join(maf.read_text().splitlines(True)[:-1]))
+        return out
+
+    monkeypatch.setattr(
+        pipelines.mut_ops, "with_sequential_ids_multi", ids_then_truncate
+    )
+    real_write, raised = pipelines._write_mutations_grouped, []
+
+    def spy(spark_, inputs, *args):
+        try:
+            return real_write(spark_, inputs, *args)
+        except Exception as exc:
+            raised.append((len(inputs), exc))
+            raise
+
+    monkeypatch.setattr(pipelines, "_write_mutations_grouped", spy)
+    out, ref = tmp_path / "out", tmp_path / "ref"
+    s = pipelines.convert_mutations(spark, str(root), str(out))
+    assert truncated and [n for n, _ in raised] == [3]
+    assert s.ok and len(s.processed) == 3
+    assert _per_file_mutations(spark, root, ref) == []
+    assert len(_assert_same_outputs(ref, out)) == 6
+    ids = {
+        name: sorted(
+            _read(out / f"{name}_data_mutations_mutation_event.parquet")
+            .MUTATION_EVENT_ID
+        )
+        for name in ("s_aa", "s_bb", "s_cc")
+    }
+    assert ids == {"s_aa": [0], "s_bb": [1], "s_cc": [2]}
+    assert not (out / ".grouped_staging").exists()
+
+
 def _maf_tree(root, mafs):
     """One study dir per ``mafs`` entry (name -> MAF body), or one dir
     holding several MAFs when a name carries a ``/<stem>``."""

@@ -900,3 +900,74 @@ def test_load_clickhouse_end_to_end(spark, tmp_path):
     ]
     ev_ids = sorted(r["MUTATION_EVENT_ID"] for r in inserted["mutation_event"])
     assert ev_ids == [0, 1]
+
+
+def test_load_clickhouse_rejects_drifted_footer_schema(spark, tmp_path):
+    """load_clickhouse reads each table with its declared schema, so a
+    part file whose columns differ from it (here swapped) must raise,
+    naming the file, before any DDL or row is sent."""
+    import pyarrow as pa
+    import pyarrow.parquet as pa_pq
+
+    from clickhouse_only_importer_prototype_spark.plans import pipelines
+
+    out = tmp_path / "out_drift" / "s_x_data_mutations_mutation.parquet"
+    out.mkdir(parents=True)
+    (out / "_SUCCESS").write_text("")
+    pa_pq.write_table(
+        pa.table({"SAMPLE_ID": ["a"], "MUTATION_EVENT_ID": [0]}),
+        out / "part-00000.parquet",
+    )
+    srv, records = _capture_server()
+    try:
+        url = f"http://127.0.0.1:{srv.server_address[1]}"
+        with pytest.raises(ValueError, match="part-00000.parquet has columns"):
+            pipelines.load_clickhouse(spark, str(out.parent), url)
+    finally:
+        srv.shutdown()
+    assert records == []
+
+
+def test_import_job_budget(spark, tmp_path, count_jobs):
+    """Spark jobs per call on a 2-study tree. convert_cna's guard rides
+    on its first staged write (no guard pass), convert_mutations ranks
+    its ids map-side (no window exchange per table), and load_clickhouse
+    reads each table with its declared schema (no inference job) and
+    posts it in one job (no aggregation). The previous design ran 9, 12
+    and 3 per loaded table."""
+    from clickhouse_only_importer_prototype_spark.plans import pipelines
+
+    root = tmp_path / "studies_j"
+    for name, gene in (("s_j1", "TP53\t7157"), ("s_j2", "KRAS\t3845")):
+        d = root / name
+        d.mkdir(parents=True)
+        for kind, body in (
+            ("cna", f"Hugo_Symbol\tEntrez_Gene_Id\tS1\tS2\n{gene}\t0\t-1\n"),
+            (
+                "mutations",
+                "#version 2.4\nHugo_Symbol\tEntrez_Gene_Id\t"
+                f"Tumor_Sample_Barcode\n{gene}\tS1\n{gene}\tS2\n",
+            ),
+        ):
+            (d / f"meta_{kind}.txt").write_text(
+                f"cancer_study_identifier: {name}\nstable_id: {kind}\n"
+                f"data_filename: data_{kind}.txt\n"
+            )
+            (d / f"data_{kind}.txt").write_text(body)
+    out = str(tmp_path / "out_j")
+    cna, cna_jobs = count_jobs(
+        lambda: pipelines.convert_cna(spark, str(root), out, with_derived=True)
+    )
+    mut, mut_jobs = count_jobs(
+        lambda: pipelines.convert_mutations(spark, str(root), out)
+    )
+    srv, _ = _capture_server()
+    try:
+        url = f"http://127.0.0.1:{srv.server_address[1]}"
+        counts, load_jobs = count_jobs(
+            lambda: pipelines.load_clickhouse(spark, out, url)
+        )
+    finally:
+        srv.shutdown()
+    assert cna.ok and mut.ok and len(counts) == 5
+    assert (cna_jobs, mut_jobs, load_jobs) == (6, 10, 5)
