@@ -16,7 +16,7 @@ Layout:
   functions/  - scalar helper expressions
   plans/      - end-to-end pipelines (convert-cna, convert-mutations,
                 combine) mirroring the reference CLI modes
-  sinks/      - parquet + ClickHouse JDBC writers
+  sinks/      - parquet writers, ClickHouse DDL and the HTTP load sink
   streaming/  - Structured Streaming over the events table
 """
 

@@ -28,8 +28,8 @@ MODES = (
     "combine-cna-with-derived",
     "combine-mutations",
     # beyond the reference: emit the ClickHouse CREATE TABLE statements
-    # for the five catalog tables (the DDL the JDBC sink's inserts or an
-    # out-of-band parquet load assume on the server)
+    # for the five catalog tables (the DDL that load-clickhouse's inserts
+    # or an out-of-band parquet load assume on the server)
     "ddl",
     # beyond the reference: bulk-load converted parquet into a live
     # ClickHouse over the jar-free HTTP interface (DDL, then one

@@ -16,8 +16,8 @@ Scale shapes:
   set is typically orders of magnitude smaller than the base, so its
   shuffle is cheap and Catalyst/AQE broadcasts it under the
   threshold). The base shuffles once — or never, when both sides are
-  bucketed by the key (sinks/bucketed.py): then the merge plan has
-  zero Exchange. No windows over the base, no global sort.
+  bucketed by the key (``DataFrameWriter.bucketBy``): then the merge
+  plan has zero Exchange. No windows over the base, no global sort.
 * ``scd2_history`` windows partition by the dimension key — per-key
   state is the key's change count, never the table; no global sort.
 """

@@ -102,40 +102,6 @@ def negate_partials(
     )
 
 
-def distinct_partials(
-    df: DataFrame, group_cols: list[str], col: str
-) -> DataFrame:
-    """Per-group HyperLogLog sketch of ``col`` — the mergeable partial
-    state for incremental COUNT(DISTINCT). Unlike counts, distincts
-    don't add across slices; the sketch registers do union losslessly,
-    so slice-wise sketches fold to EXACTLY the sketch of the union
-    (same registers -> same estimate, differentially tested)."""
-    return df.groupBy(*group_cols).agg(
-        F.hll_sketch_agg(col).alias("__sketch")
-    )
-
-
-def merge_distinct_partials(
-    partials: Sequence[DataFrame], group_cols: list[str]
-) -> DataFrame:
-    """Union slice sketches and estimate: (group, n_distinct_approx).
-    The merge is a groupBy over groups x slices — metadata-scale, the
-    history is never rescanned."""
-    if not partials:
-        raise ValueError("no partial frames to merge")
-    unioned = partials[0]
-    for p in partials[1:]:
-        unioned = unioned.unionByName(p)
-    return (
-        unioned.groupBy(*group_cols)
-        .agg(F.hll_union_agg("__sketch").alias("__merged"))
-        .select(
-            *group_cols,
-            F.hll_sketch_estimate("__merged").alias("n_distinct_approx"),
-        )
-    )
-
-
 def join_delta(
     base_left: DataFrame,
     delta_left: DataFrame,

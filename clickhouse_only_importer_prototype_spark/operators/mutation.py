@@ -60,20 +60,23 @@ def _tagged_scan(df: DataFrame) -> DataFrame:
     )
 
 
-def _rank_with_offsets(tagged: DataFrame, offsets: list[tuple]) -> DataFrame:
+def _rank_with_offsets(
+    tagged: DataFrame, offsets: list[tuple], file_schema: str
+) -> DataFrame:
     """Rank pass over a ``_tagged_scan`` frame with driver-computed
-    (file, pid, offset, expected-count, first-mid) rows: a row's id is
-    its file segment's offset plus its distance from the segment's
-    first ``__mid``. Map-side — no window, exchange or sort; the drift
-    guard raises mid-plan on any packing change (see
+    (file, pid, offset, expected-count, first-mid, *file values) rows:
+    a row's id is its file segment's offset plus its distance from the
+    segment's first ``__mid``; it also gains its file's
+    ``file_schema`` columns. Map-side — no window, exchange or sort;
+    the drift guard raises mid-plan on any packing change (see
     with_sequential_ids_multi)."""
-    spark = tagged.sparkSession
-    offsets_df = arrow_local_df(
-        spark,
-        offsets,
+    schema = (
         f"{_FILE} string, __pid int, __offset long, __expect long,"
-        " __min_mid long",
+        " __min_mid long"
     )
+    if file_schema:
+        schema += ", " + file_schema
+    offsets_df = arrow_local_df(tagged.sparkSession, offsets, schema)
     pos = F.col("__mid") - F.col("__min_mid")
     # left join so a partition the counts pass never saw surfaces as a
     # null expectation (raise) instead of vanishing through an inner join
@@ -109,7 +112,8 @@ def _rank_with_offsets(tagged: DataFrame, offsets: list[tuple]) -> DataFrame:
 def with_sequential_ids_multi(
     frames: list[DataFrame],
     start: int = 0,
-    file_order: dict[str, int] | None = None,
+    files: dict[str, tuple] | None = None,
+    file_schema: str = "",
 ) -> tuple[list[DataFrame], dict[str, int]]:
     """Gapless ids ACROSS several scan frames in one global
     (file, partition) order — the grouped D3 shape. Returns the ranked
@@ -124,19 +128,21 @@ def with_sequential_ids_multi(
     TOGETHER in one global file order, and each frame ranks with
     its broadcast offsets — byte-identical ids to the sequential
     per-file loop, with every heavy pass running as a distributed
-    scan. Output frames KEEP the ``__file`` tag so the caller can join
-    per-file attributes (study/profile) before projecting.
+    scan. Output frames KEEP the ``__file`` tag.
 
-    ``file_order`` maps each scan file URI (``input_file_name()``
-    form) to its rank in the caller's processing order. The sequential
-    loop iterates files in DISCOVERY order over raw paths; the scan
-    tag is a percent-ENCODED URI, so sorting the URIs lexicographically
-    can permute files whose raw paths contain characters that encode
-    (``'a b' -> 'a%20b'``) — the caller must pass the discovery order
-    explicitly for the byte-identical-ids contract to survive exotic
-    filenames. ``None`` falls back to lexicographic URI order (only
-    correct when every path is encoding-invariant); a scanned URI
-    absent from the map raises rather than silently mis-ordering.
+    ``files`` maps each scan file URI (``input_file_name()`` form), in
+    the caller's processing order, to its values of ``file_schema``'s
+    columns (a DDL string): ids follow that order, and each row gains
+    its file's values from the offsets broadcast, with no second join.
+    The sequential loop iterates files in DISCOVERY order over raw
+    paths; the scan tag is a percent-ENCODED URI, so sorting the URIs
+    lexicographically can permute files whose raw paths contain
+    characters that encode (``'a b' -> 'a%20b'``) — the caller must
+    pass the discovery order explicitly for the byte-identical-ids
+    contract to survive exotic filenames. ``None`` falls back to
+    lexicographic URI order (only correct when every path is
+    encoding-invariant); a scanned URI absent from the map raises
+    rather than silently mis-ordering or going unattributed.
 
     Ranking is map-side and partition-parallel: ``__mid``
     (monotonically_increasing_id) encodes ``partition_id << 33 +
@@ -173,20 +179,20 @@ def with_sequential_ids_multi(
             .collect()
         ):
             all_counts.append((row[_FILE], row["__pid"], row["n"], row["m"], i))
-    if file_order is not None:
-        missing = sorted(
-            {c[0] for c in all_counts if c[0] not in file_order}
-        )
+    if files is not None:
+        missing = sorted({c[0] for c in all_counts if c[0] not in files})
         if missing:
             raise ValueError(
                 "with_sequential_ids_multi: scan file(s) missing from "
-                f"file_order map: {missing[:5]}"
+                f"the files map: {missing[:5]}"
             )
+        order = {f: i for i, f in enumerate(files)}
 
         def key(x):
-            return (file_order[x[0]], x[1])
+            return (order[x[0]], x[1])
 
     else:
+        files = {}
 
         def key(x):
             return (x[0], x[1])
@@ -195,11 +201,13 @@ def with_sequential_ids_multi(
     file_rows: dict[str, int] = {}
     acc = start
     for fpath, pid, cnt, min_mid, i in sorted(all_counts, key=key):
-        per_frame[i].append((fpath, pid, acc, cnt, min_mid))
+        per_frame[i].append(
+            (fpath, pid, acc, cnt, min_mid, *files.get(fpath, ()))
+        )
         file_rows[fpath] = file_rows.get(fpath, 0) + cnt
         acc += cnt
     return [
-        _rank_with_offsets(t, per_frame[i])
+        _rank_with_offsets(t, per_frame[i], file_schema)
         for i, t in enumerate(taggeds)
     ], file_rows
 
@@ -242,7 +250,7 @@ def mutation(
     SAMPLE_ID = ``<study>_<Tumor_Sample_Barcode>`` (:377-380);
     GENETIC_PROFILE_ID is the profile literal; ANNOTATION_JSON "".
     ``study``/``profile`` may be Columns (convert_mutations' grouped
-    write derives them per file from a broadcast manifest); string
+    write carries them per file on the id offsets broadcast); string
     arguments fold to literals exactly as before. ``keep`` appends
     pass-through columns (see mutation_event).
     """

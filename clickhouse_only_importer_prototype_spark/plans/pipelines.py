@@ -561,16 +561,16 @@ def _write_mutations_grouped(
     signature (Spark's multi-path csv scan applies the first file's
     header to every file, so only same-header files may share a scan);
     ids are corpus-wide and sequential in DISCOVERY order
-    (with_sequential_ids_multi + URI->rank map); per-file
-    study/profile/output base join from a broadcast manifest keyed by
-    the scan's file URI. A scan file missing from the manifest raises
-    mid-plan (fail loud, never silently unattributed). Files with zero
-    data rows get schema-only outputs, as a per-file write of an empty
-    frame would. Before each table is promoted, its staged per-file row
-    counts (parquet footers, read on the driver) must equal the id
-    assigner's counts pass, so a file that changed between the two
-    passes raises instead of leaving an id gap. Returns the next free
-    id, from that counts pass (no extra job; zero rows leave
+    (with_sequential_ids_multi over a URI map in that order); each
+    file's study/profile/output base ride on the same broadcast as its
+    id offsets, keyed by the scan's file URI. A scan file missing from
+    that map raises (fail loud, never silently unattributed). Files
+    with zero data rows get schema-only outputs, as a per-file write of
+    an empty frame would. Before each table is promoted, its staged
+    per-file row counts (parquet footers, read on the driver) must
+    equal the id assigner's counts pass, so a file that changed between
+    the two passes raises instead of leaving an id gap. Returns the
+    next free id, from that counts pass (no extra job; zero rows leave
     ``start_event_id`` unchanged). All-or-nothing: convert_mutations
     owns per-file isolation."""
     from pyspark.sql import functions as F
@@ -581,57 +581,35 @@ def _write_mutations_grouped(
     frames = [
         read_maf(spark, [it.path for it in g]) for g in groups.values()
     ]
+    bases = [output_base(it.path, "") for it in inputs]
     # global id order = DISCOVERY order (what a per-file loop
-    # iterates), carried by a URI->rank map: sorting the scan's
+    # iterates), carried by the URI map's order: sorting the scan's
     # percent-encoded URIs lexicographically could permute exotic
     # filenames ('a b' -> 'a%20b') relative to the raw paths
-    file_order = {
-        _spark_file_uri(it.path): i for i, it in enumerate(inputs)
-    }
     ranked, file_rows = mut_ops.with_sequential_ids_multi(
-        frames, start=start_event_id, file_order=file_order
-    )
-    mf = arrow_local_df(
-        spark,
-        [
-            (
-                _spark_file_uri(it.path),
+        frames,
+        start=start_event_id,
+        files={
+            _spark_file_uri(it.path): (
                 it.cancer_study_id,
                 it.genetic_profile_id,
-                output_base(it.path, ""),
+                base,
             )
-            for it in inputs
-        ],
-        "__file string, __study string, __profile string, __base string",
+            for it, base in zip(inputs, bases)
+        },
+        file_schema="__study string, __profile string, __base string",
     )
-    missing = F.raise_error(
-        F.concat_ws(
-            " ",
-            F.lit("grouped mutations write: scan file missing from manifest:"),
-            F.col("__file"),
-        )
-    ).cast("string")
-    joined_frames = [
-        r.join(F.broadcast(mf), "__file", "left").withColumn(
-            "__study",
-            F.when(F.col("__study").isNull(), missing).otherwise(
-                F.col("__study")
-            ),
-        )
-        for r in ranked
-    ]
     ev_all = _balanced_union(
-        [mut_ops.mutation_event(j, keep=("__base",)) for j in joined_frames]
+        [mut_ops.mutation_event(r, keep=("__base",)) for r in ranked]
     )
     mut_all = _balanced_union(
         [
             mut_ops.mutation(
-                j, F.col("__study"), F.col("__profile"), keep=("__base",)
+                r, F.col("__study"), F.col("__profile"), keep=("__base",)
             )
-            for j in joined_frames
+            for r in ranked
         ]
     )
-    bases = [output_base(it.path, "") for it in inputs]
     expected = {
         base: file_rows.get(_spark_file_uri(it.path), 0)
         for base, it in zip(bases, inputs)

@@ -3551,10 +3551,10 @@ def multimodal_av_demux(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_quarantine_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dead-letter accounting for undecodable media — the query every
     100 TB ingest runs next to its decode pass: how much of each
-    source failed the codec, without ever aborting the job (the batch
-    twin of the TSV `_corrupt_record` quarantine, applied to binary
-    payloads). Every 10th doc's AVI payload is deterministically
-    truncated to 20 bytes (a torn upload); `avi_video_stats(on_opaque=
+    source failed the codec, without ever aborting the job (a
+    dead-letter quarantine for binary payloads). Every 10th doc's AVI
+    payload is deterministically truncated to 20 bytes (a torn
+    upload); `avi_video_stats(on_opaque=
     'skip')` quarantines them, and the audit LEFT-anti-accounts the
     skipped media back to their source via one broadcast-sized
     aggregate per source — decoded + quarantined counts and an exact

@@ -1,25 +1,15 @@
-"""ClickHouse JDBC sink (S9 — the BASELINE.json north star).
+"""ClickHouse DDL: the Spark-to-ClickHouse type map and the CREATE
+TABLE statements for the catalog tables (S9).
 
-The reference writes ClickHouse-shaped parquet for out-of-band loading;
-the Spark-native path writes straight to ClickHouse over JDBC. The JDBC
-driver jar isn't baked into this container, so the writer validates its
-availability and raises a clear error otherwise — the option plumbing
-(batchsize, per-partition inserts, retries off) is real and tested via
-``jdbc_writer_options``.
-
-Scale notes: each Spark task opens one connection and inserts its
-partition with ``batchsize`` rows per round-trip; ``repartition(n)``
-bounds concurrent connections. ClickHouse prefers few large inserts —
-default batchsize 100_000. Use ``spark.clickhouse.*`` official
-connector when available; JDBC is the lowest-common-denominator path.
+The reference writes ClickHouse-shaped parquet for out-of-band loading.
+This port loads that parquet through one path, the HTTP sink
+(``sinks/clickhouse_http.py`` via ``load-clickhouse``); this module
+emits the DDL it runs first and the ``ddl`` CLI mode prints.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, types as T
-
-DEFAULT_BATCH_SIZE = 100_000
-CLICKHOUSE_DRIVER = "com.clickhouse.jdbc.ClickHouseDriver"
+from pyspark.sql import types as T
 
 _SIMPLE_TYPES: dict[type, str] = {
     T.StringType: "String",
@@ -38,8 +28,8 @@ _SIMPLE_TYPES: dict[type, str] = {
 def clickhouse_type(
     dt: T.DataType, nullable: bool = False, low_cardinality: bool = False
 ) -> str:
-    """Map a Spark SQL type to the ClickHouse column type the JDBC
-    writer's inserts expect on the server side.
+    """Map a Spark SQL type to the ClickHouse column type the HTTP
+    sink's inserts expect on the server side.
 
     Composition rules mirror ClickHouse's: ``Nullable`` wraps only
     scalar leaves (Array/Map/Tuple cannot be Nullable — their inner
@@ -132,80 +122,6 @@ def clickhouse_ddl(
     return "\n".join(parts)
 
 
-def jdbc_writer_options(
-    url: str,
-    table: str,
-    batch_size: int = DEFAULT_BATCH_SIZE,
-    user: str | None = None,
-    password: str | None = None,
-    max_connections: int = 8,
-) -> dict[str, str]:
-    """Build the JDBC option map for a ClickHouse bulk insert."""
-    opts = {
-        "url": url,
-        "dbtable": table,
-        "driver": CLICKHOUSE_DRIVER,
-        "batchsize": str(batch_size),
-        "isolationLevel": "NONE",  # ClickHouse has no transactions
-        "numPartitions": str(max_connections),
-    }
-    if user is not None:
-        opts["user"] = user
-    if password is not None:
-        opts["password"] = password
-    return opts
-
-
-def _write_jdbc(
-    df: DataFrame, opts: dict[str, str], mode: str, max_connections: int
-) -> None:
-    """Execute the JDBC bulk insert: bound connection fan-out with an
-    explicit repartition (each task = one connection inserting its
-    partition in ``batchsize`` chunks), then save.
-
-    Driver-agnostic on purpose: ``write_clickhouse`` routes here after
-    validating the ClickHouse driver, and the test suite drives the
-    identical path against Spark's bundled embedded Derby — so the
-    repartition+options+save machinery executes for real in CI even
-    though no ClickHouse server exists in the container.
-    """
-    (
-        df.repartition(max_connections)
-        .write.format("jdbc")
-        .options(**opts)
-        .mode(mode)
-        .save()
-    )
-
-
-def write_clickhouse(
-    df: DataFrame,
-    url: str,
-    table: str,
-    mode: str = "append",
-    batch_size: int = DEFAULT_BATCH_SIZE,
-    max_connections: int = 8,
-    **credentials: str,
-) -> None:
-    """Bulk-insert ``df`` into ClickHouse via JDBC.
-
-    Raises RuntimeError if the ClickHouse JDBC driver is not on the
-    Spark classpath (it is not shipped in this container).
-    """
-    spark = df.sparkSession
-    try:
-        spark._jvm.java.lang.Class.forName(CLICKHOUSE_DRIVER)  # noqa: SLF001
-    except Exception as exc:
-        raise RuntimeError(
-            "ClickHouse JDBC driver not on classpath; add "
-            "com.clickhouse:clickhouse-jdbc via spark.jars.packages"
-        ) from exc
-    opts = jdbc_writer_options(
-        url, table, batch_size, max_connections=max_connections, **credentials
-    )
-    _write_jdbc(df, opts, mode, max_connections)
-
-
 # per-catalog-table physical layout: sort key (MergeTree ORDER BY) and
 # dictionary-encoded columns. Keys mirror how cgds.sql-shaped consumers
 # query these tables: alterations by (study, profile, gene), samples by
@@ -236,7 +152,7 @@ _CATALOG_LAYOUT: dict[str, tuple[list[str], set[str]]] = {
 
 def catalog_ddl() -> dict[str, str]:
     """CREATE TABLE statements for every catalog table (schemas.py
-    ALL_TABLES) — what a ClickHouse instance needs before the JDBC sink
+    ALL_TABLES) — what a ClickHouse instance needs before the HTTP sink
     (or an out-of-band parquet load) can ingest the engine's outputs.
     Columns the layout table doesn't know (absent from a schema
     variant) are ignored per-table."""

@@ -1,13 +1,10 @@
-"""ClickHouse HTTP-interface sink — the jar-free half of S9.
+"""ClickHouse HTTP-interface sink — the one ClickHouse load path (S9).
 
-ClickHouse exposes two first-class bulk-ingest paths: the native/JDBC
-protocol (``sinks/clickhouse.py`` — gated on a driver jar this
-container has never had) and the HTTP interface (public docs:
-``POST /?query=INSERT INTO t FORMAT ...`` with the rows as the request
-body), which every language client without a native driver uses. The
-HTTP path needs only the Python stdlib, so unlike the JDBC writer the
-DISTRIBUTED mechanics here are exercised end-to-end by test against a
-local capturing HTTP server: every executor task serializes its
+ClickHouse's HTTP interface (public docs: ``POST /?query=INSERT INTO t
+FORMAT ...`` with the rows as the request body) is what every language
+client without a native driver uses. It needs only the Python stdlib,
+so the DISTRIBUTED mechanics here are exercised end-to-end by test
+against a local capturing HTTP server: every executor task serializes its
 partition in Arrow-batched chunks (``mapInPandas``, never
 row-at-a-time) and POSTs ~``batch_rows``-row bodies — ClickHouse's
 preferred few-large-inserts shape.
@@ -47,7 +44,7 @@ Semantics and scale posture:
     target (e.g. ReplacingMergeTree keyed on the row identity) —
     documented here, not hidden.
   * **Connection fan-out** = one in-flight request per running task;
-    bound it with ``df.repartition(n)`` exactly like the JDBC writer.
+    bound it with ``df.repartition(n)``.
   * **NULLs** travel as JSON ``null``; empty string stays ``""``,
     preserving the engine's no-NULL '' contract for the catalog
     tables.

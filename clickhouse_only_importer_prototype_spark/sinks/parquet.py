@@ -24,33 +24,3 @@ def write_parquet(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.mode(mode).parquet(path)
-
-
-def write_range_sorted(
-    df: DataFrame,
-    path: str,
-    sort_cols: list[str],
-    n_files: int = 32,
-    mode: str = "overwrite",
-) -> None:
-    """Globally range-sorted parquet export: rows range-partitioned on
-    ``sort_cols`` (sampled boundaries), sorted within each partition,
-    one file per partition — so file-level min/max zone maps on the
-    sort key are NON-OVERLAPPING and a point/range predicate prunes to
-    O(1) files (the layout operators/layout.skipping_audit measures;
-    this sink is how a pipeline actually BUYS those numbers).
-
-    repartitionByRange SAMPLES boundaries, so file SIZES (not
-    contents' order) vary slightly run-to-run; the global ordering
-    guarantee itself is exact. At 100 TB this is the standard
-    one-shuffle sorted-table materialization: no global sort on one
-    node — each range partition sorts independently.
-    """
-    if not sort_cols:
-        raise ValueError("sort_cols must be non-empty")
-    (
-        df.repartitionByRange(n_files, *sort_cols)
-        .sortWithinPartitions(*sort_cols)
-        .write.mode(mode)
-        .parquet(path)
-    )

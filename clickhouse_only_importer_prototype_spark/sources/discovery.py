@@ -24,7 +24,7 @@ from __future__ import annotations
 import logging
 import os
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 logger = logging.getLogger(__name__)
 
@@ -47,7 +47,6 @@ class CNAFileInput:
     path: str
     cancer_study_id: str
     genetic_profile_id: str
-    columns: tuple[str, ...] = field(default=())
 
 
 @dataclass(frozen=True)
@@ -57,7 +56,6 @@ class MutationFileInput:
     path: str
     cancer_study_id: str
     genetic_profile_id: str
-    columns: tuple[str, ...] = field(default=())
 
 
 def parse_meta_file(meta_path: str) -> tuple[str, str, str]:

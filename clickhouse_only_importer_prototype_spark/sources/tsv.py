@@ -4,9 +4,13 @@ Spark-first restatement of the reference's Arrow CSV scans:
   * CNA (cna/reader.go:15-55): tab-separated, header row, every column
     string. Spark's csv reader with header=True and no inferSchema is
     semantically identical to the reference's header-only schema
-    inference — and distributes the scan.
+    inference — and distributes the scan. ``convert_cna`` reads every
+    file with one text scan (plans/pipelines.py); ``read_cna_matrix``
+    is only its fallback route, for files the text scan would misread
+    (a quote char, a missing, repeated or blank-first-line header).
   * MAF (mutation/reader.go:15-69): same plus leading ``#`` comment
     lines skipped before the header — ``option("comment", "#")``.
+    ``convert_mutations`` reads each header group with ``read_maf``.
 
 The reference chunks 100 rows/batch through Go channels
 (cna/transformer.go:316); Spark's columnar batching supersedes that —
@@ -121,52 +125,3 @@ def read_maf(spark: SparkSession, path: str | list[str]) -> DataFrame:
     if schema is not None:
         return reader.schema(schema).csv(paths)
     return reader.csv(paths)
-
-
-def read_tsv_with_quarantine(
-    spark: SparkSession, path: str, comment: str | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """Row-level dead-letter TSV read: returns ``(good, quarantined)``.
-
-    The reference's Arrow CSV reader aborts the whole file on one
-    malformed line (field-count mismatch kills the batch iterator —
-    cna/reader.go:47-53 has no row-level recovery), and the CLI's
-    error isolation (D4) is per-FILE. This upgrades recovery to
-    per-ROW, the shape a 100 TB ingest actually needs: one truncated
-    line in a 10 GB shard must not discard the shard.
-
-    Mechanics: the header is read once (driver, first line only) to
-    pin the all-string schema, plus a ``_corrupt_record`` column;
-    PERMISSIVE mode routes rows whose field count mismatches into it.
-    Both returned frames come from ONE scan plan (cached parse, no
-    second read at the source); the quarantine frame carries the raw
-    line for replay/debug — the standard dead-letter contract.
-    """
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    opts = dict(TSV_READ_OPTIONS)
-    if comment:
-        opts["comment"] = comment
-    # header-only schema pass (reference parity: names from line 1,
-    # every column string — cna/reader.go:15-33)
-    header_df = spark.read.options(**opts).csv(path)
-    fields = [StructField(c, StringType(), True) for c in header_df.columns]
-    schema = StructType(
-        fields + [StructField("_corrupt_record", StringType(), True)]
-    )
-    parsed = (
-        spark.read.options(**opts)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .schema(schema)
-        .csv(path)
-        .cache()
-    )
-    good = parsed.where(F.col("_corrupt_record").isNull()).drop(
-        "_corrupt_record"
-    )
-    bad = parsed.where(F.col("_corrupt_record").isNotNull()).select(
-        F.col("_corrupt_record").alias("raw_line")
-    )
-    return good, bad

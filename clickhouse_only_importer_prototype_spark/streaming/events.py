@@ -248,29 +248,6 @@ def sessionize_stateful(events: DataFrame, gap_ns: int = 1_800_000_000_000) -> D
     )
 
 
-def run_batch_backfill(
-    spark: SparkSession, path: str, out_path: str, window: str = "1 hour"
-) -> None:
-    """availableNow backfill: process all historical files incrementally
-    then stop — the streaming query as a bounded job.
-
-    Append-mode semantics: windows not yet closed by the final
-    watermark (the trailing ~window+watermark span of event time) stay
-    in checkpoint state and are emitted only when later data advances
-    the watermark — by design for an incremental backfill that will be
-    resumed; run the batch twin (queries.events_hourly) if you need
-    every window of a closed dataset."""
-    stream = read_events_stream(spark, path)
-    agg = tumbling_counts(stream, window)
-    (
-        agg.writeStream.outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{out_path}/_checkpoint")
-        .start(out_path)
-        .awaitTermination()
-    )
-
-
 def tumbling_ohlc(
     df: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
 ) -> DataFrame:

@@ -32,11 +32,6 @@ def test_exact_duplicates_groups(spark, dup_docs):
     assert sum(groups.values()) == 6
 
 
-def test_exact_dedup_keeps_min_id(spark, dup_docs):
-    kept = sorted(r.doc_id for r in dedup.exact_dedup(dup_docs).collect())
-    assert kept == [0, 3, 4, 5]
-
-
 def test_ngram_jaccard_finds_near_dup(spark, dup_docs):
     pairs = dedup.ngram_jaccard_pairs(dup_docs, n=3, threshold=0.5).collect()
     by_pair = {(r.doc_a, r.doc_b): r.jaccard_per_1000 for r in pairs}
@@ -408,7 +403,7 @@ def test_collapse_gate_paths_identical_on_dup_corpus(spark, dup_docs):
 def test_collapse_gate_skips_on_dup_free_corpus(spark, dup_docs):
     """On a dup-free corpus the probe must pick the uncollapsed path
     and produce the same pairs as the forced collapsed one."""
-    uniq = dedup.exact_dedup(dup_docs)  # 4 distinct texts
+    uniq = dup_docs.where("doc_id not in (1, 2)")  # 4 distinct texts
     assert not dedup._has_exact_dups(uniq)
     auto = _pairset(dedup.ngram_jaccard_pairs(uniq, threshold=0.5))
     forced = _pairset(

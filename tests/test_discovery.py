@@ -116,43 +116,3 @@ def test_unreadable_meta_warns_and_continues(tmp_path):
     (s / "data_cna.txt").write_text("Hugo_Symbol\tEntrez_Gene_Id\tA\nG\t1\t0\n")
     (found,) = discover_cna_files(str(tmp_path))  # must not raise
     assert found.cancer_study_id == ""
-
-
-def test_tsv_quarantine_isolates_bad_rows(spark, tmp_path):
-    """One malformed line lands in the dead-letter frame; every good
-    row survives (the reference's Arrow reader aborts the whole file)."""
-    from clickhouse_only_importer_prototype_spark.sources.tsv import (
-        read_tsv_with_quarantine,
-    )
-
-    p = tmp_path / "data_cna.txt"
-    p.write_text(
-        "Hugo_Symbol\tEntrez_Gene_Id\tS1\tS2\n"
-        "TP53\t7157\t0\t1\n"
-        "BRCA1\t672\t-1\n"  # short row: quarantined
-        "EGFR\t1956\t2\t0\tEXTRA\tMORE\n"  # long row: quarantined
-        "KRAS\t3845\t1\t1\n"
-    )
-    good, bad = read_tsv_with_quarantine(spark, str(p))
-    genes = sorted(r.Hugo_Symbol for r in good.collect())
-    assert genes == ["KRAS", "TP53"]
-    raw = sorted(r.raw_line for r in bad.collect())
-    assert len(raw) == 2
-    assert any("BRCA1" in x for x in raw)
-    assert any("EGFR" in x for x in raw)
-
-
-def test_tsv_quarantine_clean_file_empty_deadletter(spark, tmp_path):
-    from clickhouse_only_importer_prototype_spark.sources.tsv import (
-        read_tsv_with_quarantine,
-    )
-
-    p = tmp_path / "data_mutations.txt"
-    p.write_text(
-        "#version 2.4\n"
-        "Hugo_Symbol\tChromosome\n"
-        "TP53\t17\n"
-    )
-    good, bad = read_tsv_with_quarantine(spark, str(p), comment="#")
-    assert good.count() == 1
-    assert bad.count() == 0

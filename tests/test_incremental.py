@@ -67,33 +67,6 @@ def test_merge_requires_input(spark):
         inc.merge_partials([], ["g"], _specs())
 
 
-def test_distinct_sketch_merge_equals_direct_sketch(spark):
-    # HLL registers union losslessly: slice-wise sketches folded must
-    # give the SAME estimate as sketching the whole frame — and track
-    # the exact distinct closely at this cardinality
-    df = spark.range(0, 20000).select(
-        (F.col("id") % 4).alias("g"), (F.col("id") % 900).alias("v")
-    )
-    slices = [df.where(F.col("id") % 3 == i) for i in range(3)]
-    merged = inc.merge_distinct_partials(
-        [inc.distinct_partials(s, ["g"], "v") for s in slices], ["g"]
-    )
-    direct = inc.merge_distinct_partials(
-        [inc.distinct_partials(df, ["g"], "v")], ["g"]
-    )
-    m = {r.g: r.n_distinct_approx for r in merged.collect()}
-    d = {r.g: r.n_distinct_approx for r in direct.collect()}
-    assert m == d
-    exact = {
-        r.g: r.n
-        for r in df.groupBy("g")
-        .agg(F.count_distinct("v").alias("n"))
-        .collect()
-    }
-    for g in exact:
-        assert abs(m[g] - exact[g]) <= 0.05 * exact[g]
-
-
 def test_merge_is_one_reaggregation_no_join(spark):
     df = spark.range(0, 100).select(
         (F.col("id") % 3).alias("g"), F.col("id").cast("double").alias("v")

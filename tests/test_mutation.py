@@ -21,7 +21,7 @@ def test_maf_comment_skip(spark, study_tree):
     assert "Hugo_Symbol" in df.columns
 
 
-def test_event_ids_dense_across_files(spark, study_tree, tmp_path):
+def test_event_ids_dense_across_files(spark, study_tree, tmp_path, monkeypatch):
     out = str(tmp_path / "parquet")
     summary = pipelines.convert_mutations(spark, study_tree, out)
     assert summary.ok
@@ -34,6 +34,19 @@ def test_event_ids_dense_across_files(spark, study_tree, tmp_path):
     # dense, gapless, continuing across files in sorted-path order
     assert ids_a == [0, 1, 2]
     assert ids_b == [3, 4]
+    # one input whose scan also reads a file outside the inputs: the id
+    # assigner refuses it before any write, so no row goes unattributed
+    first, *rest = pipelines.discover_mutation_files(study_tree)
+    real_read = pipelines.read_maf
+    monkeypatch.setattr(
+        pipelines,
+        "read_maf",
+        lambda spark_, paths: real_read(spark_, paths + [it.path for it in rest]),
+    )
+    one = tmp_path / "one"
+    with pytest.raises(ValueError, match="missing from the files map"):
+        pipelines._write_mutations_grouped(spark, [first], str(one), 0)
+    assert not one.exists()
 
 
 def test_event_id_row_order_within_file(spark, study_tree):

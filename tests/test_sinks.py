@@ -1,64 +1,12 @@
-"""Sinks: JDBC (S9) option plumbing + write path executed for real
-against Spark's bundled embedded Derby (no ClickHouse in container),
-and bucketed tables joining shuffle-free."""
+"""Sinks: partitioned and sharded parquet layouts, the ClickHouse DDL
+(S9), and the HTTP sink driven end-to-end against a local capture
+server (no ClickHouse in container)."""
 
 from __future__ import annotations
 
 import pytest
 
-from clickhouse_only_importer_prototype_spark.sinks import (
-    bucketed,
-    clickhouse as ch,
-)
-
-
-def test_jdbc_writer_options():
-    opts = ch.jdbc_writer_options(
-        "jdbc:clickhouse://host:8123/db",
-        "events",
-        batch_size=50_000,
-        user="u",
-        password="p",
-        max_connections=4,
-    )
-    assert opts["dbtable"] == "events"
-    assert opts["driver"] == ch.CLICKHOUSE_DRIVER
-    assert opts["batchsize"] == "50000"
-    assert opts["isolationLevel"] == "NONE"
-    assert opts["numPartitions"] == "4"
-    assert opts["user"] == "u" and opts["password"] == "p"
-    assert "user" not in ch.jdbc_writer_options("jdbc:x", "t")
-
-
-def test_write_clickhouse_missing_driver_raises(spark):
-    df = spark.range(3)
-    with pytest.raises(RuntimeError, match="ClickHouse JDBC driver"):
-        ch.write_clickhouse(df, "jdbc:clickhouse://nowhere:8123/db", "t")
-
-
-def test_write_jdbc_roundtrip_embedded_derby(spark, tmp_path):
-    """Drive the exact repartition+options+save path write_clickhouse
-    uses, against the Derby embedded driver shipped in Spark's jars;
-    read back over JDBC and compare."""
-    url = f"jdbc:derby:{tmp_path}/sinkdb;create=true"
-    driver = "org.apache.derby.iapi.jdbc.AutoloadedDriver"
-    df = spark.range(1000).selectExpr(
-        "id", "cast(id * 2 as double) as v", "concat('r', id) as name"
-    )
-    opts = ch.jdbc_writer_options(url, "smoke", batch_size=100, max_connections=3)
-    # swap only the driver class: everything else is the ClickHouse map
-    opts["driver"] = driver
-    ch._write_jdbc(df, opts, mode="overwrite", max_connections=3)
-
-    back = (
-        spark.read.format("jdbc")
-        .options(url=url, dbtable="smoke", driver=driver)
-        .load()
-    )
-    assert back.count() == 1000
-    got = {(r.id, r.v, r.name) for r in back.collect()}
-    exp = {(i, float(i * 2), f"r{i}") for i in range(1000)}
-    assert got == exp
+from clickhouse_only_importer_prototype_spark.sinks import clickhouse as ch
 
 
 def test_partitioned_write_prunes_partitions_on_read(spark, sf_dir, tmp_path):
@@ -83,79 +31,6 @@ def test_partitioned_write_prunes_partitions_on_read(spark, sf_dir, tmp_path):
     # values survive the layout round-trip
     expect = docs.where(F.col("lang") == "en").count()
     assert back.count() == expect and expect > 0
-
-
-def test_bucketed_tables_join_without_exchange(spark, sf_dir, tmp_path):
-    """Two tables bucketed on the join key sort-merge join with NO
-    shuffle on either side — the write-time shuffle is the whole point
-    of bucketing at 100 TB. Broadcast is disabled for the check so the
-    planner can't sidestep the question."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
-        "c_custkey", "c_name"
-    )
-    bucketed.write_bucketed(
-        orders, "b_orders", 8, ["o_custkey"], path=str(tmp_path / "b_orders")
-    )
-    bucketed.write_bucketed(
-        cust.withColumnRenamed("c_custkey", "o_custkey"),
-        "b_customer",
-        8,
-        ["o_custkey"],
-        path=str(tmp_path / "b_customer"),
-    )
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", None)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = bucketed.read_bucketed(spark, "b_orders").join(
-            bucketed.read_bucketed(spark, "b_customer"), "o_custkey"
-        )
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan
-        # and it still computes the right thing
-        plain = orders.join(
-            cust.withColumnRenamed("c_custkey", "o_custkey"), "o_custkey"
-        )
-        assert joined.count() == plain.count()
-    finally:
-        if old is not None:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_customer")
-
-
-def test_bucketed_equality_predicate_prunes_buckets(spark, sf_dir, tmp_path):
-    """An equality filter on the bucket key scans 1 of n buckets.
-    autoBucketedScan must be off for a scan-only plan: Spark's auto
-    mode disables the bucketed scan when no operator exploits the
-    distribution, which also forfeits pruning."""
-    import io
-    import contextlib
-    import re
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderkey", "o_custkey"
-    )
-    bucketed.write_bucketed(
-        orders, "bp_orders", 8, ["o_custkey"], path=str(tmp_path / "bp")
-    )
-    spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    try:
-        df = spark.table("bp_orders").where("o_custkey = 371")
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        m = re.search(r"SelectedBucketsCount: (\d+) out of (\d+)", buf.getvalue())
-        assert m and (m.group(1), m.group(2)) == ("1", "8")
-        plain = orders.where("o_custkey = 371").count()
-        assert df.count() == plain
-    finally:
-        spark.conf.set(
-            "spark.sql.sources.bucketing.autoBucketedScan.enabled", "true"
-        )
-        spark.sql("DROP TABLE IF EXISTS bp_orders")
 
 
 def test_clickhouse_type_mapping():
@@ -380,49 +255,6 @@ def test_training_shards_max_records_per_file(spark, tmp_path):
     assert len(files) >= 10
     with pytest.raises(ValueError):
         write_training_shards(df, out, n_shards=0)
-
-
-def test_range_sorted_export_nonoverlapping_zone_maps(spark, sf_dir, tmp_path):
-    """write_range_sorted: per-file min/max ranges on the sort key are
-    disjoint and ordered — the property that makes zone-map skipping
-    prune to O(1) files."""
-    import glob
-
-    from pyspark.sql import functions as F
-
-    from clickhouse_only_importer_prototype_spark.sinks.parquet import (
-        write_range_sorted,
-    )
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderkey", "o_totalprice"
-    )
-    out = str(tmp_path / "sorted")
-    write_range_sorted(orders, out, ["o_totalprice"], n_files=8)
-
-    files = glob.glob(f"{out}/*.parquet")
-    assert len(files) >= 2
-    ranges = []
-    for f in files:
-        r = (
-            spark.read.parquet(f)
-            .agg(
-                F.min("o_totalprice").alias("lo"),
-                F.max("o_totalprice").alias("hi"),
-                F.count("*").alias("n"),
-            )
-            .first()
-        )
-        if r["n"]:
-            ranges.append((r["lo"], r["hi"]))
-    ranges.sort()
-    for (lo1, hi1), (lo2, _hi2) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2  # disjoint, ordered zone maps
-    # nothing lost
-    back = spark.read.parquet(out)
-    assert back.count() == orders.count()
-    with pytest.raises(ValueError):
-        write_range_sorted(orders, out, [])
 
 
 def _capture_server():
@@ -931,10 +763,11 @@ def test_load_clickhouse_rejects_drifted_footer_schema(spark, tmp_path):
 def test_import_job_budget(spark, tmp_path, count_jobs):
     """Spark jobs per call on a 2-study tree. convert_cna's guard rides
     on its first staged write (no guard pass), convert_mutations ranks
-    its ids map-side (no window exchange per table), and load_clickhouse
-    reads each table with its declared schema (no inference job) and
-    posts it in one job (no aggregation). The previous design ran 9, 12
-    and 3 per loaded table."""
+    its ids map-side (no window exchange per table) and carries each
+    file's study, profile and output base on the id offsets broadcast
+    (no second broadcast job per table), and load_clickhouse reads each
+    table with its declared schema (no inference job) and posts it in
+    one job (no aggregation)."""
     from clickhouse_only_importer_prototype_spark.plans import pipelines
 
     root = tmp_path / "studies_j"
@@ -970,4 +803,4 @@ def test_import_job_budget(spark, tmp_path, count_jobs):
     finally:
         srv.shutdown()
     assert cna.ok and mut.ok and len(counts) == 5
-    assert (cna_jobs, mut_jobs, load_jobs) == (6, 10, 5)
+    assert (cna_jobs, mut_jobs, load_jobs) == (6, 8, 5)

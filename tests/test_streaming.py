@@ -24,38 +24,6 @@ def test_tumbling_counts_batch(spark, sf_dir):
     assert all(r.window_start.minute == 0 for r in rows)
 
 
-def test_streaming_backfill_matches_batch(spark, sf_dir, tmp_path):
-    # file stream source requires a directory: stage the single file
-    src_dir = tmp_path / "events_dir"
-    src_dir.mkdir()
-    os.symlink(f"{sf_dir}/events.parquet", src_dir / "events.parquet")
-    out = str(tmp_path / "stream_out")
-    ev.run_batch_backfill(spark, str(src_dir), out)
-    got = spark.read.parquet(out)
-    batch = ev.tumbling_counts(
-        ev.with_event_time(spark.read.parquet(f"{sf_dir}/events.parquet"))
-    )
-    got_rows = sorted(
-        (r.window_start, r.event_type, r.n_events) for r in got.collect()
-    )
-    batch_rows = sorted(
-        (r.window_start, r.event_type, r.n_events) for r in batch.collect()
-    )
-    # Append mode only emits windows closed by the watermark: the last
-    # in-watermark windows legitimately stay in (discarded) state.
-    assert set(got_rows) <= set(batch_rows)
-    missing = set(batch_rows) - set(got_rows)
-    assert missing, "expected trailing in-watermark windows to be withheld"
-    max_ws = max(ws for ws, _, _ in batch_rows)
-    import datetime
-
-    horizon = max_ws - datetime.timedelta(hours=3)  # window + watermark
-    assert all(ws >= horizon for ws, _, _ in missing)
-    # everything before the horizon emitted
-    emitted = {t for t in batch_rows if t[0] < horizon}
-    assert emitted <= set(got_rows)
-
-
 def test_sliding_user_activity(spark, sf_dir):
     df = ev.with_event_time(spark.read.parquet(f"{sf_dir}/events.parquet"))
     rows = ev.sliding_user_activity(df).collect()
